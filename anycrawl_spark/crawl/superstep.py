@@ -57,13 +57,13 @@ from anycrawl_spark.operators.gates import (
     with_dim_delays,
 )
 from anycrawl_spark.operators.seen import (
-    BROADCAST_SHARDS_MAX_BYTES, ShardBroadcast, filter_fresh,
-    merge_bloom_shards, with_dedup_key,
+    BROADCAST_SHARDS_MAX_BYTES, ShardBroadcast, merge_bloom_shards,
+    probe_seen, split_fresh, with_dedup_key,
 )
 from anycrawl_spark.operators.spans import fetch_extract
 from anycrawl_spark.functions.urls import canonicalize_url, url_host
-from anycrawl_spark.schemas import FRONTIER, JOBS, PROGRESS
-from anycrawl_spark.storage import SnapshotStore
+from anycrawl_spark.schemas import FRONTIER, JOBS, PROGRESS, WEBHOOK_EVENTS
+from anycrawl_spark.storage import SnapshotStore, driver_rows, files_for
 
 
 class CrawlEngine:
@@ -276,38 +276,40 @@ class CrawlEngine:
                 self.next_seq[jid] = 0
                 self.pending[jid] = 0
                 self.finalized.add(jid)
+        # driver-built tables are written at files_for(rows) files, not one
+        # per createDataFrame slice
         frontier = self.spark.createDataFrame(rows, FRONTIER)
         # url_hash is always assigned JVM-side for consistency
         frontier = frontier.withColumn("url_hash", F.xxhash64("url"))
-        self.store.write("frontier", frontier)
+        self.store.write("frontier", frontier.coalesce(files_for(len(rows))))
         seen = self.spark.createDataFrame(seen_rows, "job_id string, url string")
         seen = seen.select(
             "job_id", F.xxhash64("url").alias("url_hash"), F.lit(-1).alias("first_round")
         )
-        self.store.append("seen", seen, round_no=-1)
+        self.store.append("seen", seen.coalesce(files_for(len(seen_rows))), round_no=-1)
         seed_keyed = with_dedup_key(seen, self.num_buckets)
         seed_dirty = [
             r.bucket for r in seed_keyed.select("bucket").distinct().collect()
         ]
         self._commit_shard_delta(
-            merge_bloom_shards(None, seed_keyed, dirty_buckets=seed_dirty), -1
+            merge_bloom_shards(None, seed_keyed, dirty_buckets=seed_dirty), -1,
+            len(seed_dirty),
         )
         jobs_df = self.spark.createDataFrame(
             [tuple(j[f.name] for f in JOBS.fields) for j in self.jobs], JOBS
         )
-        self.store.write("jobs", jobs_df)
+        self.store.write("jobs", jobs_df.coalesce(files_for(len(self.jobs))))
         self.store.append(
             "webhook_events",
-            self.spark.createDataFrame(
-                [(j["job_id"], "crawl.started", -1) for j in self.jobs],
-                "job_id string, event string, round int",
+            driver_rows(
+                [(j["job_id"], "crawl.started", -1) for j in self.jobs], WEBHOOK_EVENTS
             ),
             round_no=-1,
         )
         # round -1 progress baseline so resume() recovers init-time state
         self.store.append(
             "progress",
-            self.spark.createDataFrame(
+            driver_rows(
                 [
                     (j["job_id"], -1, self.enqueued[j["job_id"]], 0, 0, 0,
                      j["job_id"] in self.finalized, self.next_seq[j["job_id"]])
@@ -335,7 +337,7 @@ class CrawlEngine:
 
     # ----------------------------------------------------- shard maintenance
 
-    def _commit_shard_delta(self, merged, rnd: int) -> None:
+    def _commit_shard_delta(self, merged, rnd: int, n_dirty: int) -> None:
         """Swap in the round's new shard state; persist ONLY dirty generations.
 
         ``merged`` is MERGED_SHARD_SCHEMA rows (full state + updated flag).
@@ -355,11 +357,12 @@ class CrawlEngine:
         # table fresh per round, which is the same leaf-plan property.
         new_state = merged.localCheckpoint(eager=True)
         delta = new_state.filter(F.col("updated"))
+        # the merge updates one generation per dirty bucket
         self.store.append(
             "bloom_shards",
             delta.select(
                 "bucket", "gen", "n_keys", "bloom", F.lit(rnd).alias("round")
-            ),
+            ).coalesce(files_for(n_dirty)),
             round_no=rnd,
         )
         # Patch the cached probe broadcast from the SAME dirty generations —
@@ -374,11 +377,12 @@ class CrawlEngine:
         if (rnd + 1) % self.shard_refresh_rounds == 0:
             # periodic full snapshot: bounds resume replay (resume = snapshot
             # + committed deltas after it), not needed for lineage anymore
+            # a few generations per bucket: far below one file's rows
             self.store.write(
                 "bloom_shards_state",
                 new_state.select(
                     "bucket", "gen", "n_keys", "bloom", F.lit(rnd).alias("round")
-                ),
+                ).coalesce(files_for(self.num_buckets)),
             )
         self._shards = new_state.select("bucket", "gen", "n_keys", "bloom")
 
@@ -677,7 +681,10 @@ class CrawlEngine:
             F.col("_rn") == 1
         ).drop("_rn")
 
-        fresh = filter_fresh(
+        # the probed candidates are cached: split_fresh reads them once per
+        # bloom verdict, and without the cache each branch would re-run the
+        # link expansion, the candidate gate and the probe
+        probed = probe_seen(
             cand, seen, self.num_buckets,
             shards=self._shards,
             # |seen| == total enqueued across jobs; tracked driver-side so the
@@ -686,7 +693,8 @@ class CrawlEngine:
             # cross-round cached broadcast (patched from dirty-gen deltas at
             # commit time); None past the broadcast cap => cogroup probe
             shards_bc=self._shard_bc.bc if self._shard_bc is not None else None,
-        )
+        ).persist()
+        fresh = split_fresh(probed, seen)
 
         if self.robots_dim is not None:
             # dim regime: admission-time robots decision as a co-partitioned
@@ -769,26 +777,45 @@ class CrawlEngine:
         fresh_summary = fresh.groupBy("job_id").agg(F.count("*").alias("c")).select(
             "job_id", F.lit("fresh").alias("k"), "c"
         )
+        # the shard merge's dirty buckets ride the same collect (<= num_buckets
+        # rows) instead of a second scan of the cached fresh set
+        fresh_keyed = with_dedup_key(
+            fresh.select("job_id", "url_hash"), self.num_buckets
+        )
+        dirty_summary = fresh_keyed.select(
+            F.lit(None).cast("string").alias("job_id"), F.lit("dirty").alias("k"),
+            F.col("bucket").cast("long").alias("c"),
+        ).distinct()
         # Overlap the independent per-round actions: metrics + terminal-log
         # appends run while the summary collect materializes the fresh chain
         # (fetched is already cached by the documents append above; each
-        # append targets a distinct table — see SnapshotStore locking).
+        # append targets a distinct table — see SnapshotStore locking). The
+        # round schedules at most sum(remaining) rows, which sizes their files.
+        fetched_files = files_for(sum(remaining.values()))
         with ThreadPoolExecutor(max_workers=3) as pool:
-            f_metrics = pool.submit(self.store.append, "metrics", metrics_df, rnd)
+            f_metrics = pool.submit(
+                self.store.append, "metrics", metrics_df.coalesce(fetched_files), rnd
+            )
             f_log = pool.submit(
                 self.store.append, "frontier_log",
-                terminal.select(*frontier_cols), rnd,
+                terminal.select(*frontier_cols).coalesce(fetched_files), rnd,
             )
-            summary_rows = fetch_summary.unionByName(fresh_summary).collect()
+            summary_rows = (
+                fetch_summary.unionByName(fresh_summary).unionByName(dirty_summary)
+                .collect()
+            )
             f_metrics.result()
             f_log.result()
         t_summary = _time.time()
 
         agg: dict = {}
         fresh_counts: dict = {}
+        dirty: list[int] = []
         for r_ in summary_rows:
             if r_.k == "fresh":
                 fresh_counts[r_.job_id] = r_.c
+            elif r_.k == "dirty":
+                dirty.append(r_.c)
             else:
                 agg[(r_.job_id, r_.k)] = r_.c
 
@@ -822,41 +849,49 @@ class CrawlEngine:
         # finalized jobs' leftover pending rows become 'skipped' in the log
         nf_cached = next_frontier
         leftovers = None
+        # pending counts of live vs finalized jobs size the frontier and
+        # leftover files (an upper bound for jobs finalized in earlier rounds,
+        # whose rows already left the frontier)
+        n_live = sum(n for j, n in self.pending.items() if j not in self.finalized)
         if self.finalized:
-            leftovers = next_frontier.filter(F.col("job_id").isin(list(self.finalized)))
+            n_left = sum(self.pending.get(j, 0) for j in self.finalized)
+            leftovers = next_frontier.filter(
+                F.col("job_id").isin(list(self.finalized))
+            ).coalesce(files_for(n_left))
             next_frontier = next_frontier.filter(
                 ~F.col("job_id").isin(list(self.finalized))
             )
 
         # final writes: independent tables in parallel (fresh/next_frontier
-        # are already materialized in caches by the summary collect). The
-        # shard merge (checkpoint + dirty-gen append) rides the same pool —
-        # it reads only the cached fresh set and the previous shard state,
-        # and SnapshotStore.append reserves slots under its lock.
-        fresh_keyed = with_dedup_key(
-            fresh.select("job_id", "url_hash"), self.num_buckets
-        )
-        dirty = [
-            r.bucket for r in fresh_keyed.select("bucket").distinct().collect()
-        ]
+        # read only cached data: fresh from the summary collect, the frontier
+        # from the flagged/fetched/fresh caches). The shard merge
+        # (checkpoint + dirty-gen append) rides the same pool — it reads only
+        # the cached fresh set and the previous shard state, and
+        # SnapshotStore.append reserves slots under its lock.
         with ThreadPoolExecutor(max_workers=4) as pool:
             f_shards = pool.submit(
                 self._commit_shard_delta,
                 merge_bloom_shards(self._shards, fresh_keyed, dirty_buckets=dirty),
                 rnd,
+                len(dirty),
             )
             futures = [
                 pool.submit(
                     self.store.append,
                     "seen",
-                    fresh.select("job_id", "url_hash", F.lit(rnd).alias("first_round")),
+                    fresh.select(
+                        "job_id", "url_hash", F.lit(rnd).alias("first_round")
+                    ).coalesce(files_for(sum(fresh_counts.values()))),
                     rnd,
                 ),
-                pool.submit(self.store.write, "frontier", next_frontier),
+                pool.submit(
+                    self.store.write, "frontier",
+                    next_frontier.coalesce(files_for(n_live)),
+                ),
                 pool.submit(
                     self.store.append,
                     "progress",
-                    self.spark.createDataFrame(progress_rows, PROGRESS),
+                    driver_rows(progress_rows, PROGRESS),
                     rnd,
                 ),
             ]
@@ -874,9 +909,7 @@ class CrawlEngine:
                     pool.submit(
                         self.store.append,
                         "webhook_events",
-                        self.spark.createDataFrame(
-                            event_rows, "job_id string, event string, round int"
-                        ),
+                        driver_rows(event_rows, WEBHOOK_EVENTS),
                         rnd,
                     )
                 )
@@ -906,6 +939,7 @@ class CrawlEngine:
         flagged.unpersist()
         fetched.unpersist()
         docs.unpersist()
+        probed.unpersist()
         fresh.unpersist()
         nf_cached.unpersist()
         return stats

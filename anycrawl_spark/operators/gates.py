@@ -464,6 +464,12 @@ def make_candidate_gate(
     broadcast-sized (per-host config).
 
     Returns a struct column fn: (job_id, url) -> struct<url, host, keep>.
+
+    The UDF is marked nondeterministic, Spark's guard against evaluating it
+    more than once per row: filtering on ``keep`` and projecting ``url`` /
+    ``host`` would otherwise push the filter below the projection and run
+    the whole gate twice (once per ArrowEvalPython stage). Its output IS a
+    pure function of its inputs; the flag only pins evaluation to one place.
     """
     from anycrawl_spark.crawl.params import robots_decision
     from anycrawl_spark.functions.robots import robots_allowed_rfc
@@ -538,7 +544,7 @@ def make_candidate_gate(
             urls.append(cu); hosts.append(h); keeps.append(bool(ok))
         return pd.DataFrame({"url": urls, "host": hosts, "keep": keeps})
 
-    return gate
+    return gate.asNondeterministic()
 
 
 def with_scope_keys(df: DataFrame) -> DataFrame:

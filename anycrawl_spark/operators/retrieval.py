@@ -174,13 +174,17 @@ def positional_postings(
     become rows, so a k-term phrase query explodes O(matching tokens),
     not O(corpus tokens). Positions are 1-based token offsets."""
     toks = tokens(F.lower(F.col(text_col)))
+    # the position sequence is never empty (sequence(1, 0) would count
+    # down), so a doc with no tokens zips to one (NULL, 1) entry: the
+    # predicate drops NULL terms (``isin`` already does)
     entries = F.filter(
         F.zip_with(
             toks,
             F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1))),
             lambda t, i: F.struct(t.alias("term"), i.alias("pos")),
         ),
-        (lambda e: e["term"].isin(terms)) if terms is not None else (lambda e: F.lit(True)),
+        (lambda e: e["term"].isin(terms)) if terms is not None
+        else (lambda e: e["term"].isNotNull()),
     )
     return docs.select(F.col(id_col), F.explode(entries).alias("e")).select(
         id_col, F.col("e.term").alias("term"), F.col("e.pos").alias("pos")

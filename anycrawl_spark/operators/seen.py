@@ -382,6 +382,48 @@ def _cogroup_probe(cand: DataFrame, shards: DataFrame) -> DataFrame:
     return cand.join(verdicts, "dedup_hash")
 
 
+def probe_seen(
+    candidates: DataFrame,
+    seen: DataFrame,
+    num_buckets: int = DEFAULT_BUCKETS,
+    strategy: str = "auto",
+    shards: DataFrame | None = None,
+    seen_count: int | None = None,
+    shards_bc=None,
+) -> DataFrame:
+    """Attach the dedup key (``dedup_hash``, ``bucket``) and the bloom
+    verdict ``maybe_seen`` to every candidate — the first half of
+    ``filter_fresh``. ``split_fresh`` reads the result twice (once per
+    verdict), so a caller that persists it evaluates the candidate chain and
+    the probe once instead of once per branch."""
+    cand = with_dedup_key(candidates, num_buckets)
+    if shards is None:
+        seen_keyed = with_dedup_key(seen.select("job_id", "url_hash"), num_buckets)
+        shards = build_bloom_shards(seen_keyed)
+    if strategy == "auto":
+        # callers that track the seen count (the crawl driver does) pass it in
+        # — firing a count() action over the full seen table per round is an
+        # O(|seen|) scan the incremental design exists to avoid
+        n_seen = seen_count if seen_count is not None else seen.count()
+        est_bytes = n_seen * BITS_PER_KEY // 8
+        strategy = "broadcast" if est_bytes <= BROADCAST_SHARDS_MAX_BYTES else "cogroup"
+    if strategy == "broadcast":
+        return _broadcast_probe(cand, shards, bc=shards_bc)
+    return _cogroup_probe(cand, shards)
+
+
+def split_fresh(probed: DataFrame, seen: DataFrame) -> DataFrame:
+    """``probe_seen`` output -> the candidate rows NOT in ``seen``:
+    bloom-negatives are fresh outright, bloom-positives go through the exact
+    anti-join. Drops the helper key columns."""
+    definitely_fresh = probed.filter(~F.col("maybe_seen"))
+    needs_exact = probed.filter(F.col("maybe_seen")).join(
+        seen.select("job_id", "url_hash"), ["job_id", "url_hash"], "left_anti"
+    )
+    result = definitely_fresh.unionByName(needs_exact)
+    return result.drop("maybe_seen", "dedup_hash", "bucket")
+
+
 def filter_fresh(
     candidates: DataFrame,
     seen: DataFrame,
@@ -402,32 +444,16 @@ def filter_fresh(
     rebuilt from the full seen set every round. ``shards_bc``: a live
     ``sc.broadcast`` of the shard map (e.g. ``ShardBroadcast.bc``) so the
     broadcast strategy skips the full collect+re-broadcast per call.
+
+    Both verdict branches re-evaluate the probe (and everything upstream of
+    it); callers that can hold the probed candidates in memory call
+    ``probe_seen`` + persist + ``split_fresh`` instead (the crawl driver does).
     """
-    cand = with_dedup_key(candidates, num_buckets)
-    drop_cols = ("dedup_hash", "bucket")
     if not use_bloom:
-        fresh = cand.join(seen.select("job_id", "url_hash"), ["job_id", "url_hash"], "left_anti")
-        return fresh.drop(*drop_cols)
-    if shards is None:
-        seen_keyed = with_dedup_key(seen.select("job_id", "url_hash"), num_buckets)
-        shards = build_bloom_shards(seen_keyed)
-    if strategy == "auto":
-        # callers that track the seen count (the crawl driver does) pass it in
-        # — firing a count() action over the full seen table per round is an
-        # O(|seen|) scan the incremental design exists to avoid
-        n_seen = seen_count if seen_count is not None else seen.count()
-        est_bytes = n_seen * BITS_PER_KEY // 8
-        strategy = "broadcast" if est_bytes <= BROADCAST_SHARDS_MAX_BYTES else "cogroup"
-    if strategy == "broadcast":
-        probed = _broadcast_probe(cand, shards, bc=shards_bc)
-    else:
-        probed = _cogroup_probe(cand, shards)
-    # NB: both branches re-evaluate `probed`; the probe is cheap (measured
-    # ~7M rows/s/stage warm) and DataFrame-cache compression costs more than
-    # it saves here — callers persist the final result if they reuse it
-    definitely_fresh = probed.filter(~F.col("maybe_seen"))
-    needs_exact = probed.filter(F.col("maybe_seen")).join(
-        seen.select("job_id", "url_hash"), ["job_id", "url_hash"], "left_anti"
+        return candidates.join(
+            seen.select("job_id", "url_hash"), ["job_id", "url_hash"], "left_anti"
+        )
+    probed = probe_seen(
+        candidates, seen, num_buckets, strategy, shards, seen_count, shards_bc
     )
-    result = definitely_fresh.unionByName(needs_exact)
-    return result.drop("maybe_seen", *drop_cols)
+    return split_fresh(probed, seen)

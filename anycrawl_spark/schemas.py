@@ -96,6 +96,16 @@ PROGRESS = T.StructType(
     ]
 )
 
+# S11 webhook side table, one row per job lifecycle event
+# (reference: WebhookEvents.ts:6-36).
+WEBHOOK_EVENTS = T.StructType(
+    [
+        T.StructField("job_id", T.StringType()),
+        T.StructField("event", T.StringType()),   # crawl.started|completed|failed
+        T.StructField("round", T.IntegerType()),
+    ]
+)
+
 # Fetch result rows produced by the (simulated) fetch stage.
 FETCH_RESULTS = T.StructType(
     list(FRONTIER.fields)

@@ -8,6 +8,10 @@ Scale rationale (100 TB / 1000-executor target):
   BENCH/BASELINE.md), and AQE coalesces down.
 - Arrow enabled: every UDF in this engine is a pandas UDF / mapInPandas —
   Arrow batch transfer is the difference between viable and 100x-too-slow.
+- Codegen cache sized to the crawl: one round compiles ~130 classes (~86
+  distinct), more than Spark's 100-entry default, so the LRU evicted every
+  class between rounds and each round recompiled (and re-JITted) the same
+  code. CODEGEN_CACHE_ENTRIES keeps a round's classes across rounds.
 """
 
 from __future__ import annotations
@@ -15,6 +19,32 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# generated-code cache entries (static conf, read once per JVM): well above
+# the ~86 distinct classes a crawl round compiles
+CODEGEN_CACHE_ENTRIES = 2000
+
+
+def _mem_total_bytes() -> int:
+    """Physical memory of this machine (``MemTotal`` in /proc/meminfo,
+    else the page count sysconf reports)."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def default_driver_memory(mem_total_bytes: int | None = None) -> str:
+    """Driver heap when SPARK_DRIVER_MEM is unset: half of physical memory
+    (in whole MiB, at least 1g), leaving the rest to the Python workers, the
+    JVM's off-heap memory and the page cache. A fixed default either starves
+    a large box or gets a small one OOM-killed."""
+    total = _mem_total_bytes() if mem_total_bytes is None else mem_total_bytes
+    return f"{max(1024, total // 2 // (1 << 20))}m"
 
 
 def get_spark(
@@ -40,7 +70,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # G1 (default) collapses under 32 allocation-heavy threads in one JVM
         # (measured: 2x slower at local[32] than local[8]); throughput GC
         # restores near-linear scaling for codegen'd string/row allocation

@@ -15,6 +15,13 @@ Atomicity: data is written to ``_tmp-*`` and os.rename'd into place; the
 manifest is rewritten last via write-to-temp + rename — a crashed round leaves
 the previous manifest intact, which is exactly the resume point
 (north_rule: "resumable from Iceberg-checkpointed frontier snapshots").
+
+A table's schema costs no Spark job: the manifest records each data dir's
+Spark schema when it is written, and reads pass it to the parquet reader
+instead of letting Spark infer it with a one-task footer job (the Iceberg
+analog: the schema lives in table metadata). Rows that already sit on the driver (per-job
+progress, webhook events) go through the same ``append`` as an Arrow table
+and are written with pyarrow — no ``createDataFrame`` and no write job.
 """
 
 from __future__ import annotations
@@ -24,7 +31,41 @@ import os
 import shutil
 import threading
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+# the footer key Spark stores its own schema under; driver-written files
+# carry it too, so every data file of a table describes itself the same way
+SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+
+# target rows per data file: writes of already-materialized data coalesce to
+# files_for(rows) files instead of one file per shuffle partition (a
+# one-row table written from 32 partitions is 32 footers to list and read)
+ROWS_PER_FILE = 1 << 20
+
+
+def files_for(rows: int) -> int:
+    """Data files a write of ``rows`` rows needs at ROWS_PER_FILE rows each."""
+    return max(1, -(-rows // ROWS_PER_FILE))
+
+
+def driver_rows(rows: list[tuple], schema: T.StructType) -> pa.Table:
+    """Driver-side rows as an Arrow table that carries its Spark schema.
+
+    ``SnapshotStore.append`` writes such a table with pyarrow on the driver:
+    no ``createDataFrame``, no Spark job. Spark reads the file back with the
+    same rows and types as if it had written it."""
+    arrow_schema = to_arrow_schema(schema).with_metadata(
+        {SPARK_SCHEMA_KEY: schema.json()}
+    )
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
 
 
 class SnapshotStore:
@@ -43,6 +84,9 @@ class SnapshotStore:
             self.manifest = {"tables": {}, "appends": {}, "round": -1, "history": []}
         self.manifest.setdefault("appends", {})
         self.manifest.setdefault("lineage", {})
+        # data dir -> Spark schema JSON, recorded at write time (stores
+        # written before schemas were recorded fall back to inference)
+        self.manifest.setdefault("schemas", {})
 
     # -- per-partition lineage ---------------------------------------------
 
@@ -54,8 +98,6 @@ class SnapshotStore:
         file_size_in_bytes})."""
         files = []
         try:
-            import pyarrow.parquet as pq
-
             with os.scandir(data_dir) as it:
                 for e in sorted(it, key=lambda e: e.name):
                     if not e.name.endswith(".parquet"):
@@ -127,9 +169,10 @@ class SnapshotStore:
         )
         # prune lineage of GC'd / failed-append dirs (advisory metadata
         # never outlives its data files)
-        self.manifest["lineage"] = {
-            d: e for d, e in self.manifest["lineage"].items() if os.path.exists(d)
-        }
+        for meta in ("lineage", "schemas"):
+            self.manifest[meta] = {
+                d: e for d, e in self.manifest[meta].items() if os.path.exists(d)
+            }
         self._flush_manifest()
 
     @property
@@ -140,6 +183,16 @@ class SnapshotStore:
 
     def _snap_dir(self, table: str, snap_id: int) -> str:
         return os.path.join(self.base, table, f"snap-{snap_id:06d}")
+
+    def _scan(self, dirs: list[str]) -> DataFrame:
+        """Parquet scan over data dirs with the recorded schema — Spark's
+        own inference reads the first file's footer, so the recorded schema
+        of ``dirs[0]`` is the one it would infer, without the job."""
+        schema = self.manifest["schemas"].get(dirs[0])
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
+        return reader.parquet(*dirs)
 
     def write(self, table: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
         """Write a new immutable snapshot of `table` and advance its pointer."""
@@ -157,12 +210,16 @@ class SnapshotStore:
         os.rename(tmp, final)
         self.manifest["tables"][table] = snap_id
         self._collect_lineage(final, None)
-        # stale snapshot GC: keep last 3 (Iceberg expire_snapshots analog)
+        if not partition_by:  # partition columns read back reordered; infer
+            self.manifest["schemas"][final] = df.schema.json()
+        # stale snapshot GC: keep the last 4 (snap_id and the 3 before it;
+        # Iceberg expire_snapshots analog)
         for old in range(max(0, snap_id - 3)):
             d = self._snap_dir(table, old)
             if os.path.exists(d):
                 shutil.rmtree(d)
                 self.manifest["lineage"].pop(d, None)
+                self.manifest["schemas"].pop(d, None)
 
     def read(self, table: str, snap_id: int | None = None) -> DataFrame:
         if snap_id is None:
@@ -173,20 +230,24 @@ class SnapshotStore:
                 f"snapshot expired: {table} snap-{snap_id:06d} was GC'd "
                 f"(write() keeps the last 4 snapshots per table)"
             )
-        return self.spark.read.parquet(d)
+        return self._scan([d])
 
     def exists(self, table: str) -> bool:
         return table in self.manifest["tables"]
 
     # -- append-only tables (Iceberg fast-append analog) -------------------
 
-    def append(self, table: str, df: DataFrame, round_no: int | None = None) -> None:
+    def append(
+        self, table: str, df: DataFrame | pa.Table, round_no: int | None = None
+    ) -> None:
         """Append an immutable data file set to an append-only table.
 
         In Iceberg this is ``writeTo(t).append()`` — no rewrite of existing
         data. Uncommitted appends (crash before commit_round) are dropped on
         resume because the manifest still lists the old dir set. ``round_no``
         stamps the per-partition lineage entry with the producing round.
+        ``df`` is a DataFrame (one Spark write) or a ``driver_rows`` table
+        (one pyarrow file written on the driver, no Spark job).
         """
         with self._lock:
             # Reserve the slot atomically: two concurrent appends to the SAME
@@ -201,17 +262,24 @@ class SnapshotStore:
         tmp = os.path.join(self.base, table, f"_tmp-append-{seq:06d}")
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        df.write.mode("overwrite").parquet(tmp)
+        if isinstance(df, pa.Table):
+            os.makedirs(tmp)
+            pq.write_table(df, os.path.join(tmp, "part-00000-driver.snappy.parquet"))
+            schema = df.schema.metadata[SPARK_SCHEMA_KEY.encode()].decode()
+        else:
+            df.write.mode("overwrite").parquet(tmp)
+            schema = df.schema.json()
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(tmp, final)
         self._collect_lineage(final, round_no)
+        self.manifest["schemas"][final] = schema
 
     def read_appends(self, table: str) -> DataFrame | None:
         dirs = [d for d in self.manifest["appends"].get(table, []) if os.path.exists(d)]
         if not dirs:
             return None
-        return self.spark.read.parquet(*dirs)
+        return self._scan(dirs)
 
     def rollback_to_committed(self) -> None:
         """Drop uncommitted table pointers/appends (crash recovery): restore

@@ -61,6 +61,15 @@ def test_postings_pruned_to_terms(spark):
     assert {(r.term, r.pos) for r in rows} == {("b", 2), ("d", 4)}
 
 
+def test_postings_skip_empty_docs(spark):
+    """Empty and whitespace-only docs have no tokens, so no postings — with
+    or without a term list (no (NULL, 1) posting)."""
+    d = _docs(spark, {1: "", 2: "   ", 3: "a b"})
+    rows = positional_postings(d).collect()
+    assert sorted((r.doc_id, r.term, r.pos) for r in rows) == [(3, "a", 1), (3, "b", 2)]
+    assert positional_postings(d, terms=["a"]).filter("doc_id != 3").count() == 0
+
+
 def test_empty_phrase_raises(spark):
     with pytest.raises(ValueError, match="non-empty"):
         phrase_search(_docs(spark, {1: "a"}), [])

@@ -1,11 +1,12 @@
 """SnapshotStore unit tests: concurrent same-table appends, snapshot GC,
-time-travel error semantics."""
+time-travel error semantics, job-free metadata and driver-written rows."""
 
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
-from anycrawl_spark.storage import SnapshotStore
+from anycrawl_spark.schemas import PROGRESS, WEBHOOK_EVENTS
+from anycrawl_spark.storage import ROWS_PER_FILE, SnapshotStore, driver_rows, files_for
 
 
 def test_concurrent_appends_same_table(spark, tmp_path):
@@ -88,3 +89,77 @@ def test_lineage_survives_manifest_reload(spark, tmp_path):
     store.commit_round(3)
     re = SnapshotStore(str(tmp_path / "s"), spark)
     assert [(e["round"], e["rows"]) for e in re.lineage("t")] == [(3, 7)]
+
+
+# -- metadata without Spark jobs ------------------------------------------
+
+def _jobs_launched(spark, fn):
+    """Spark jobs ``fn`` launches, counted from the status tracker."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    out = fn()
+    return len(set(tracker.getJobIdsForGroup()) - before), out
+
+
+def test_reads_and_driver_appends_launch_no_jobs(spark, tmp_path):
+    """Schemas are recorded at write time, so building a read needs no
+    footer-inference job; driver rows are written with pyarrow."""
+    store = SnapshotStore(str(tmp_path / "s"), spark)
+    store.write("snap", spark.range(5).selectExpr("id", "id * 2 AS v"))
+    store.append("t", spark.range(4).selectExpr("id", "'x' AS s"), round_no=0)
+    store.append("t", spark.range(3).selectExpr("id", "'y' AS s"), round_no=1)
+
+    n, snap = _jobs_launched(spark, lambda: store.read("snap"))
+    assert n == 0
+    n, t = _jobs_launched(spark, lambda: store.read_appends("t"))
+    assert n == 0
+    n, _ = _jobs_launched(
+        spark, lambda: store.append("progress", driver_rows(_progress_rows(), PROGRESS), 0)
+    )
+    assert n == 0
+    assert snap.count() == 5 and t.count() == 7
+
+    # the recorded schema is the one Spark would infer from the footers
+    store.commit_round(0)
+    reread = SnapshotStore(str(tmp_path / "s"), spark)  # from the manifest
+    for df, d in ((reread.read("snap"), reread._snap_dir("snap", 0)),
+                  (reread.read_appends("t"), reread.manifest["appends"]["t"][0])):
+        assert df.schema == spark.read.parquet(d).schema
+
+
+def _progress_rows():
+    return [("j0", 0, 3, 2, 1, 1, False, 3), ("j1", 0, 1, 1, 1, 0, True, 1),
+            ("j2", 0, 0, 0, 0, 0, False, None)]
+
+
+def test_driver_rows_match_spark_written(spark, tmp_path):
+    """progress and webhook_events rows written from the driver read back
+    with the rows and Spark types of a Spark-written append — alone and
+    mixed with Spark-written appends in one table."""
+    store = SnapshotStore(str(tmp_path / "s"), spark)
+    cases = {
+        "progress": (_progress_rows(), PROGRESS),
+        "webhook_events": ([("j0", "crawl.started", -1), ("j1", "crawl.failed", 4),
+                            ("j2", None, 2)], WEBHOOK_EVENTS),
+    }
+    for table, (rows, schema) in cases.items():
+        store.append(f"{table}_spark", spark.createDataFrame(rows, schema), 0)
+        store.append(f"{table}_driver", driver_rows(rows, schema), 0)
+        store.append(f"{table}_mixed", driver_rows(rows[:1], schema), 0)
+        store.append(f"{table}_mixed", spark.createDataFrame(rows[1:], schema), 1)
+        want = store.read_appends(f"{table}_spark")
+        for kind in ("driver", "mixed"):
+            got = store.read_appends(f"{table}_{kind}")
+            assert got.schema == want.schema, (table, kind)
+            assert sorted(got.toJSON().collect()) == sorted(want.toJSON().collect())
+        # an inferring reader sees the same types in the driver-written file
+        d = store.manifest["appends"][f"{table}_driver"][0]
+        assert spark.read.parquet(d).schema == want.schema
+    assert [e["rows"] for e in store.lineage("progress_driver")] == [3]
+
+
+def test_files_for_sizes_to_rows():
+    assert files_for(0) == 1
+    assert files_for(1) == 1
+    assert files_for(ROWS_PER_FILE) == 1
+    assert files_for(ROWS_PER_FILE + 1) == 2
