@@ -64,18 +64,6 @@ def tokens_expr(host_delays: dict[str, int], params: CrawlParams):
     )
 
 
-def make_tokens_udf(host_delays: dict[str, int], params: CrawlParams):
-    """Vectorized per-host politeness token lookup (pandas-UDF variant; prefer
-    ``tokens_expr`` — kept for API completeness/testing)."""
-    delays = dict(host_delays)
-
-    @F.pandas_udf(T.IntegerType())
-    def tokens_for(host: pd.Series) -> pd.Series:
-        return host.map(lambda h: params.host_tokens(delays.get(h)))
-
-    return tokens_for
-
-
 def apply_politeness(pending: DataFrame, host_delays: dict[str, int], params: CrawlParams) -> DataFrame:
     """Keep at most host_tokens rows per (job, host), lowest (depth, seq) first."""
     w = Window.partitionBy("job_id", "host").orderBy(*_SCHED_ORDER)

@@ -27,9 +27,9 @@ _DIST_SESSIONS: set[int] = set()
 def ensure_dist(spark: SparkSession) -> None:
     """Ship the package to python workers via addPyFile.
 
-    Local runs work because the daemon inherits the driver's cwd — but a
-    harness launched from another directory (or a real cluster) needs the
-    package on the workers' sys.path explicitly. Safe to call repeatedly.
+    ``session.get_spark`` already puts the package on the workers'
+    PYTHONPATH; a session built elsewhere (spark-submit, a real cluster)
+    needs it shipped explicitly. Safe to call repeatedly.
     """
     key = id(spark.sparkContext)
     if key in _DIST_SESSIONS:

@@ -12,6 +12,11 @@ Scale rationale (100 TB / 1000-executor target):
   distinct), more than Spark's 100-entry default, so the LRU evicted every
   class between rounds and each round recompiled (and re-JITted) the same
   code. CODEGEN_CACHE_ENTRIES keeps a round's classes across rounds.
+- Python workers fork from ``anycrawl_spark.worker_daemon`` (engine modules
+  preloaded, no per-task re-parse of pyspark.zip). The executors' PYTHONPATH
+  gets the directory holding this package, so the daemon runs the code the
+  driver imports. spark-submit sessions keep the stock daemon unless given
+  the same two settings (docs/SCALE.md "Python workers").
 """
 
 from __future__ import annotations
@@ -23,6 +28,9 @@ from pyspark.sql import SparkSession
 # generated-code cache entries (static conf, read once per JVM): well above
 # the ~86 distinct classes a crawl round compiles
 CODEGEN_CACHE_ENTRIES = 2000
+
+# directory holding the anycrawl_spark package the driver imports
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _mem_total_bytes() -> int:
@@ -72,6 +80,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.daemon.module", "anycrawl_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         # G1 (default) collapses under 32 allocation-heavy threads in one JVM
         # (measured: 2x slower at local[32] than local[8]); throughput GC
         # restores near-linear scaling for codegen'd string/row allocation

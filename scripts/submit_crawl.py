@@ -10,7 +10,14 @@ Package + submit:
       --conf spark.sql.adaptive.advisoryPartitionSizeInBytes=8m \
       --conf spark.sql.autoBroadcastJoinThreshold=8m \
       --conf spark.sql.shuffle.partitions=<2-3x total cores> \
+      --conf spark.python.daemon.module=anycrawl_spark.worker_daemon \
+      --conf spark.executorEnv.PYTHONPATH=<dir holding anycrawl_spark on the executors> \
       scripts/submit_crawl.py --workdir /data/crawl1 --jobs 8 --limit 400
+
+The two last ``--conf`` lines fork Python workers warm (docs/SCALE.md
+"Python workers"). The daemon starts before any task, so it must find the
+package on the executors' PYTHONPATH: ``--py-files`` is added per task,
+too late for it. Leave both out to keep pyspark's stock daemon.
 
 Local smoke (same file): ``python scripts/submit_crawl.py --local``.
 """
