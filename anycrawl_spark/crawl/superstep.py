@@ -25,10 +25,11 @@ Scale design (explicit, per north_rule):
 - Fetch input is repartitioned by ``xxhash64(url)`` — this IS the salting:
   after the politeness window has enforced per-host caps, fetch rows are
   independent, so spreading a mega-host across partitions is free. The
-  politeness window itself partitions by (job, host); its skew at mega-host
-  scale is bounded because a host can contribute at most its pending rows,
-  and the window is rank-then-filter (no buffering of the full partition in
-  Python).
+  politeness window partitions by (job, host) — over the closure regime's
+  job_id-repartitioned input or the dim regime's host-partitioned join —
+  and past the skew threshold a salted pre-cap bounds a mega-host's
+  politeness partition; the windows are rank-then-filter (no buffering of a
+  full partition in Python).
 - Determinism: every ordering is an explicit sort key (depth, discovery_seq,
   link ordinal) — never partition iteration order. Same seeds => same crawl,
   byte-identical tables, which the parity + resume tests assert.
@@ -36,6 +37,7 @@ Scale design (explicit, per north_rule):
 
 from __future__ import annotations
 
+import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
@@ -51,6 +53,7 @@ from anycrawl_spark.operators.gates import (
     apply_robots_dim,
     detect_host_skew,
     dim_tokens_expr,
+    flag_schedule,
     make_candidate_gate,
     robots_dim_df,
     tokens_expr,
@@ -77,7 +80,6 @@ class CrawlEngine:
         web: synth.WebConfig = synth.DEFAULT_WEB,
         num_buckets: int = 32,
         fetch_partitions: int | None = None,
-        profile: bool = False,
         two_phase_politeness: bool | str = "auto",
         auto_skew_threshold: int | None = None,
         shard_refresh_rounds: int = 8,
@@ -96,7 +98,6 @@ class CrawlEngine:
         self.fetch_partitions = fetch_partitions or int(
             spark.conf.get("spark.sql.shuffle.partitions")
         )
-        self.profile = profile
         # False = exact window, True = salted two-phase, "auto" (default) =
         # per-round skew detection (free while the crawl is small: the
         # driver-tracked enqueued total bounds every host partition)
@@ -499,79 +500,22 @@ class CrawlEngine:
         remaining = {
             jid: max(0, self.limit_by_job[jid] - self.done.get(jid, 0)) for jid in active
         }
-        # Flag-based scheduling: one pass, two windows, zero self-joins.
-        #   _eligible: pending + backoff elapsed + job active
-        #   politeness: rank within (job, host) by (depth, seq) <= host tokens
-        #   budget:     rank within job over politeness-passing rows <= remaining
-        # The budget window orders by (_pass1 desc, depth, seq): non-passing
-        # rows sort last, so passing rows get ranks 1..n exactly — the same
-        # greedy order as the reference simulator.
+        # Flag-based scheduling (gates.flag_schedule): politeness then budget
+        # windows mark ``_sched``; deferred rows stay pending unchanged.
+        t0 = time.perf_counter()
+        use_two_phase = self._politeness_two_phase(frontier)
         if self.robots_dim is not None:
-            # dim regime: crawl-delays resolve via the host-keyed dim join.
-            # HashPartitioning(host) from this join satisfies the (job_id,
-            # host) politeness window's clustering, so the window below adds
-            # no exchange — same single frontier shuffle as the closure path.
-            # The skew probe (_politeness_two_phase) keeps the raw frontier.
+            # dim regime: crawl-delays resolve via the host-keyed dim join,
+            # whose HashPartitioning(host) the politeness window reuses.
             sched_input = with_dim_delays(frontier, self.robots_dim)
             host_tokens = dim_tokens_expr(self.params)
         else:
-            sched_input = frontier
+            # exact path: one job_id exchange serves both windows
+            sched_input = frontier if use_two_phase else frontier.repartition("job_id")
             host_tokens = tokens_expr(self.host_delays, self.params)
-        remaining_map = (
-            F.create_map(*[F.lit(x) for kv in remaining.items() for x in kv])
-            if remaining
-            else F.create_map()
-        )
-        # ineligible (backoff) rows must sort last so eligible rows get dense
-        # ranks 1..n within each window
-        w_host = Window.partitionBy("job_id", "host").orderBy(
-            F.col("_eligible").desc(), F.col("depth").asc(), F.col("discovery_seq").asc()
-        )
-        w_budget = Window.partitionBy("job_id").orderBy(
-            F.col("_pass1").desc(), F.col("depth").asc(), F.col("discovery_seq").asc()
-        )
-        import time as _time
-
-        t0 = _time.time()
-        flagged = sched_input.withColumn(
-            "_eligible",
-            (F.col("status") == "pending")
-            & (F.col("next_eligible_round") <= rnd)
-            & F.col("job_id").isin(active),
-        )
-        use_two_phase = self._politeness_two_phase(frontier)
-        if use_two_phase:
-            # salted pre-cap bounds any mega-host's window partition to
-            # salt_buckets x tokens survivors (§4.2 skew); equivalence with
-            # the exact window proven in tests/test_gates.py
-            w_salt = Window.partitionBy(
-                "job_id", "host", F.pmod(F.col("url_hash"), F.lit(16))
-            ).orderBy(
-                F.col("_eligible").desc(), F.col("depth").asc(),
-                F.col("discovery_seq").asc(),
-            )
-            flagged = flagged.withColumn(
-                "_eligible",
-                F.col("_eligible")
-                & (F.row_number().over(w_salt) <= host_tokens),
-            )
-        flagged = (
-            flagged.withColumn(
-                "_host_rank",
-                F.when(F.col("_eligible"), F.row_number().over(w_host)),
-            )
-            .withColumn(
-                "_pass1",
-                F.col("_eligible") & (F.col("_host_rank") <= host_tokens),
-            )
-            .withColumn("_budget_rank", F.row_number().over(w_budget))
-            .withColumn(
-                "_sched",
-                F.col("_pass1")
-                & (F.col("_budget_rank") <= F.coalesce(remaining_map[F.col("job_id")], F.lit(0))),
-            )
-            .persist()
-        )
+        flagged = flag_schedule(
+            sched_input, rnd, active, remaining, host_tokens, two_phase=use_two_phase
+        ).persist()
         frontier_cols = [f.name for f in FRONTIER.fields]
         sched = flagged.filter(F.col("_sched")).select(*frontier_cols)
         # deferred + eligible-but-capped rows stay pending unchanged
@@ -616,7 +560,6 @@ class CrawlEngine:
         docs = ok  # extraction already ran in the fused stage
 
         # --- documents + metrics appends -----------------------------------
-        t_defs = _time.time()
         docs_saved = docs
         if self._scrape_gate is not None:
             docs_saved = docs.filter(
@@ -634,7 +577,6 @@ class CrawlEngine:
             ),
             round_no=rnd,
         )
-        t_docs_append = _time.time()
         metrics_df = fetched.select(
             "job_id", F.lit(rnd).alias("round"), "url_hash", "host",
             "status_code", "latency_ms", "size_bytes",
@@ -806,7 +748,6 @@ class CrawlEngine:
             )
             f_metrics.result()
             f_log.result()
-        t_summary = _time.time()
 
         agg: dict = {}
         fresh_counts: dict = {}
@@ -916,7 +857,7 @@ class CrawlEngine:
             for f in futures:
                 f.result()
             f_shards.result()
-        t_final = _time.time()
+        t_final = time.perf_counter()
         self.store.commit_round(rnd)
         stats = {
             "round": rnd,
@@ -928,13 +869,6 @@ class CrawlEngine:
             "wall_sec": round(t_final - t0, 2),
             "politeness": "two_phase" if use_two_phase else "exact",
         }
-        if self.profile:
-            stats["t_phases"] = {
-                "defs": round(t_defs - t0, 2),
-                "fetch_extract_docs": round(t_docs_append - t_defs, 2),
-                "metrics_log_summary": round(t_summary - t_docs_append, 2),
-                "final_writes": round(t_final - t_summary, 2),
-            }
         self.round_stats.append(stats)
         flagged.unpersist()
         fetched.unpersist()

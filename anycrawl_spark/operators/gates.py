@@ -110,11 +110,11 @@ def apply_politeness_two_phase(
     )
 
 
-# Measured crossover on the bench VM (BENCH/last_run_detail.json
-# politeness_skew): a single-task Tungsten sort runs ~10M rows/s, so the
-# exact window wins below ~10M rows per (job, host) partition (one shuffle
-# instead of two, the salted pre-pass costs ~30%) and loses steeply above
-# it (17.6s vs 3.7s at 43M mega-host rows).
+# ~10M rows per (job, host) partition is where the exact window lost to the
+# salted pre-cap on a 32-core box (BENCH/last_run_detail.json
+# politeness_skew). That plan partitioned the exact window by (job, host);
+# the closure regime's now runs over a job_id partition, so the threshold is
+# unmeasured for the current plan (see ROADMAP).
 AUTO_SKEW_THRESHOLD_ROWS = 10_000_000
 AUTO_SKEW_SAMPLE_MOD = 64
 
@@ -173,6 +173,71 @@ def apply_politeness_auto(
     if detect_host_skew(pending, threshold_rows, sample_mod, upper_bound):
         return apply_politeness_two_phase(pending, host_delays, params, salt_buckets)
     return apply_politeness(pending, host_delays, params)
+
+
+def flag_schedule(
+    pending: DataFrame,
+    rnd: int,
+    active: list[str],
+    remaining: dict[str, int],
+    host_tokens,
+    two_phase: bool = False,
+) -> DataFrame:
+    """A crawl round's scheduling pass: one pass, two windows, zero
+    self-joins. Every row keeps its columns and gains ``_sched``:
+
+    - ``_eligible``: pending, backoff elapsed (``next_eligible_round <=
+      rnd``) and job in ``active``;
+    - politeness: rank within (job, host) by (depth, seq) <= ``host_tokens``
+      (a column expression: ``tokens_expr`` or ``dim_tokens_expr``);
+    - budget: rank within job over politeness-passing rows <=
+      ``remaining[job]``.
+
+    Ineligible rows sort last in the host window and non-passing rows last
+    in the budget window, so passing rows get ranks 1..n exactly — the same
+    greedy order as the reference simulator.
+
+    Input partitioned by job_id (or by host, for the politeness window)
+    is reused: over a job_id-partitioned input both windows share that one
+    exchange. ``two_phase`` adds the salted pre-cap, which bounds a
+    mega-host's window partition to 16 x tokens survivors
+    (§4.2 skew; equivalence with the exact window in tests/test_gates.py).
+    """
+    w_host = Window.partitionBy("job_id", "host").orderBy(
+        F.col("_eligible").desc(), *_SCHED_ORDER
+    )
+    w_budget = Window.partitionBy("job_id").orderBy(F.col("_pass1").desc(), *_SCHED_ORDER)
+    remaining_map = (
+        F.create_map(*[F.lit(x) for kv in remaining.items() for x in kv])
+        if remaining
+        else F.create_map()
+    )
+    flagged = pending.withColumn(
+        "_eligible",
+        (F.col("status") == "pending")
+        & (F.col("next_eligible_round") <= rnd)
+        & F.col("job_id").isin(active),
+    )
+    if two_phase:
+        w_salt = Window.partitionBy(
+            "job_id", "host", F.pmod(F.col("url_hash"), F.lit(16))
+        ).orderBy(F.col("_eligible").desc(), *_SCHED_ORDER)
+        flagged = flagged.withColumn(
+            "_eligible",
+            F.col("_eligible") & (F.row_number().over(w_salt) <= host_tokens),
+        )
+    return (
+        flagged.withColumn(
+            "_host_rank", F.when(F.col("_eligible"), F.row_number().over(w_host))
+        )
+        .withColumn("_pass1", F.col("_eligible") & (F.col("_host_rank") <= host_tokens))
+        .withColumn("_budget_rank", F.row_number().over(w_budget))
+        .withColumn(
+            "_sched",
+            F.col("_pass1")
+            & (F.col("_budget_rank") <= F.coalesce(remaining_map[F.col("job_id")], F.lit(0))),
+        )
+    )
 
 
 def apply_budget(pending: DataFrame, remaining_by_job: dict[str, int]) -> DataFrame:
@@ -366,10 +431,9 @@ def dim_tokens_expr(params: CrawlParams):
 def with_dim_delays(pending: DataFrame, robots_dim: DataFrame) -> DataFrame:
     """Attach ``_dim_delay`` to the scheduling input via the host-keyed dim.
 
-    One shuffle-hash join on host; the politeness windows that follow
-    partition by (job_id, host), which HashPartitioning(host) already
-    satisfies — so dim-mode scheduling costs the same single frontier
-    exchange as the closure path's literal-map expression."""
+    One shuffle-hash join on host; ``flag_schedule``'s (job_id, host)
+    politeness window reuses its HashPartitioning(host), and only the
+    budget window adds a job_id exchange."""
     delays = robots_dim.select("host", F.col("crawl_delay_ms").alias("_dim_delay")).filter(
         F.col("_dim_delay").isNotNull() & (F.col("_dim_delay") > 0)
     )

@@ -55,6 +55,12 @@ def default_driver_memory(mem_total_bytes: int | None = None) -> str:
     return f"{max(1024, total // 2 // (1 << 20))}m"
 
 
+def default_cores() -> int:
+    """Local cores when none are given: ``SPARK_GRAFT_CPUS`` if set, else
+    the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "anycrawl_spark",
     cores: int | None = None,
@@ -62,7 +68,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = cores
     builder = (

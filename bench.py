@@ -1,657 +1,63 @@
-"""Benchmark harness (driver contract): one JSON line on stdout.
+"""Benchmark entry point: run every BENCHMARK.json workload once through
+perfbench and print one JSON line.
 
-Default mode: headline operator queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the frontier kernel
-(the BASELINE.json metric: URLs scheduled+deduped/sec) and an end-to-end
-crawl. Emits:
+    python bench.py
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {...}, "sf": ..., "frontier": {...}, "crawl": {...}}
+Each workload runs as ``<command> --workload W --seed 1 --seconds
+<run_seconds> --trace 0`` from the repo root (about 1.5 min each). The last
+stdout line is
 
-``--scaling``: runs the frontier kernel at local[8] and local[32] on identical
-input (the sandbox substitution for N vs 4N executors) and writes
-BENCH/scaling_last_run.md with throughputs + scaling efficiency.
+    {"metric": "round_cpu_p50_s", "value": <crawl_multi_job value>,
+     "unit": "cpu_s", "correct": ..., "failed": ..., "workloads": {W: {...}}}
 
-``--gate``: the north-rule gate pair local[2] vs local[8] (both levels below
-this box's DRAM ceiling — the honest single-box N-vs-4N proxy); writes
-BENCH/gate_last_run.md.
+The exit code is non-zero when a run fails or reports failed checks.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
+import subprocess
 import sys
-import tempfile
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-HEADLINE = [
-    "q_pricing_summary",
-    "q_broadcast_dim_join",
-    "q_anti_join_seen",
-    "q_cuckoo_dedup",
-    "q_budget_topk",
-    "q_discovery_seq",
-    "q_union_dedup",
-    "q_credits",
-    "q_token_stats",
-    "q_lang_id",
-    "q_exact_dup_groups",
-    "q_minhash_unigram",
-    "q_ngram_jaccard_pairs",
-    "q_embedding_topk",
-    "q_near_duplicates",
-    "q_simhash",
-    "q_simhash_md5",
-    "q_serp_search",
-    "q_serp_searxng",
-]
-
-# frontier-kernel scale for bench + scaling runs (identical input both levels)
-KERNEL = dict(n_pending=16_000_000, n_candidates=16_000_000, n_seen=8_000_000)
+ROOT = os.path.dirname(os.path.abspath(__file__))
+HEADLINE = ("crawl_multi_job", "round_cpu_p50_s", "cpu_s")  # workload, metric, unit
 
 
-def _sf(sf_dir: str) -> float:
-    name = os.path.basename(sf_dir.rstrip("/"))
-    try:
-        return float(name.replace("sf", ""))
-    except ValueError:
-        return -1.0
-
-
-def run_queries(spark, sf_dir: str) -> dict[str, float]:
-    # getattr, not QUERIES[...]: q_simhash is benched (JVM xxhash64 fast
-    # path) but lives outside the 50-entry driver contract since r4.
-    from anycrawl_spark import queries as Q
-
-    timings = {}
-    for name in HEADLINE:
-        fn = getattr(Q, name)
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.time() - t0, 3)
-    return timings
-
-
-# --- phase bodies: each runs in its OWN subprocess (fresh JVM) -------------
-#
-# Round-2 lesson: sharing one JVM across phases contaminates the numbers —
-# the 48M-row skew / 32M-key shard stages fragment the heap and inflated the
-# recorded frontier-kernel wall 2x (the isolated median actually improved).
-# Each phase below gets a fresh interpreter + JVM, exactly like bench_scaling
-# gives each parallelism level its own session, so BENCH_r{N}.json numbers
-# are comparable across rounds and against BENCH/BASELINE.md medians.
-
-def phase_queries() -> dict:
-    from anycrawl_spark.bench_workloads import warm_python_workers
-    from anycrawl_spark.session import get_spark
-
-    spark = get_spark("bench-queries", cores=CPUS, shuffle_partitions=CPUS)
-    warm_python_workers(spark, CPUS)
-    t0 = time.time()
-    queries = run_queries(spark, SF_DIR)
-    wall = round(time.time() - t0, 2)
-    spark.stop()
-    return {"queries": queries, "wall_sec": wall}
-
-
-def _scratch_dir(prefix: str) -> tuple[str, str]:
-    """Snapshot workdirs for the crawl/soak phases are SCRATCH (production
-    snapshots land on object storage, and Spark shuffle already sits on
-    tmpfs via spark.local.dir): put them on tmpfs when it has headroom.
-    Measured on this box (BENCH/BASELINE.md round-5): the same crawl phase
-    recorded 237 s with the workdir on /dev/vda under co-tenant disk bursts
-    vs 153.5 s on /dev/shm with steady-state rounds back in the r4 quiet
-    band (6.9-7.9 s) — the block device is co-tenant weather, not part of
-    the workload the cross-round instrument tracks. Falls back to the
-    default tempdir when tmpfs is absent or tight (< 16 GiB free); the
-    chosen backend is stamped into the phase result either way."""
-    shm = "/dev/shm"
-    try:
-        if os.path.isdir(shm) and shutil.disk_usage(shm).free >= 16 << 30:
-            return tempfile.mkdtemp(prefix=prefix, dir=shm), "tmpfs"
-    except OSError:
-        pass
-    return tempfile.mkdtemp(prefix=prefix), "default_tmp"
-
-
-def phase_crawl() -> dict:
-    from anycrawl_spark.bench_workloads import crawl_e2e, warm_python_workers
-    from anycrawl_spark.session import get_spark
-
-    spark = get_spark("bench-crawl", cores=CPUS, shuffle_partitions=CPUS)
-    warm_python_workers(spark, CPUS)
-    wd, backend = _scratch_dir("bench_crawl_")
-    try:
-        crawl = crawl_e2e(spark, wd)
-    finally:
-        shutil.rmtree(wd, ignore_errors=True)
-    spark.stop()
-    crawl["scratch_backend"] = backend
-    return {"crawl": crawl}
-
-
-def phase_kernel() -> dict:
-    from anycrawl_spark.bench_workloads import (
-        cuckoo_probe_bench, frontier_kernel, politeness_skew_bench,
-        prepare_shards, robots_dim_bench, shard_maintenance_bench,
-        warm_python_workers,
+def run_workload(command: list[str], workload: str, seconds: float) -> dict | None:
+    """One perfbench run; its last stdout line parsed, or None if it failed."""
+    proc = subprocess.run(
+        [*command, "--workload", workload, "--seed", "1", "--seconds", str(seconds),
+         "--trace", "0"],
+        cwd=ROOT, stdout=subprocess.PIPE, text=True,
     )
-    from anycrawl_spark.session import get_spark
-
-    # shuffle_partitions = 2x cores, matching bench_scaling/--gate and the
-    # BENCH/BASELINE.md medians this number is compared against. The narrower
-    # cores-wide config measured both slower AND less stable (walls escalate
-    # across same-JVM runs: 12.7 -> 16.7 -> 28.3 at 32 partitions vs a
-    # 8.4 -> 10 creep at 64 — fewer, larger partitions concentrate GC load).
-    spark = get_spark("bench-kernel", cores=CPUS, shuffle_partitions=CPUS * 2)
-    warm_python_workers(spark, CPUS)
-    # Same methodology as bench_scaling / BENCH/BASELINE.md: shard state is
-    # cross-round (prepared once), one untimed pass absorbs codegen/import
-    # session costs, then median-of-3 measures steady-state throughput. The
-    # cold first-run wall is recorded alongside, not hidden.
-    bc = prepare_shards(spark, KERNEL["n_seen"])
-    cold = frontier_kernel(spark, **KERNEL, shard_bc=bc)
-    runs = [frontier_kernel(spark, **KERNEL, shard_bc=bc) for _ in range(3)]
-    frontier = dict(sorted(runs, key=lambda r: r["wall_sec"])[1])
-    frontier["cold_first_sec"] = cold["wall_sec"]
-    frontier["all_walls"] = [r["wall_sec"] for r in runs]
-    shards = shard_maintenance_bench(spark)
-    skew = politeness_skew_bench(spark)
-    cuckoo = cuckoo_probe_bench(spark)
-    robots = robots_dim_bench(spark)
-    spark.stop()
-    return {"frontier": frontier, "shard_maintenance": shards,
-            "politeness_skew": skew, "cuckoo_probe": cuckoo,
-            "robots_dim": robots}
-
-
-def phase_soak() -> dict:
-    from anycrawl_spark.bench_workloads import crawl_soak, warm_python_workers
-    from anycrawl_spark.session import get_spark
-
-    spark = get_spark("bench-soak", cores=CPUS, shuffle_partitions=CPUS)
-    warm_python_workers(spark, CPUS)
-    wd, backend = _scratch_dir("bench_soak_")
-    try:
-        soak = crawl_soak(spark, wd)
-    finally:
-        shutil.rmtree(wd, ignore_errors=True)
-    spark.stop()
-    soak["scratch_backend"] = backend
-    return {"soak": soak}
-
-
-PHASES = {
-    "queries": phase_queries, "crawl": phase_crawl, "kernel": phase_kernel,
-    "soak": phase_soak,
-}
-
-
-def _wait_jvm_quiesce(max_wait: float = 20.0) -> None:
-    """Block until no java process remains (the previous phase's JVM can
-    outlive its python parent by seconds while it flushes/GCs; letting it
-    overlap the next phase contaminates that phase's walls — measured up to
-    +60% on the crawl phase when run back-to-back)."""
-    import subprocess
-
-    t0 = time.time()
-    while time.time() - t0 < max_wait:
-        try:
-            n = subprocess.run(["pgrep", "-c", "java"], capture_output=True)
-            if n.returncode != 0 or n.stdout.strip() == b"0":
-                return
-        except OSError:
-            return
-        time.sleep(1.0)
-
-
-def _run_phase_subprocess(name: str) -> dict:
-    """Run one phase in a fresh python+JVM; its JSON rides a temp file so
-    Spark's stdout noise can't corrupt it."""
-    import subprocess
-
-    _wait_jvm_quiesce()
-    out_path = tempfile.mktemp(prefix=f"bench_{name}_", suffix=".json")
-    try:
-        subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--phase", name,
-             "--out", out_path],
-            check=True, cwd=os.path.dirname(os.path.abspath(__file__)),
-        )
-        with open(out_path) as f:
-            return json.load(f)
-    finally:
-        if os.path.exists(out_path):
-            os.unlink(out_path)
-
-
-def _calib_kernel(_i: int) -> int:
-    """Fixed integer LCG+xorshift pass over a 4M-int64 array — ALU + DRAM
-    bound, deterministic, no I/O. ~0.3-0.6 s single-core on a quiet box."""
-    import numpy as np
-
-    a = np.arange(4_000_000, dtype=np.uint64)
-    for _ in range(24):
-        a = a * np.uint64(6364136223846793005) + np.uint64(1442695040888963407)
-        a ^= a >> np.uint64(33)
-    return int(a[0] & np.uint64(0x7FFFFFFF))
-
-
-def machine_calibration() -> dict:
-    """Pure-CPU probe (no Spark): pins MACHINE speed at bench time.
-
-    Co-tenant interference has swung identical-code walls 30-50% between
-    rounds (r3 crawl_e2e 92 s -> r4 118-137 s with per-query times near
-    flat; BENCH/BASELINE.md noise notes) — recording a fixed workload's
-    wall next to the Spark walls makes cross-round comparisons
-    attributable. single = one-core kernel; multi = the same kernel in
-    CPUS forked processes at once (DRAM-bandwidth + scheduler pressure,
-    the regime Spark's many-small-jobs phases live in).
-    """
-    import multiprocessing as mp
-    import statistics
-
-    _calib_kernel(0)  # untimed warmup: cold numpy import + page faults
-    singles = []
-    for _ in range(3):
-        t0 = time.time()
-        _calib_kernel(0)
-        singles.append(time.time() - t0)
-    single = round(statistics.median(singles), 3)
-    t0 = time.time()
-    with mp.get_context("fork").Pool(CPUS) as pool:
-        pool.map(_calib_kernel, range(CPUS))
-    multi = round(time.time() - t0, 3)
-    return {"calib_single_sec": single, "calib_multi_sec": multi}
-
-
-def _scalars(d: dict) -> dict:
-    """Scalar fields only — arrays/nested dicts go to the detail file, not
-    the stdout line (VERDICT r3 #2: the r3 line outgrew the driver's tail
-    buffer and BENCH_r03 recorded ``parsed: null``)."""
-    return {k: v for k, v in d.items() if isinstance(v, (int, float, str, bool))}
-
-
-# Quiet-window discipline (VERDICT r4 #3): the r4 driver artifact ran under
-# heavy co-tenant CPU contention (calib multi 7.66 s vs ~2.6 s quiet) and the
-# cross-round instrument recorded a weather report. Before the timed phases,
-# poll the pure-CPU probe and wait (bounded) for the box to go quiet; if it
-# never does, run anyway and stamp the artifact "noisy" so readers know.
-CALIB_QUIET_MULTI_SEC = 3.5
-CALIB_POLL_SEC = 45
-CALIB_MAX_WAIT_SEC = 900
-
-
-def wait_for_quiet_window() -> tuple[dict, int, bool]:
-    """Returns (last calibration, seconds waited, quiet?). Set
-    SPARK_GRAFT_NO_WAIT=1 to skip waiting during local iteration."""
-    calib = machine_calibration()
-    if os.environ.get("SPARK_GRAFT_NO_WAIT"):
-        return calib, 0, calib["calib_multi_sec"] <= CALIB_QUIET_MULTI_SEC
-    waited = 0
-    while (
-        calib["calib_multi_sec"] > CALIB_QUIET_MULTI_SEC
-        and waited < CALIB_MAX_WAIT_SEC
-    ):
-        print(
-            f"# calib multi {calib['calib_multi_sec']} s > {CALIB_QUIET_MULTI_SEC} s "
-            f"(co-tenant load) — deferring timed phases, waited {waited}s",
-            file=sys.stderr,
-        )
-        time.sleep(CALIB_POLL_SEC)
-        waited += CALIB_POLL_SEC
-        calib = machine_calibration()
-    return calib, waited, calib["calib_multi_sec"] <= CALIB_QUIET_MULTI_SEC
-
-
-def bench_default() -> dict:
-    # calibration stays OUTSIDE the timed span: total must remain
-    # comparable with pre-calibration rounds (it measures the workload,
-    # not the measurement).
-    #
-    # The quiet gate runs before EVERY phase, not once up front: co-tenant
-    # load on this box arrives in bursts (a run that started at calib
-    # multi 3.4 s recorded a 141 s crawl wall while a same-code quiet
-    # window sits at ~107 s), so a single pre-run probe can certify a run
-    # whose later phases ran under contention. Per-phase brackets make
-    # each phase's wall individually attributable.
-    calib_pre, quiet_wait, quiet = wait_for_quiet_window()
-    phase_calibs: dict[str, dict] = {}
-    results = {}
-    total = 0.0
-    for phase in ("queries", "crawl", "kernel", "soak"):
-        c_pre, waited, ph_quiet = wait_for_quiet_window()
-        quiet_wait += waited
-        quiet = quiet and ph_quiet
-        t0 = time.time()
-        results[phase] = _run_phase_subprocess(phase)
-        total += time.time() - t0  # timed span excludes waits + calib probes
-        phase_calibs[phase] = {
-            "pre": c_pre, "post": machine_calibration(), "wait_sec": waited,
-        }
-    q, c, k, s = (results[p] for p in ("queries", "crawl", "kernel", "soak"))
-    total = round(total, 2)
-    calib_post = phase_calibs["soak"]["post"]
-    queries = q["queries"]
-    queries["frontier_kernel"] = k["frontier"]["wall_sec"]
-    queries["crawl_e2e"] = c["crawl"]["wall_sec"]
-    queries["crawl_soak_50k"] = s["soak"]["wall_sec"]
-
-    # Full per-phase detail (round walls, soak round_detail, shard points,
-    # skew comparison) goes to a file; stdout carries ONLY the compact
-    # headline so the driver's tail buffer can never truncate the JSON.
-    detail = {
-        "frontier": k["frontier"],
-        "crawl": c["crawl"],
-        "soak": s["soak"],
-        "shard_maintenance": k["shard_maintenance"],
-        "politeness_skew": k["politeness_skew"],
-        "cuckoo_probe": k["cuckoo_probe"],
-        "robots_dim": k["robots_dim"],
-        "phase_calibrations": phase_calibs,
-    }
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/last_run_detail.json", "w") as f:
-        json.dump(detail, f, indent=1)
-
-    return {
-        "metric": "frontier_throughput_and_query_wall",
-        "value": total,
-        "unit": "sec",
-        "queries": queries,
-        "sf": _sf(SF_DIR),
-        "cpus": CPUS,
-        "frontier": _scalars(k["frontier"]),
-        "crawl": _scalars(c["crawl"]),
-        "soak": _scalars(s["soak"]),
-        "calib": {f"{k}_pre": v for k, v in calib_pre.items()}
-        | {f"{k}_post": v for k, v in calib_post.items()},
-        "quiet_wait_sec": quiet_wait,
-        # noisy if ANY phase started or finished past the quiet bar — the
-        # per-phase brackets catch bursts a single pre/post pair misses
-        "noisy": (not quiet) or any(
-            pc["pre"]["calib_multi_sec"] > CALIB_QUIET_MULTI_SEC
-            or pc["post"]["calib_multi_sec"] > CALIB_QUIET_MULTI_SEC
-            for pc in phase_calibs.values()
-        ),
-        "detail_file": "BENCH/last_run_detail.json",
-    }
-
-
-PAGES = 120_000
-
-
-def _median(runs: list[dict], key: str) -> dict:
-    return sorted(runs, key=lambda r: r[key])[len(runs) // 2]
-
-
-def _run_pair(pair: tuple[int, int], nruns: int) -> dict:
-    """Run the frontier kernel + fused fetch+extract at both parallelism
-    levels of ``pair`` (fresh JVM each), median-of-``nruns`` per level."""
-    from anycrawl_spark.bench_workloads import (
-        fetch_extract_bench, frontier_kernel, prepare_shards, warm_python_workers,
-    )
-    from anycrawl_spark.session import get_spark
-
-    results: dict[int, dict] = {}
-    calib, _, _ = wait_for_quiet_window()  # machine state at run time (noise audit)
-    for cores in pair:
-        _wait_jvm_quiesce()
-        spark = get_spark(f"bench-scale-{cores}", cores=cores, shuffle_partitions=cores * 2)
-        warm_python_workers(spark, cores)
-        bc = prepare_shards(spark, KERNEL["n_seen"])  # cross-round shard state
-        frontier_kernel(spark, **KERNEL, shard_bc=bc)  # untimed warm-up
-        kruns = [frontier_kernel(spark, **KERNEL, shard_bc=bc) for _ in range(nruns)]
-        kernel = dict(_median(kruns, "wall_sec"))
-        kernel["all_walls"] = [r["wall_sec"] for r in kruns]
-        counts = frontier_kernel(spark, **KERNEL, shard_bc=bc, with_counts=True)
-        kernel["n_scheduled"], kernel["n_fresh"] = counts["n_scheduled"], counts["n_fresh"]
-        fetch_extract_bench(spark, PAGES, cores)  # untimed warm-up
-        fruns = [fetch_extract_bench(spark, PAGES, cores) for _ in range(nruns)]
-        fetchx = dict(_median(fruns, "wall_sec"))
-        fetchx["all_walls"] = [r["wall_sec"] for r in fruns]
-        results[cores] = {"kernel": kernel, "fetch_extract": fetchx}
-        spark.stop()
-
-    lo, hi = pair
-    klo, khi = results[lo]["kernel"], results[hi]["kernel"]
-    flo, fhi = results[lo]["fetch_extract"], results[hi]["fetch_extract"]
-    ratio = hi // lo
-    kernel_eff = round(
-        khi["throughput_urls_per_sec"] / (ratio * klo["throughput_urls_per_sec"]), 3
-    )
-    fetch_eff = round(fhi["pages_per_sec"] / (ratio * flo["pages_per_sec"]), 3)
-    return {
-        "metric": "frontier_scaling_efficiency",
-        "value": kernel_eff,
-        "unit": "ratio",
-        "pair": list(pair),
-        f"local{lo}": results[lo],
-        f"local{hi}": results[hi],
-        f"kernel_throughput_{lo}": klo["throughput_urls_per_sec"],
-        f"kernel_throughput_{hi}": khi["throughput_urls_per_sec"],
-        "kernel_speedup": round(klo["wall_sec"] / khi["wall_sec"], 2),
-        "kernel_efficiency": kernel_eff,
-        f"fetch_pages_per_sec_{lo}": flo["pages_per_sec"],
-        f"fetch_pages_per_sec_{hi}": fhi["pages_per_sec"],
-        "fetch_speedup": round(flo["wall_sec"] / fhi["wall_sec"], 2),
-        "fetch_efficiency": fetch_eff,
-        "calib": calib,
-    }
-
-
-# sf1-equivalent kernel volume (VERDICT r4 #5): 10x the per-round default —
-# ~160M pending + 160M candidates vs 80M seen. Backs the 10^10 extrapolation
-# with a MEASURED second scale point: URLs/s should hold near-flat from the
-# 40M-row point (all stages are scans/shuffles linear in rows; the shard
-# broadcast grows to ~100 MB, still under the 256 MB cap).
-KERNEL10X = dict(
-    n_pending=160_000_000, n_candidates=160_000_000, n_seen=80_000_000
-)
-
-
-def bench_kernel10x() -> dict:
-    """Frontier kernel at the default and 10x (sf1-equivalent) volumes in one
-    JVM: warm-up pass + median-of-3 per point, reports the throughput ratio
-    (1.0 = perfectly linear scaling in data volume)."""
-    from anycrawl_spark.bench_workloads import (
-        frontier_kernel, prepare_shards, warm_python_workers,
-    )
-    from anycrawl_spark.session import get_spark
-
-    calib, waited, quiet = wait_for_quiet_window()
-    spark = get_spark("bench-kernel10x", cores=CPUS, shuffle_partitions=CPUS * 2)
-    warm_python_workers(spark, CPUS)
-    points = {}
-    for name, cfg in (("sf0.1_equiv", KERNEL), ("sf1_equiv", KERNEL10X)):
-        bc = prepare_shards(spark, cfg["n_seen"])
-        frontier_kernel(spark, **cfg, shard_bc=bc)  # untimed warm-up
-        runs = [frontier_kernel(spark, **cfg, shard_bc=bc) for _ in range(3)]
-        med = dict(sorted(runs, key=lambda r: r["wall_sec"])[1])
-        med["all_walls"] = [r["wall_sec"] for r in runs]
-        points[name] = med
-        bc.destroy()
-    spark.stop()
-    r_small = points["sf0.1_equiv"]["throughput_urls_per_sec"]
-    r_big = points["sf1_equiv"]["throughput_urls_per_sec"]
-    return {
-        "metric": "kernel_volume_scaling",
-        "value": round(r_big / r_small, 3),
-        "unit": "throughput_ratio_10x_vs_1x",
-        "points": points,
-        "throughput_1x": r_small,
-        "throughput_10x": r_big,
-        "calib": calib,
-        "quiet_wait_sec": waited,
-        "noisy": not quiet,
-        "cpus": CPUS,
-    }
-
-
-def bench_scaling() -> dict:
-    """Same jobs at local[8] and local[32] (the sandbox substitution for N vs
-    4N executor clusters): the frontier kernel (schedule+dedup, the
-    BASELINE.json metric) and the fused fetch+extract page stage.
-
-    Methodology: per level, warm every python worker + one untimed full-size
-    pass (codegen/import/shard-collect are session costs, not steady-state
-    throughput), then median-of-5 timed runs (this VM shows 20-40%
-    run-to-run noise; medians are reported, all raw walls recorded).
-    """
-    out = _run_pair((8, 32), nruns=5)
-    _write_baseline_md(out)
-    return out
-
-
-def bench_gate() -> dict:
-    """The north-rule gate pair: local[2] (N) vs local[8] (4N). On this
-    single box, 2->8 cores is the honest N-vs-4N proxy — both levels sit
-    BELOW the DRAM-bandwidth/loopback ceiling that local[32] hits, matching
-    the cluster situation where each added executor brings its own memory
-    bus (see BENCH/scaling_last_run.md caveat + the multiprocessing
-    calibration at 0.92). Median-of-5: the local[2] level is rock-stable
-    (<2% spread) but local[8] carries this VM's usual ~10% run-to-run
-    noise, which a 3-run median straddling the 0.8 line cannot resolve.
-
-    Quiet-gated like the full bench phases (the 2026-08-20 re-run showed
-    why: calib multi 3.22 s co-tenancy took the local[8] walls from a
-    20.8 s floor to a 55.1 s tail and read a phantom 0.604 kernel
-    efficiency — the contended side of the pair absorbs ALL the noise,
-    so the ratio is noise-amplifying, not noise-averaging)."""
-    calib_pre, quiet_wait, quiet = wait_for_quiet_window()
-    out = _run_pair((2, 8), nruns=5)
-    out["calib_pre"] = calib_pre
-    out["quiet_wait_sec"] = quiet_wait
-    out["noisy"] = not quiet
-    _write_gate_md(out)
-    return out
-
-
-def _write_gate_md(s: dict) -> None:
-    os.makedirs("BENCH", exist_ok=True)
-    k2, k8 = s["local2"]["kernel"], s["local8"]["kernel"]
-    f2, f8 = s["local2"]["fetch_extract"], s["local8"]["fetch_extract"]
-    md = f"""# BENCH/gate_last_run.md — north-rule gate pair (local[2] vs local[8])
-
-north_rule: throughput scaling efficiency >=0.8 between N and 4N executors.
-Sandbox substitution: local[2] (N) vs local[8] (4N) in separate JVMs — the
-pair where BOTH levels sit below this box's DRAM/loopback ceiling (the
-cluster analog; see the caveat in BENCH/scaling_last_run.md and the 8->32
-procs multiprocessing calibration at 0.92). Same warm-up + median
-methodology as --scaling; median-of-5.
-
-| job | local[2] (N) | local[8] (4N) | efficiency thr_4N/(4 x thr_N) |
-|---|---|---|---|
-| frontier kernel (URLs/s) | {k2['throughput_urls_per_sec']:,} (wall {k2['wall_sec']} s) | {k8['throughput_urls_per_sec']:,} (wall {k8['wall_sec']} s) | **{s['kernel_efficiency']}** |
-| fused fetch+extract (pages/s) | {f2['pages_per_sec']:,} (wall {f2['wall_sec']} s) | {f8['pages_per_sec']:,} (wall {f8['wall_sec']} s) | **{s['fetch_efficiency']}** |
-
-Raw kernel walls: local[2] {k2['all_walls']}, local[8] {k8['all_walls']}.
-Raw fetch+extract walls: local[2] {f2['all_walls']}, local[8] {f8['all_walls']}.
-(scheduled {k8['n_scheduled']:,}; fresh-after-dedup {k8['n_fresh']:,})
-Machine calibration at run time (fixed pure-CPU probe; quiet-box reference
-~0.27 s single / ~2.6 s multi): {s.get('calib')}.
-
-Run with `python bench.py --gate`.
-"""
-    with open("BENCH/gate_last_run.md", "w") as f:
-        f.write(md)
-
-
-def _write_baseline_md(s: dict) -> None:
-    """Record the latest --scaling run. BENCH/BASELINE.md is the curated
-    record (both the 2v8 and 8v32 pairs + analysis); this writes the raw
-    latest-run snapshot alongside it."""
-    os.makedirs("BENCH", exist_ok=True)
-    k8, k32 = s["local8"]["kernel"], s["local32"]["kernel"]
-    f8, f32 = s["local8"]["fetch_extract"], s["local32"]["fetch_extract"]
-    md = f"""# BENCH/scaling_last_run.md — latest --scaling run (8 vs 32)
-
-## Scaling efficiency (north_rule: >=0.8 between N and 4N parallelism)
-
-Sandbox substitution for "N vs 4N executor clusters" (no real cluster here):
-the identical jobs run at local[8] (N) and local[32] (4N) in separate JVMs on
-the same 32-core / 128 GB host. Methodology: all python workers pre-warmed,
-one untimed full-size pass per level (codegen + import + shard-collect are
-session costs), then **median of 5** timed runs (this VM shows 20-40%%
-run-to-run noise; raw walls listed).
-
-### 1. Frontier kernel — the BASELINE.json metric (URLs scheduled+deduped/s)
-
-One superstep's schedule + dedup dataflow: politeness window + budget window
-over {KERNEL['n_pending']:,} pending rows, then bloom-shard probe + exact
-anti-join + discovery_seq window over {KERNEL['n_candidates']:,} candidates vs
-{KERNEL['n_seen']:,} seen keys (JVM-generated input, ~20%% of rows on 3 hot
-hosts). Shard broadcast is cross-round state (incrementally maintained in
-production), probed via a scalar pandas UDF that ships only 16 bytes/row.
-
-| parallelism | wall (s) | throughput (URLs/s) | schedule (s) | dedup (s) | raw walls |
-|---|---|---|---|---|---|
-| local[8]  (N)  | {k8['wall_sec']} | {k8['throughput_urls_per_sec']:,} | {k8['t_schedule_sec']} | {k8['t_dedup_sec']} | {k8['all_walls']} |
-| local[32] (4N) | {k32['wall_sec']} | {k32['throughput_urls_per_sec']:,} | {k32['t_schedule_sec']} | {k32['t_dedup_sec']} | {k32['all_walls']} |
-
-**kernel speedup(4N/N) = {s['kernel_speedup']}x; per-core efficiency =
-thr_4N / (4 x thr_N) = {s['kernel_efficiency']}**
-(scheduled {k32['n_scheduled']:,}; fresh-after-dedup {k32['n_fresh']:,})
-
-### 2. Fused fetch+extract — pages/s (python-CPU-bound crawl stage)
-
-{f8['n_pages']:,} pages fetched (deterministic synthetic web) + full span/
-markdown/link extraction in ONE mapInPandas stage:
-
-| parallelism | wall (s) | pages/s | raw walls |
-|---|---|---|---|
-| local[8]  (N)  | {f8['wall_sec']} | {f8['pages_per_sec']:,} | {f8['all_walls']} |
-| local[32] (4N) | {f32['wall_sec']} | {f32['pages_per_sec']:,} | {f32['all_walls']} |
-
-**fetch+extract speedup(4N/N) = {s['fetch_speedup']}x; per-core efficiency =
-{s['fetch_efficiency']}**
-
-### Single-box caveat (why local[8]->local[32] understates cluster scaling)
-
-Both parallelism levels share ONE machine's DRAM bandwidth, page cache and GC.
-A calibration run of the same page-extraction work through plain
-multiprocessing (no Spark) measured **3.70x at 8->32 procs (eff 0.92)** — the
-hardware scales; the gap is single-JVM local-mode artifacts (one shuffle
-service, one allocator, Arrow IPC on one loopback) that do not exist between
-separate executors on a real cluster, where each 4N-executor adds its own
-memory bus. Knobs that materially improved local scaling and are equally
-valid on a cluster (all in `anycrawl_spark/session.py`):
-- `-XX:+UseParallelGC` (G1 collapsed at 32 alloc-heavy threads: 2x slowdown)
-- `spark.local.dir` on tmpfs (32 shuffle writers thrash one block device)
-- `spark.sql.adaptive.advisoryPartitionSizeInBytes=8m` (64m default coalesced
-  medium shuffles below the core count, starving wide clusters)
-- broadcast threshold 8m (AQE otherwise picks serial driver-side hash builds
-  for multi-million-row dims)
-- fused fetch+extract (one python stage per task chain, no JVM/py worker
-  oversubscription) and single-exchange scheduling windows
-  (HashPartitioning(job) reused by both the politeness and budget windows).
-
-Run with `python bench.py --scaling`. The default `python bench.py` emits the
-per-query + frontier + e2e-crawl JSON line the driver records as BENCH_r{{N}}.json.
-"""
-    with open("BENCH/scaling_last_run.md", "w") as f:
-        f.write(md)
+    lines = proc.stdout.strip().splitlines()
+    if proc.returncode != 0 or not lines:
+        return None
+    return json.loads(lines[-1])
+
+
+def main() -> int:
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    results = {w["name"]: run_workload(spec["command"], w["name"], spec["run_seconds"])
+               for w in spec["workloads"]}
+    ok = [r for r in results.values() if r is not None]
+    complete = len(ok) == len(results)
+    failed = sum(r["failed"] for r in ok)
+    workload, metric, unit = HEADLINE
+    headline = results.get(workload) or {"metrics": {}}
+    print(json.dumps({
+        "metric": metric,
+        "value": headline["metrics"].get(metric, {}).get("value"),
+        "unit": unit,
+        "correct": complete and all(r["correct"] for r in ok),
+        "failed": failed,
+        "workloads": {name: r and {k: m["value"] for k, m in r["metrics"].items()}
+                      for name, r in results.items()},
+    }), flush=True)
+    return 0 if complete and failed == 0 else 1
 
 
 if __name__ == "__main__":
-    if "--phase" in sys.argv:
-        name = sys.argv[sys.argv.index("--phase") + 1]
-        out = sys.argv[sys.argv.index("--out") + 1]
-        result = PHASES[name]()
-        with open(out, "w") as f:
-            json.dump(result, f)
-    elif "--scaling" in sys.argv:
-        print(json.dumps(bench_scaling()))
-    elif "--gate" in sys.argv:
-        print(json.dumps(bench_gate()))
-    elif "--kernel10x" in sys.argv:
-        print(json.dumps(bench_kernel10x()))
-    else:
-        print(json.dumps(bench_default()))
+    sys.exit(main())

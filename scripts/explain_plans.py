@@ -78,25 +78,26 @@ def main() -> int:
           "shipdate predicate pushed to scan")
     sections.append(("q_pricing_summary", p))
 
-    # 5. scheduling windows: one exchange serves both windows
-    from anycrawl_spark.bench_workloads import gen_frontier_tables
+    # 5. scheduling windows: one exchange serves both windows — audits the
+    #    engine's own flag_schedule over a few generated rows, repartitioned
+    #    by job_id as run_round's closure regime passes them (exact path)
     from anycrawl_spark.crawl.params import CrawlParams
-    from anycrawl_spark.operators.gates import tokens_expr
-    from pyspark.sql import Window, functions as F
+    from anycrawl_spark.operators.gates import flag_schedule, tokens_expr
+    from pyspark.sql import functions as F
 
-    params = CrawlParams(default_host_tokens=100)
-    pending, _, _ = gen_frontier_tables(spark, 10_000, 1, 1)
-    w_host = Window.partitionBy("job_id", "host").orderBy("depth", "discovery_seq")
-    w_budget = Window.partitionBy("job_id").orderBy(
-        F.col("_pass1").desc(), "depth", "discovery_seq"
+    pending = spark.range(64).select(
+        F.concat(F.lit("job-"), (F.col("id") % 2).cast("string")).alias("job_id"),
+        F.concat(F.lit("h"), (F.col("id") % 5).cast("string")).alias("host"),
+        F.lit("pending").alias("status"),
+        F.lit(0).alias("next_eligible_round"),
+        (F.col("id") % 3).cast("int").alias("depth"),
+        F.col("id").alias("discovery_seq"),
+        F.xxhash64("id").alias("url_hash"),
     )
-    sched = (
-        pending.repartition("job_id")
-        .withColumn("_host_rank", F.row_number().over(w_host))
-        .withColumn("_pass1", F.col("_host_rank") <= tokens_expr({}, params))
-        .withColumn("_budget_rank", F.row_number().over(w_budget))
-        .filter(F.col("_pass1") & (F.col("_budget_rank") <= 1000))
-    )
+    sched = flag_schedule(
+        pending.repartition("job_id"), 0, ["job-0", "job-1"], {"job-0": 10, "job-1": 10},
+        tokens_expr({}, CrawlParams(default_host_tokens=4)),
+    ).filter("_sched")
     p = plan_of(sched)
     n_exchanges = len(re.findall(r"\n\(\d+\) Exchange", p))
     check("scheduling_windows", n_exchanges == 1,
@@ -741,16 +742,17 @@ def main() -> int:
     # 15. robots dim regime (r5): past ROBOTS_DIM_THRESHOLD_HOSTS the rules
     #     live ONLY in a host-keyed table — the scheduling stage resolves
     #     crawl-delays via a shuffle-hash join on host whose partitioning the
-    #     (job_id, host) politeness window REUSES (no extra frontier
-    #     exchange), the admission decision is a co-partitioned SHJ too, and
-    #     the engine holds no driver-side rules dict beyond the seed hosts.
+    #     engine's (job_id, host) politeness window REUSES (no extra frontier
+    #     exchange; only the budget window adds a job_id one), the admission
+    #     decision is a co-partitioned SHJ too, and the engine holds no
+    #     driver-side rules dict beyond the seed hosts.
     from anycrawl_spark import synth
     from anycrawl_spark.crawl.params import CrawlParams
     from anycrawl_spark.crawl.superstep import CrawlEngine
     from anycrawl_spark.operators.gates import (
         apply_robots_dim, dim_tokens_expr, robots_dim_df, with_dim_delays,
     )
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import functions as F
     import tempfile
 
     robots = synth.robots_rules()
@@ -765,17 +767,17 @@ def main() -> int:
         (F.col("id") % 5).cast("int").alias("depth"),
         F.col("id").alias("discovery_seq"),
     )
-    w = Window.partitionBy("job_id", "host").orderBy("depth", "discovery_seq")
-    sched = (
-        with_dim_delays(frontier, dim)
-        .withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= dim_tokens_expr(CrawlParams()))
-    )
-    p = plan_of(sched)
-    parts = re.findall(r"hashpartitioning\(([^)]*)\)", p)
-    check("robots_dim_sched",
-          bool(parts) and all(x.split(",")[0].startswith("host") for x in parts),
-          "every exchange keys on host only (politeness window reuses the join)")
+    p = plan_of(flag_schedule(
+        with_dim_delays(frontier.withColumns({
+            "status": F.lit("pending"), "next_eligible_round": F.lit(0)}), dim),
+        0, ["job-0", "job-1", "job-2"], {"job-0": 10, "job-1": 10, "job-2": 10},
+        dim_tokens_expr(CrawlParams()),
+    ).filter("_sched"))
+    keys = [x.split(",")[0].split("#")[0]
+            for x in re.findall(r"hashpartitioning\(([^)]*)\)", p)]
+    check("robots_dim_sched", sorted(keys) == ["host", "host", "job_id"],
+          "politeness window reuses the host join; only the budget window "
+          f"adds a job_id exchange (found {keys})")
     check("robots_dim_sched", "ShuffledHashJoin" in p,
           "delay join is a co-partitioned shuffle-hash join")
     p2 = plan_of(apply_robots_dim(frontier, dim))

@@ -40,7 +40,6 @@ def main() -> int:
     ap.add_argument("--hosts", type=int, default=200)
     ap.add_argument("--max-rounds", type=int, default=24)
     ap.add_argument("--resume", action="store_true", help="resume from the workdir's last committed round")
-    ap.add_argument("--two-phase-politeness", action="store_true")
     ap.add_argument("--local", action="store_true", help="build a local[*] session instead of using spark-submit's")
     args = ap.parse_args()
 
@@ -80,7 +79,6 @@ def main() -> int:
     eng = CrawlEngine(
         spark, args.workdir, jobs, synth.robots_rules(web),
         CrawlParams(max_rounds=args.max_rounds), web=web,
-        profile=True, two_phase_politeness=args.two_phase_politeness,
     )
     if args.resume:
         eng.resume()

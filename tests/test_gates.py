@@ -36,6 +36,31 @@ def test_two_phase_politeness_equivalent(spark):
         assert c <= (4 if h == "mega.com" else 7)
 
 
+def test_flag_schedule_paths_agree_and_windows_reuse_job_id_input(spark):
+    import re
+
+    from anycrawl_spark.operators.gates import flag_schedule, tokens_expr
+
+    params = CrawlParams(default_host_tokens=7)
+    df = _pending(spark).withColumns({
+        "status": F.lit("pending"),
+        # every 5th row is still backing off; job-2 is not active
+        "next_eligible_round": F.when(F.col("discovery_seq") % 5 == 0, 3).otherwise(0),
+    })
+    args = (1, ["job-0", "job-1"], {"job-0": 20, "job-1": 2000},
+            tokens_expr({"mega.com": 250}, params))
+    # the closure regime's exact path: input repartitioned by job_id
+    exact = flag_schedule(df.repartition("job_id"), *args)
+    picked = {(r.job_id, r.url) for r in exact.filter("_sched").collect()}
+    assert picked == {(r.job_id, r.url) for r in
+                      flag_schedule(df, *args, two_phase=True).filter("_sched").collect()}
+    assert {j for j, _ in picked} == {"job-0", "job-1"}
+    assert sum(j == "job-0" for j, _ in picked) == 20
+    plan = exact._jdf.queryExecution().executedPlan().toString()
+    # both windows reuse the input's job_id exchange
+    assert re.findall(r"Exchange hashpartitioning\((\w+)", plan) == ["job_id"]
+
+
 def test_detect_host_skew(spark):
     from anycrawl_spark.operators.gates import detect_host_skew
 

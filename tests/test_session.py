@@ -2,12 +2,13 @@
 installs (``worker_daemon``)."""
 
 import importlib
+import os
 import sys
 import zipfile
 import zipimport
 
 from anycrawl_spark import worker_daemon
-from anycrawl_spark.session import default_driver_memory
+from anycrawl_spark.session import default_cores, default_driver_memory
 
 GiB = 1 << 30
 
@@ -25,6 +26,18 @@ def test_default_driver_memory_floor():
 def test_default_driver_memory_reads_this_machine():
     got = default_driver_memory()
     assert got.endswith("m") and int(got[:-1]) >= 1024
+
+
+def test_default_cores_follow_cpu_affinity(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    assert default_cores() == 3
+
+
+def test_default_cores_env_override(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    assert default_cores() == 6
 
 
 def _write_archive(path, modules):
