@@ -79,13 +79,17 @@ def dsir_log_ratios(
     target_counts: DataFrame, raw_counts: DataFrame, buckets: int = 4096
 ) -> DataFrame:
     """(bucket, logr_micro): round(1e6 * log((t_b+1)/(T+B) / ((r_b+1)/(R+B))))
-    with add-one smoothing over the full bucket space. O(buckets) rows —
-    broadcast it. The micro-int rounding is what makes every downstream
-    weight an exact integer."""
+    with add-one smoothing over the full bucket space: one row for every
+    bucket in [0, B), so a bucket seen in neither fit carries the smoothed
+    log((R+B)/(T+B)) instead of dropping out of ``dsir_weights``' join.
+    Exactly ``buckets`` rows — broadcast it. The micro-int rounding is
+    what makes every downstream weight an exact integer."""
     t = target_counts.select(F.col("bucket"), F.col("n").alias("t_n"))
     r = raw_counts.select(F.col("bucket"), F.col("n").alias("r_n"))
+    every = target_counts.sparkSession.range(buckets).withColumnRenamed("id", "bucket")
     full = (
-        t.join(r, "bucket", "full")
+        every.join(t, "bucket", "left")
+        .join(r, "bucket", "left")
         .select(
             "bucket",
             F.coalesce("t_n", F.lit(0)).alias("t_n"),

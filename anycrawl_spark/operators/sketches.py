@@ -17,8 +17,10 @@ progress tables and merged later with plain DataFrame code.
 Determinism/oracle: the hash is the first 15 hex digits of md5 (60 bits
 — the same convention as ``dedup.simhash_md5``), so DuckDB computes
 IDENTICAL registers (q_hll_hosts). The estimator's harmonic sum is kept
-EXACT in integer space: sum(2^-M_j) = S / 2^55 with S = sum(2^(55-M_j))
-a bigint — no float-accumulation-order divergence between engines; the
+EXACT in integer space: sum(2^-M_j) = S / 2^(w+1) with S = sum(2^(w+1-M_j))
+a bigint (w = 60-p hash bits below the index, so every term, including
+M_j = w+1 for an all-zero w, is a whole number and S < 2^62) — no
+float-accumulation-order divergence between engines; the
 only float ops are one division and (in the small-range branch) one log,
 identical IEEE semantics on both sides.
 
@@ -125,16 +127,17 @@ def hll_estimate(registers, p: int = 6):
     exact integer space (S = sum 2^(55-M_j), a bigint), then ONE double
     division; linear-counting small-range correction per the paper."""
     m = 1 << p
-    w_bits = HASH_BITS - p
-    # exact: sum(2^-M_j) == S / 2^w_bits
-    # 2^(w_bits - r) is exact in double up to 2^54, so pow+cast is an exact
-    # bigint term (shiftleft's numBits arg is python-int-only, not a column)
+    # exact: sum(2^-M_j) == S / 2^scale, scale one bit above the largest
+    # register (w_bits + 1) so each term 2^(scale - r) is a whole number;
+    # powers of two are exact in double, so pow+cast is an exact bigint
+    # term (shiftleft's numBits arg is python-int-only, not a column)
+    scale = HASH_BITS - p + 1
     s_int = F.aggregate(
         registers,
         F.lit(0).cast("long"),
-        lambda acc, r: acc + F.pow(F.lit(2.0), F.lit(w_bits) - r).cast("long"),
+        lambda acc, r: acc + F.pow(F.lit(2.0), F.lit(scale) - r).cast("long"),
     )
-    raw = F.lit(float(_alpha(m) * m * m * (1 << w_bits))) / s_int.cast("double")
+    raw = F.lit(float(_alpha(m) * m * m * (1 << scale))) / s_int.cast("double")
     v = F.size(F.filter(registers, lambda r: r == 0))
     linear = F.lit(float(m)) * F.log(F.lit(float(m)) / v.cast("double"))
     return F.when((v > 0) & (raw <= 2.5 * m), linear).otherwise(raw)
@@ -169,8 +172,9 @@ def py_hll(values, p: int = 6):
         w = h & ((1 << w_bits) - 1)
         rho = (w_bits + 1) if w == 0 else (w_bits + 1 - w.bit_length())
         regs[idx] = max(regs[idx], rho)
-    s_int = sum(1 << (w_bits - r) for r in regs)
-    raw = (_alpha(m) * m * m * (1 << w_bits)) / s_int
+    scale = w_bits + 1
+    s_int = sum(1 << (scale - r) for r in regs)
+    raw = (_alpha(m) * m * m * (1 << scale)) / s_int
     v = regs.count(0)
     est = m * math.log(m / v) if v > 0 and raw <= 2.5 * m else raw
     return regs, est

@@ -2797,7 +2797,7 @@ def q_hll_hosts(spark, sf_dir):
     64-register sketch, next to the exact distinct for accuracy reading.
     The hash is the repo's 60-bit md5 convention so DuckDB rebuilds the
     IDENTICAL registers; the harmonic sum is carried as an exact bigint
-    (S = sum 2^(54-M_j)) so no float-accumulation order can diverge
+    (S = sum 2^(55-M_j)) so no float-accumulation order can diverge
     between engines — the only floats are one division and the
     small-range log, rounded to 4."""
     from anycrawl_spark.operators.sketches import hll_cardinality
@@ -3228,7 +3228,8 @@ def _sql_hll_hosts() -> str:
         for d in range(1, 16)
     )
     mask = (1 << 54) - 1
-    c = repr(0.709 * 64 * 64 * float(1 << 54))  # same literal as the Spark side
+    # harmonic sum scaled by 2^55, one bit above the largest register (55)
+    c = repr(0.709 * 64 * 64 * float(1 << 55))  # same literal as the Spark side
     return f"""
 WITH h AS (
   SELECT event_type, CAST({h60} AS BIGINT) AS h FROM events),
@@ -3242,8 +3243,8 @@ agg AS (
   SELECT event_type,
          CAST(64 - count(*) AS BIGINT) AS n_zero_registers,
          CAST(sum(rho) AS BIGINT) AS register_sum,
-         CAST(sum(CAST(power(2.0, 54 - rho) AS BIGINT)) AS BIGINT)
-           + CAST(64 - count(*) AS BIGINT) * {1 << 54} AS s_int
+         CAST(sum(CAST(power(2.0, 55 - rho) AS BIGINT)) AS BIGINT)
+           + CAST(64 - count(*) AS BIGINT) * {1 << 55} AS s_int
   FROM mx GROUP BY 1),
 est AS (
   SELECT event_type, n_zero_registers, register_sum,

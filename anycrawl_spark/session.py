@@ -17,6 +17,13 @@ Scale rationale (100 TB / 1000-executor target):
   gets the directory holding this package, so the daemon runs the code the
   driver imports. spark-submit sessions keep the stock daemon unless given
   the same two settings (docs/SCALE.md "Python workers").
+- Driver JIT: C2 promotion thresholds raised ×C2_THRESHOLD_SCALE over
+  HotSpot's defaults. A small round runs its planning code (Catalyst
+  rules, the planner, generated classes over a few dozen rows) a few
+  thousand times; at the default thresholds C2 compiled it anyway and
+  burned more CPU than the tasks it served. Per-row loops over millions
+  of rows still reach C2, so a large pass keeps its steady speed (C1-only
+  would double it). See docs/SCALE.md "JIT tier".
 """
 
 from __future__ import annotations
@@ -28,6 +35,23 @@ from pyspark.sql import SparkSession
 # generated-code cache entries (static conf, read once per JVM): well above
 # the ~86 distinct classes a crawl round compiles
 CODEGEN_CACHE_ENTRIES = 2000
+
+# HotSpot's C2 (tier 4) promotion thresholds, JDK 17 defaults, and the
+# factor the driver raises them by (docs/SCALE.md "JIT tier")
+C2_THRESHOLD_DEFAULTS = {
+    "Tier4InvocationThreshold": 5000,
+    "Tier4MinInvocationThreshold": 600,
+    "Tier4CompileThreshold": 15000,
+    "Tier4BackEdgeThreshold": 40000,
+}
+C2_THRESHOLD_SCALE = 5
+DRIVER_JAVA_OPTIONS = " ".join(
+    # G1 (default) collapses under 32 allocation-heavy threads in one JVM
+    # (measured: 2x slower at local[32] than local[8]); throughput GC
+    # restores near-linear scaling for codegen'd string/row allocation
+    ["-XX:+UseParallelGC"]
+    + [f"-XX:{k}={v * C2_THRESHOLD_SCALE}" for k, v in C2_THRESHOLD_DEFAULTS.items()]
+)
 
 # directory holding the anycrawl_spark package the driver imports
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -65,13 +89,12 @@ def get_spark(
     app_name: str = "anycrawl_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
         cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = cores
-    builder = (
+    spark = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -88,10 +111,9 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.python.daemon.module", "anycrawl_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
-        # G1 (default) collapses under 32 allocation-heavy threads in one JVM
-        # (measured: 2x slower at local[32] than local[8]); throughput GC
-        # restores near-linear scaling for codegen'd string/row allocation
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
+        # read only when the gateway JVM launches: a session restarted in
+        # the same Python process keeps the flags it started with
+        .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
         # shuffle files on tmpfs: local-mode shuffles are disk round-trips on
         # the driver host; with 126G of tmpfs there is no reason to thrash the
         # block device (32 concurrent shuffle writers anti-scale on one disk)
@@ -104,9 +126,7 @@ def get_spark(
         # (jobs, robots, locales) are explicitly hinted with F.broadcast
         .config("spark.sql.autoBroadcastJoinThreshold", str(8 * 1024 * 1024))
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", str(8 * 1024 * 1024))
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark

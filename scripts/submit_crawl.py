@@ -19,6 +19,19 @@ The two last ``--conf`` lines fork Python workers warm (docs/SCALE.md
 package on the executors' PYTHONPATH: ``--py-files`` is added per task,
 too late for it. Leave both out to keep pyspark's stock daemon.
 
+Optionally, the driver JIT setting ``get_spark`` uses locally (C2
+promotion thresholds raised ×5, docs/SCALE.md "JIT tier") can be given
+to the driver and the executors:
+
+      --conf "spark.driver.extraJavaOptions=-XX:+UseParallelGC \
+        -XX:Tier4InvocationThreshold=25000 -XX:Tier4MinInvocationThreshold=3000 \
+        -XX:Tier4CompileThreshold=75000 -XX:Tier4BackEdgeThreshold=200000" \
+      --conf "spark.executor.extraJavaOptions=<the same flags>"
+
+It was measured only on a local[4] driver, not on a cluster: long-lived
+executors that run the same operators every round may be better served by
+HotSpot's defaults.
+
 Local smoke (same file): ``python scripts/submit_crawl.py --local``.
 """
 

@@ -113,6 +113,29 @@ def test_smoothing_keeps_unseen_buckets_finite(spark):
     assert all(abs(r.logr_micro) < 20_000_000 for r in ratios)
 
 
+def test_bucket_absent_from_both_fits_gets_smoothed_ratio(spark):
+    """A doc scored against stored ratios may hash into a bucket neither
+    fit saw: it weighs round(1e6 * log((R+B)/(T+B))) per feature, the
+    add-one smoothed ratio of an unseen bucket, and is not dropped."""
+    d = _df(spark)
+    target = d.filter(F.col("doc_id").isin(list(TARGET_IDS)))
+    ratios = dsir_log_ratios(
+        hashed_feature_counts(target, B), hashed_feature_counts(d, B), B
+    )
+    assert ratios.count() == B
+    seen = {_bucket(bg) for text in CORPUS.values() for bg in _bigrams(text)}
+    novel = next(
+        f"zz{i} yy{i}" for i in range(10_000) if _bucket(f"zz{i} yy{i}") not in seen
+    )
+    T = sum(len(_bigrams(CORPUS[i])) for i in TARGET_IDS)
+    R = sum(len(_bigrams(text)) for text in CORPUS.values())
+    new_doc = spark.createDataFrame([(99, novel)], "doc_id: long, text: string")
+    row = dsir_weights(new_doc, ratios, B).collect()
+    assert [(r.doc_id, r.n_features, r.weight_micro) for r in row] == [
+        (99, 1, _round_half_away((math.log(1 / (T + B)) - math.log(1 / (R + B))) * 1_000_000))
+    ]
+
+
 def test_weights_invariant_under_repartition(spark):
     """Integer dot products: identical output at any parallelism."""
     base = {r.doc_id: r.weight_micro for r in _pipeline(spark).collect()}

@@ -1,5 +1,5 @@
-"""session.get_spark: its memory default and the warm worker daemon it
-installs (``worker_daemon``)."""
+"""session.get_spark: its memory default, the driver JVM's flags and the
+warm worker daemon it installs (``worker_daemon``)."""
 
 import importlib
 import os
@@ -8,7 +8,12 @@ import zipfile
 import zipimport
 
 from anycrawl_spark import worker_daemon
-from anycrawl_spark.session import default_cores, default_driver_memory
+from anycrawl_spark.session import (
+    C2_THRESHOLD_DEFAULTS,
+    C2_THRESHOLD_SCALE,
+    default_cores,
+    default_driver_memory,
+)
 
 GiB = 1 << 30
 
@@ -38,6 +43,24 @@ def test_default_cores_follow_cpu_affinity(monkeypatch):
 def test_default_cores_env_override(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
     assert default_cores() == 6
+
+
+def test_driver_jvm_runs_with_engine_flags(spark):
+    """The live driver JVM has the raised C2 thresholds, keeps C2 (tier 4:
+    C1-only doubles a large pass's CPU, docs/SCALE.md "JIT tier") and runs
+    the throughput GC."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+
+    def flag(name):
+        return bean.getVMOption(name).getValue()
+
+    assert C2_THRESHOLD_SCALE > 1
+    for name, default in C2_THRESHOLD_DEFAULTS.items():
+        assert int(flag(name)) == default * C2_THRESHOLD_SCALE, name
+    assert flag("TieredStopAtLevel") == "4"
+    assert flag("UseParallelGC") == "true"
 
 
 def _write_archive(path, modules):

@@ -79,3 +79,35 @@ def test_bad_precision_raises(spark):
     df = spark.createDataFrame([("a", "g")], "val: string, g: string")
     with pytest.raises(ValueError, match="p must be"):
         hll_sketch(df, ["g"], "val", p=2).collect()
+
+
+def test_all_zero_low_bits_agree_with_python_mirror(spark, monkeypatch):
+    """A hash whose 54 bits below the index are all zero gives the largest
+    register (55 at p=6). Both paths must take it into the exact harmonic
+    sum: the hash is swapped for the value itself on both sides (the
+    module's md5 for the mirror, its 60-bit hash column for Spark)."""
+    from types import SimpleNamespace
+
+    from anycrawl_spark.operators import sketches
+
+    class _Digest:
+        def __init__(self, data: bytes):
+            self._h = int(data.decode())
+
+        def hexdigest(self) -> str:
+            return f"{self._h:015x}" + "0" * 17
+
+    monkeypatch.setattr(sketches, "hashlib", SimpleNamespace(md5=_Digest))
+    monkeypatch.setattr(sketches, "_hash60", lambda col: col.cast("long"))
+    w_bits = sketches.HASH_BITS - 6
+    # w == 0 on indexes 0..7 (beside an ordinary hash), ordinary hashes
+    # on the other indexes
+    vals = [i << w_bits for i in range(8)] + [(i << w_bits) | (i + 1) for i in range(64)]
+    regs, est = py_hll(vals, p=6)
+    assert regs[:8] == [w_bits + 1] * 8
+    assert regs[8:] == [w_bits + 1 - (i + 1).bit_length() for i in range(8, 64)]
+    df = spark.createDataFrame([(v, "a") for v in vals], "val: long, g: string")
+    row = hll_sketch(df, ["g"], "val", p=6).collect()[0]
+    assert list(row.registers) == regs
+    out = hll_cardinality(df, ["g"], "val", p=6).collect()[0]
+    assert out.estimate == pytest.approx(round(est, 4))
