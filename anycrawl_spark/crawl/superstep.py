@@ -27,8 +27,8 @@ Scale design (explicit, per north_rule):
   independent, so spreading a mega-host across partitions is free. The
   politeness window partitions by (job, host) — over the closure regime's
   job_id-repartitioned input or the dim regime's host-partitioned join —
-  and past the skew threshold a salted pre-cap bounds a mega-host's
-  politeness partition; the windows are rank-then-filter (no buffering of a
+  and the budget window by job, so a round's largest sort holds the largest
+  job's pending rows; the windows are rank-then-filter (no buffering of a
   full partition in Python).
 - Determinism: every ordering is an explicit sort key (depth, discovery_seq,
   link ordinal) — never partition iteration order. Same seeds => same crawl,
@@ -48,10 +48,8 @@ from pyspark.sql import types as T
 from anycrawl_spark import synth
 from anycrawl_spark.crawl.params import CrawlParams, is_retryable_col
 from anycrawl_spark.operators.gates import (
-    AUTO_SKEW_THRESHOLD_ROWS,
     ROBOTS_DIM_THRESHOLD_HOSTS,
     apply_robots_dim,
-    detect_host_skew,
     dim_tokens_expr,
     flag_schedule,
     make_candidate_gate,
@@ -80,8 +78,6 @@ class CrawlEngine:
         web: synth.WebConfig = synth.DEFAULT_WEB,
         num_buckets: int = 32,
         fetch_partitions: int | None = None,
-        two_phase_politeness: bool | str = "auto",
-        auto_skew_threshold: int | None = None,
         shard_refresh_rounds: int = 8,
         tiered_proxies: list[list[str]] | None = None,
         proxy_rules: list | None = None,
@@ -97,20 +93,6 @@ class CrawlEngine:
         self.num_buckets = num_buckets
         self.fetch_partitions = fetch_partitions or int(
             spark.conf.get("spark.sql.shuffle.partitions")
-        )
-        # False = exact window, True = salted two-phase, "auto" (default) =
-        # per-round skew detection (free while the crawl is small: the
-        # driver-tracked enqueued total bounds every host partition)
-        if two_phase_politeness not in (True, False, "auto"):
-            raise ValueError(
-                "two_phase_politeness must be True, False or 'auto' "
-                f"(got {two_phase_politeness!r}); any other string would "
-                "silently coerce truthy"
-            )
-        self.two_phase_politeness = two_phase_politeness
-        self.auto_skew_threshold = (
-            auto_skew_threshold if auto_skew_threshold is not None
-            else AUTO_SKEW_THRESHOLD_ROWS
         )
         # small driver-side policy state (broadcast-sized; jobs dim, J3).
         # Rows marked wildcard=True (from functions/robots.py
@@ -357,6 +339,10 @@ class CrawlEngine:
         # reads executor-local blocks. Production (Iceberg) reads the shard
         # table fresh per round, which is the same leaf-plan property.
         new_state = merged.localCheckpoint(eager=True)
+        if self._shards is not None and self._shards.is_cached:
+            # the state resume() loaded and persisted: nothing reads it once
+            # the first merge after resume is checkpointed
+            self._shards.unpersist()
         delta = new_state.filter(F.col("updated"))
         # the merge updates one generation per dirty bucket
         self.store.append(
@@ -479,21 +465,6 @@ class CrawlEngine:
                 break
             self.run_round(r)
 
-    def _politeness_two_phase(self, frontier: DataFrame) -> bool:
-        """Resolve the per-round politeness strategy. ``auto`` costs nothing
-        while the crawl is small: the driver-tracked total-enqueued counter
-        upper-bounds every (job, host) pending partition, so the sampled
-        detection job only ever runs once the crawl could actually be
-        skewed past the window-sort crossover."""
-        mode = self.two_phase_politeness
-        if mode != "auto":
-            return bool(mode)
-        return detect_host_skew(
-            frontier,
-            threshold_rows=self.auto_skew_threshold,
-            upper_bound=sum(self.enqueued.values()),
-        )
-
     def run_round(self, rnd: int) -> dict:
         frontier = self.store.read("frontier")  # pending rows only
         active = [j["job_id"] for j in self.jobs if j["job_id"] not in self.finalized]
@@ -503,19 +474,16 @@ class CrawlEngine:
         # Flag-based scheduling (gates.flag_schedule): politeness then budget
         # windows mark ``_sched``; deferred rows stay pending unchanged.
         t0 = time.perf_counter()
-        use_two_phase = self._politeness_two_phase(frontier)
         if self.robots_dim is not None:
             # dim regime: crawl-delays resolve via the host-keyed dim join,
             # whose HashPartitioning(host) the politeness window reuses.
             sched_input = with_dim_delays(frontier, self.robots_dim)
             host_tokens = dim_tokens_expr(self.params)
         else:
-            # exact path: one job_id exchange serves both windows
-            sched_input = frontier if use_two_phase else frontier.repartition("job_id")
+            # closure regime: one job_id exchange serves both windows
+            sched_input = frontier.repartition("job_id")
             host_tokens = tokens_expr(self.host_delays, self.params)
-        flagged = flag_schedule(
-            sched_input, rnd, active, remaining, host_tokens, two_phase=use_two_phase
-        ).persist()
+        flagged = flag_schedule(sched_input, rnd, active, remaining, host_tokens).persist()
         frontier_cols = [f.name for f in FRONTIER.fields]
         sched = flagged.filter(F.col("_sched")).select(*frontier_cols)
         # deferred + eligible-but-capped rows stay pending unchanged
@@ -867,7 +835,6 @@ class CrawlEngine:
             # per-round wall: the soak-flatness evidence (round cost must not
             # grow with lifetime |seen|/frontier size)
             "wall_sec": round(t_final - t0, 2),
-            "politeness": "two_phase" if use_two_phase else "exact",
         }
         self.round_stats.append(stats)
         flagged.unpersist()

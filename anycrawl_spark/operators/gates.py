@@ -74,114 +74,12 @@ def apply_politeness(pending: DataFrame, host_delays: dict[str, int], params: Cr
     )
 
 
-def apply_politeness_two_phase(
-    pending: DataFrame,
-    host_delays: dict[str, int],
-    params: CrawlParams,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Skew-proof politeness: salted local top-k, then exact window.
-
-    A mega-host with millions of pending rows serializes the (job, host)
-    window partition (AQE skew handling covers joins, not windows — SURVEY
-    §4.2.2). Two phases, provably equivalent to ``apply_politeness``:
-
-    1. salt = pmod(url_hash, S): rank within (job, host, salt) and keep the
-       local top-``tokens`` — the global top-``tokens`` rows of a host are
-       distributed across salts, so each salt's local top-``tokens`` is a
-       superset of its share of the global winners (the survivor set is
-       <= S x tokens rows per host, regardless of host size).
-    2. exact (job, host) window over survivors — now bounded per host.
-    """
-    tokens = tokens_expr(host_delays, params)
-    w_salt = Window.partitionBy(
-        "job_id", "host", F.pmod(F.col("url_hash"), F.lit(salt_buckets))
-    ).orderBy(*_SCHED_ORDER)
-    survivors = (
-        pending.withColumn("_salt_rank", F.row_number().over(w_salt))
-        .filter(F.col("_salt_rank") <= tokens)
-        .drop("_salt_rank")
-    )
-    w = Window.partitionBy("job_id", "host").orderBy(*_SCHED_ORDER)
-    return (
-        survivors.withColumn("_host_rank", F.row_number().over(w))
-        .filter(F.col("_host_rank") <= tokens)
-        .drop("_host_rank")
-    )
-
-
-# ~10M rows per (job, host) partition is where the exact window lost to the
-# salted pre-cap on a 32-core box (BENCH/last_run_detail.json
-# politeness_skew). That plan partitioned the exact window by (job, host);
-# the closure regime's now runs over a job_id partition, so the threshold is
-# unmeasured for the current plan (see ROADMAP).
-AUTO_SKEW_THRESHOLD_ROWS = 10_000_000
-AUTO_SKEW_SAMPLE_MOD = 64
-
-
-def detect_host_skew(
-    pending: DataFrame,
-    threshold_rows: int = AUTO_SKEW_THRESHOLD_ROWS,
-    sample_mod: int = AUTO_SKEW_SAMPLE_MOD,
-    upper_bound: int | None = None,
-) -> bool:
-    """True when some (job_id, host) pending partition is estimated to hold
-    >= ``threshold_rows`` rows — the shape where the exact politeness window
-    serializes into one giant sort task.
-
-    Cost discipline for a per-round check at 10^10-frontier scale:
-    - ``upper_bound`` (e.g. the driver-tracked total-enqueued counter, which
-      bounds every pending partition from above) short-circuits to False
-      without ANY Spark action — the common small-crawl case pays nothing.
-    - Otherwise a deterministic 1/``sample_mod`` hash sample (pmod on
-      url_hash) feeds a count-by-(job, host): map-side partial aggregation
-      means the shuffle carries one small count row per (host, partition),
-      never data rows, and the sample keeps even that tiny. At the only
-      scale that matters (a host near threshold_rows has ~threshold/mod
-      sampled rows) the estimate concentrates tightly.
-    """
-    if upper_bound is not None and upper_bound < threshold_rows:
-        return False
-    row = skew_sample_counts(pending, sample_mod).agg(F.max("count")).first()
-    return int(row[0] or 0) * sample_mod >= threshold_rows
-
-
-def skew_sample_counts(pending: DataFrame, sample_mod: int) -> DataFrame:
-    """The detector's sampled per-(job, host) count pipeline — factored out
-    so the plan audit (scripts/explain_plans.py check 12) inspects the
-    OPERATOR's own plan, not a hand-rebuilt copy."""
-    df = pending
-    if sample_mod > 1:
-        df = df.filter(F.pmod(F.col("url_hash"), F.lit(sample_mod)) == 0)
-    return df.groupBy("job_id", "host").count()
-
-
-def apply_politeness_auto(
-    pending: DataFrame,
-    host_delays: dict[str, int],
-    params: CrawlParams,
-    threshold_rows: int = AUTO_SKEW_THRESHOLD_ROWS,
-    sample_mod: int = AUTO_SKEW_SAMPLE_MOD,
-    upper_bound: int | None = None,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Pick exact vs two-phase politeness per input by detected skew.
-
-    Both paths are provably output-equivalent (tests/test_gates.py), so the
-    detection threshold affects ONLY the physical plan: exact (one window
-    shuffle) below the crossover, salted two-phase above it."""
-    if detect_host_skew(pending, threshold_rows, sample_mod, upper_bound):
-        return apply_politeness_two_phase(pending, host_delays, params, salt_buckets)
-    return apply_politeness(pending, host_delays, params)
-
-
 def flag_schedule(
     pending: DataFrame,
     rnd: int,
     active: list[str],
     remaining: dict[str, int],
     host_tokens,
-    two_phase: bool = False,
 ) -> DataFrame:
     """A crawl round's scheduling pass: one pass, two windows, zero
     self-joins. Every row keeps its columns and gains ``_sched``:
@@ -199,9 +97,10 @@ def flag_schedule(
 
     Input partitioned by job_id (or by host, for the politeness window)
     is reused: over a job_id-partitioned input both windows share that one
-    exchange. ``two_phase`` adds the salted pre-cap, which bounds a
-    mega-host's window partition to 16 x tokens survivors
-    (§4.2 skew; equivalence with the exact window in tests/test_gates.py).
+    exchange. Rows are flagged, never dropped, so the budget window sorts
+    every pending row of a job in one task: the largest job's pending rows
+    bound the pass's largest sort, and no pre-cap on the (job, host) window
+    can shrink it (docs/SCALE.md "Scheduling windows").
     """
     w_host = Window.partitionBy("job_id", "host").orderBy(
         F.col("_eligible").desc(), *_SCHED_ORDER
@@ -218,14 +117,6 @@ def flag_schedule(
         & (F.col("next_eligible_round") <= rnd)
         & F.col("job_id").isin(active),
     )
-    if two_phase:
-        w_salt = Window.partitionBy(
-            "job_id", "host", F.pmod(F.col("url_hash"), F.lit(16))
-        ).orderBy(F.col("_eligible").desc(), *_SCHED_ORDER)
-        flagged = flagged.withColumn(
-            "_eligible",
-            F.col("_eligible") & (F.row_number().over(w_salt) <= host_tokens),
-        )
     return (
         flagged.withColumn(
             "_host_rank", F.when(F.col("_eligible"), F.row_number().over(w_host))

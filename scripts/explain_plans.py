@@ -548,27 +548,6 @@ def main() -> int:
           "tiered retention is pure JVM window math over the manifest")
     sections.append(("q_retention_plan", p))
 
-    # 12. auto politeness skew detection (r4): the 1/64 hash sample filters
-    #     BEFORE the count shuffle, and the aggregation is two-phase (the
-    #     shuffle carries partial counts, not rows). Audits the OPERATOR's
-    #     own pipeline builder, not a hand-rebuilt copy.
-    from anycrawl_spark.operators.gates import skew_sample_counts
-
-    p = plan_of(skew_sample_counts(pending, 64).agg(F.max("count")))
-
-    def node_no(name: str) -> int:
-        m = re.search(rf"^\((\d+)\) {name}\b", p, re.M)
-        return int(m.group(1)) if m else -1
-
-    check("skew_detection", "partial_count" in p or "partial_max" in p,
-          "two-phase aggregation (map-side partial counts)")
-    # detail sections are numbered leaf-first, so filter-below-shuffle
-    # means the Filter node number is SMALLER than the first Exchange's
-    check("skew_detection",
-          0 < node_no("Filter") < node_no("Exchange"),
-          "sample filter applied below the shuffle")
-    sections.append(("skew_detection", p))
-
     # 13. duplicate-cluster label propagation (r4): one hash-min round —
     #     audits the operator's own _propagate_round (not a hand-copy).
     #     Pure JVM (no python stage), two-phase min (map-side partial),

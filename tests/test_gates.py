@@ -1,4 +1,4 @@
-"""Scheduling gates: politeness variants equivalence + budget window."""
+"""Scheduling gates: the flag pass against the filtering operators, budget window."""
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -18,106 +18,41 @@ def _pending(spark, n=3000, hosts=5):
     )
 
 
-def test_two_phase_politeness_equivalent(spark):
-    from anycrawl_spark.operators.gates import apply_politeness, apply_politeness_two_phase
+def test_flag_schedule_paths_agree_and_windows_reuse_job_id_input(spark):
+    """The flag pass picks exactly what the filtering operators keep:
+    politeness then budget over the eligible rows of the active jobs."""
+    import re
+
+    from anycrawl_spark.operators.gates import (
+        apply_budget, apply_politeness, flag_schedule, tokens_expr,
+    )
 
     params = CrawlParams(default_host_tokens=7)
     delays = {"mega.com": 250}  # 4 tokens
-    df = _pending(spark)
-    a = {(r.job_id, r.url) for r in apply_politeness(df, delays, params).collect()}
-    b = {(r.job_id, r.url) for r in
-         apply_politeness_two_phase(df, delays, params, salt_buckets=8).collect()}
-    assert a == b
-    # cap respected: mega host limited to 4 per job
-    out = apply_politeness(df, delays, params)
-    counts = {(r.job_id, r.host): r.c for r in
-              out.groupBy("job_id", "host").agg(F.count("*").alias("c")).collect()}
-    for (j, h), c in counts.items():
-        assert c <= (4 if h == "mega.com" else 7)
-
-
-def test_flag_schedule_paths_agree_and_windows_reuse_job_id_input(spark):
-    import re
-
-    from anycrawl_spark.operators.gates import flag_schedule, tokens_expr
-
-    params = CrawlParams(default_host_tokens=7)
+    active = ["job-0", "job-1"]
+    remaining = {"job-0": 20, "job-1": 2000}
     df = _pending(spark).withColumns({
         "status": F.lit("pending"),
         # every 5th row is still backing off; job-2 is not active
         "next_eligible_round": F.when(F.col("discovery_seq") % 5 == 0, 3).otherwise(0),
     })
-    args = (1, ["job-0", "job-1"], {"job-0": 20, "job-1": 2000},
-            tokens_expr({"mega.com": 250}, params))
-    # the closure regime's exact path: input repartitioned by job_id
-    exact = flag_schedule(df.repartition("job_id"), *args)
-    picked = {(r.job_id, r.url) for r in exact.filter("_sched").collect()}
-    assert picked == {(r.job_id, r.url) for r in
-                      flag_schedule(df, *args, two_phase=True).filter("_sched").collect()}
+    # the closure regime's plan: input repartitioned by job_id
+    flagged = flag_schedule(
+        df.repartition("job_id"), 1, active, remaining, tokens_expr(delays, params)
+    )
+    picked = {(r.job_id, r.url) for r in flagged.filter("_sched").collect()}
+    eligible = df.filter((F.col("next_eligible_round") <= 1) & F.col("job_id").isin(active))
+    oracle = apply_budget(apply_politeness(eligible, delays, params), remaining)
+    assert picked == {(r.job_id, r.url) for r in oracle.collect()}
     assert {j for j, _ in picked} == {"job-0", "job-1"}
     assert sum(j == "job-0" for j, _ in picked) == 20
-    plan = exact._jdf.queryExecution().executedPlan().toString()
+    # cap respected: the mega host gets at most its 4 tokens per job
+    mega = [j for j, u in picked if u.startswith("http://mega.com/")]
+    assert mega and all(mega.count(j) <= 4 for j in active)
+    plan = flagged._jdf.queryExecution().executedPlan().toString()
     # both windows reuse the input's job_id exchange
     assert re.findall(r"Exchange hashpartitioning\((\w+)", plan) == ["job_id"]
-
-
-def test_detect_host_skew(spark):
-    from anycrawl_spark.operators.gates import detect_host_skew
-
-    df = _pending(spark)  # mega.com holds 60% of 3000 rows, 600/job
-    # sample_mod=1 = exact counts: 600-row max partition
-    assert detect_host_skew(df, threshold_rows=500, sample_mod=1)
-    assert not detect_host_skew(df, threshold_rows=700, sample_mod=1)
-    # hash-sampled estimate lands near the exact count (deterministic)
-    assert detect_host_skew(df, threshold_rows=300, sample_mod=8)
-    assert not detect_host_skew(df, threshold_rows=3000, sample_mod=8)
-    # the driver-side upper bound short-circuits without a Spark action
-    assert not detect_host_skew(df, threshold_rows=500, sample_mod=1,
-                                upper_bound=499)
-    assert detect_host_skew(df, threshold_rows=500, sample_mod=1,
-                            upper_bound=3000)
-
-
-def test_auto_politeness_matches_both_paths(spark):
-    from anycrawl_spark.operators.gates import (
-        apply_politeness, apply_politeness_auto,
-    )
-
-    params = CrawlParams(default_host_tokens=7)
-    delays = {"mega.com": 250}
-    df = _pending(spark)
-    exact = {(r.job_id, r.url) for r in apply_politeness(df, delays, params).collect()}
-    # low threshold -> detector engages two-phase; output must be identical
-    two = {(r.job_id, r.url) for r in
-           apply_politeness_auto(df, delays, params, threshold_rows=100,
-                                 sample_mod=1).collect()}
-    # high threshold -> detector stays exact
-    one = {(r.job_id, r.url) for r in
-           apply_politeness_auto(df, delays, params, threshold_rows=10**9,
-                                 sample_mod=1).collect()}
-    assert exact == two == one
-
-
-def test_engine_auto_politeness_parity(spark, tmp_path):
-    """Engine in auto mode with a forced-low threshold (two-phase engages
-    whenever the sampled detector sees any row) stays byte-equal to the
-    reference simulator — the strategy switch is physical-plan-only."""
-    from anycrawl_spark import synth
-    from anycrawl_spark.crawl.simulator import ReferenceSimulator
-    from anycrawl_spark.crawl.superstep import CrawlEngine
-
-    jobs = [dict(synth.seed_jobs(1)[0], limit=20)]
-    eng = CrawlEngine(
-        spark, str(tmp_path / "auto"), jobs, synth.robots_rules(),
-        CrawlParams(), num_buckets=4,
-        two_phase_politeness="auto", auto_skew_threshold=1,
-    )
-    eng.init_state(); eng.run()
-    sim = ReferenceSimulator(jobs, synth.robots_rules(), CrawlParams())
-    sim.run()
-    assert eng.seen_sets() == sim.seen_sets()
-    assert eng.terminal_status() == sim.terminal_status()
-    assert all(s["politeness"] in ("exact", "two_phase") for s in eng.round_stats)
+    assert len(re.findall(r"\bWindow \[", plan)) == 2
 
 
 def test_budget_window(spark):

@@ -47,6 +47,29 @@ def test_resume_identical_final_state(spark, tmp_path):
     shutil.rmtree(wd_part, ignore_errors=True)
 
 
+def test_resume_releases_loaded_shard_state(spark, tmp_path):
+    """resume() persists the shard state it rebuilds from the snapshot and
+    the replayed deltas; once the next round's merge is checkpointed that
+    copy is unread and must leave the CacheManager."""
+    from pyspark.storagelevel import StorageLevel
+
+    jobs = [dict(synth.seed_jobs(1)[0], limit=10)]
+    robots = synth.robots_rules()
+    wd = str(tmp_path / "wd")
+    eng = CrawlEngine(spark, wd, jobs, robots, CrawlParams(), num_buckets=4)
+    eng.init_state()
+    eng.run(max_rounds=2)
+    del eng
+
+    resumed = CrawlEngine(spark, wd, jobs, robots, CrawlParams(), num_buckets=4)
+    nxt = resumed.resume()
+    loaded = resumed._shards
+    assert loaded.storageLevel != StorageLevel.NONE
+    resumed.run_round(nxt)
+    assert loaded.storageLevel == StorageLevel.NONE
+    shutil.rmtree(wd, ignore_errors=True)
+
+
 class _InjectedCrash(RuntimeError):
     pass
 
