@@ -33,12 +33,18 @@ Scale design (explicit, per north_rule):
 - Determinism: every ordering is an explicit sort key (depth, discovery_seq,
   link ordinal) — never partition iteration order. Same seeds => same crawl,
   byte-identical tables, which the parity + resume tests assert.
+- Static round plans: a round is planned without AQE, its shuffles sized
+  from the driver's row bound (``static_plan``). AQE would replan a 30-row
+  round stage by stage, one Spark job per shuffle stage; the driver already
+  knows how many rows the round can move (docs/SCALE.md "Static round
+  plans"). Everything outside ``run_round`` keeps the session's AQE.
 """
 
 from __future__ import annotations
 
 import time
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -66,8 +72,52 @@ from anycrawl_spark.functions.urls import canonicalize_url, url_host
 from anycrawl_spark.schemas import FRONTIER, JOBS, PROGRESS, WEBHOOK_EVENTS
 from anycrawl_spark.storage import SnapshotStore, driver_rows, files_for
 
+AQE = "spark.sql.adaptive.enabled"
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+# rows per shuffle partition in a statically planned round (the round's rows
+# are narrow: keys, a URL, a few ints): a round of a few thousand rows runs
+# each shuffle as one task, and a round at volume keeps the session's count
+ROUND_ROWS_PER_PARTITION = 1 << 16
+
+
+def round_partitions(rows: int, session_partitions: int) -> int:
+    """Shuffle partitions for a round whose exchanges read at most ``rows``
+    rows each: ROUND_ROWS_PER_PARTITION rows apiece, never more than the
+    session's count and at least one."""
+    return max(1, min(session_partitions, -(-rows // ROUND_ROWS_PER_PARTITION)))
+
+
+@contextmanager
+def static_plan(spark: SparkSession, rows: int):
+    """Plan and run the body without AQE, at ``round_partitions(rows)``
+    shuffle partitions. Both confs are the session's runtime SQL confs: they
+    read as before once the body returns or raises, and anything the
+    session plans meanwhile, on any thread, is planned the same way."""
+    conf = spark.conf
+    before = {k: conf.get(k) for k in (AQE, SHUFFLE_PARTITIONS)}
+    try:
+        conf.set(AQE, "false")
+        conf.set(
+            SHUFFLE_PARTITIONS,
+            str(round_partitions(rows, int(before[SHUFFLE_PARTITIONS]))),
+        )
+        yield
+    finally:
+        for k, v in before.items():
+            conf.set(k, v)
+
 
 class CrawlEngine:
+    """Frontier-round crawl over a ``SnapshotStore``.
+
+    ``run_round`` plans statically (``static_plan``): while a round runs, the
+    session's ``spark.sql.adaptive.enabled`` is false and its
+    ``spark.sql.shuffle.partitions`` is the round's own count, for every
+    thread of the session, the round's write pool included. Both read as
+    before once the round returns or raises.
+    """
+
     def __init__(
         self,
         spark: SparkSession,
@@ -128,10 +178,13 @@ class CrawlEngine:
         self.robots_rfc_by_host: dict[str, list[tuple[str, str]]] = {}
         self.host_delays: dict[str, int] = {}
         self.robots_dim: DataFrame | None = None
+        self._dim_rows = 0
         if use_dim:
             self.robots_dim = (
                 robots_dim if robots_dim is not None else robots_dim_df(spark, robots)
             ).persist()
+            # the dim joins exchange every dim row each round (round_rows)
+            self._dim_rows = self.robots_dim.count()
             # driver needs rules for seed admission only — O(jobs) rows
             seed_hosts = [
                 h for h in (
@@ -465,7 +518,22 @@ class CrawlEngine:
                 break
             self.run_round(r)
 
+    def round_rows(self) -> int:
+        """Bound on the rows any one exchange of the next round reads: the
+        live jobs' pending rows (scheduling windows), the hrefs their pages
+        can yield (candidate dedup window), every seen key (the exact
+        anti-join's build side) and, in the dim regime, every dim host."""
+        pending = sum(n for j, n in self.pending.items() if j not in self.finalized)
+        return (
+            pending * synth.MAX_PAGE_HREFS + sum(self.enqueued.values())
+            + self._dim_rows
+        )
+
     def run_round(self, rnd: int) -> dict:
+        with static_plan(self.spark, self.round_rows()):
+            return self._run_round(rnd)
+
+    def _run_round(self, rnd: int) -> dict:
         frontier = self.store.read("frontier")  # pending rows only
         active = [j["job_id"] for j in self.jobs if j["job_id"] not in self.finalized]
         remaining = {

@@ -1,11 +1,18 @@
 """SparkSession factory with the AQE/shuffle settings the engine assumes.
 
 Scale rationale (100 TB / 1000-executor target):
-- AQE on: runtime coalescing + skew-join splitting cover the long tail of
-  per-round shuffle imbalance that static planning can't see.
-- shuffle.partitions defaults to the local core count here; on a real cluster
-  this is set to ~2-3x total cores via spark-submit conf (documented in
-  BENCH/BASELINE.md), and AQE coalesces down.
+- AQE on for the session: queries (``queries.py``), operators called on
+  their own and every caller outside a crawl round get runtime coalescing
+  and skew-join splitting over inputs whose sizes the driver does not know.
+- A crawl round is the exception. ``CrawlEngine.run_round`` turns AQE off
+  for its own duration and sets the shuffle partitions from its row bound
+  (``crawl.superstep.static_plan``): the driver knows how many rows a round
+  can move, and AQE would split a 30-row round into one Spark job per
+  shuffle stage (docs/SCALE.md "Static round plans").
+- shuffle.partitions defaults to the local core count here; on a real
+  cluster it is set to ~2-3x total cores via spark-submit conf. AQE
+  coalesces a query's shuffles down from it; a round uses
+  ``round_partitions(rows)``, never more than it.
 - Arrow enabled: every UDF in this engine is a pandas UDF / mapInPandas —
   Arrow batch transfer is the difference between viable and 100x-too-slow.
 - Codegen cache sized to the crawl: one round compiles ~130 classes (~86

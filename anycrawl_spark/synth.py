@@ -85,6 +85,13 @@ def page_latency_ms(url: str) -> int:
     return 20 + _digest("latency", url) % 180
 
 
+# out-links per page before the duplicate; page_hrefs adds the duplicate,
+# the nav link and the linked-image anchor, so a page has at most
+# MAX_PAGE_HREFS hrefs
+MAX_OUT_LINKS = 10
+MAX_PAGE_HREFS = MAX_OUT_LINKS + 3
+
+
 def raw_out_links(url: str, host: str, cfg: WebConfig = DEFAULT_WEB) -> list[str]:
     """The raw hrefs embedded in the page, in DOM order.
 
@@ -96,7 +103,7 @@ def raw_out_links(url: str, host: str, cfg: WebConfig = DEFAULT_WEB) -> list[str
         return []
     d = _digest("fanout", url)
     n_pages = host_pages(host, cfg)
-    fanout = 2 + d % 9
+    fanout = 2 + d % (MAX_OUT_LINKS - 1)
     links: list[str] = []
     for j in range(fanout):
         dj = _digest("link", url, j)

@@ -718,63 +718,9 @@ def main() -> int:
           "dedup rank pushed below the loc shuffle (map-side WindowGroupLimit)")
     sections.append(("q_sitemap_seeds", p))
 
-    # 15. robots dim regime (r5): past ROBOTS_DIM_THRESHOLD_HOSTS the rules
-    #     live ONLY in a host-keyed table — the scheduling stage resolves
-    #     crawl-delays via a shuffle-hash join on host whose partitioning the
-    #     engine's (job_id, host) politeness window REUSES (no extra frontier
-    #     exchange; only the budget window adds a job_id one), the admission
-    #     decision is a co-partitioned SHJ too, and the engine holds no
-    #     driver-side rules dict beyond the seed hosts.
-    from anycrawl_spark import synth
-    from anycrawl_spark.crawl.params import CrawlParams
-    from anycrawl_spark.crawl.superstep import CrawlEngine
-    from anycrawl_spark.operators.gates import (
-        apply_robots_dim, dim_tokens_expr, robots_dim_df, with_dim_delays,
-    )
-    from pyspark.sql import functions as F
-    import tempfile
-
-    robots = synth.robots_rules()
-    dim = robots_dim_df(spark, robots)
-    frontier = spark.range(500).select(
-        F.concat(F.lit("job-"), (F.col("id") % 3).cast("string")).alias("job_id"),
-        F.concat(F.lit("http://h"), (F.col("id") % 50).cast("string"),
-                 F.lit(".example/p/"), F.col("id").cast("string")).alias("url"),
-        F.xxhash64("id").alias("url_hash"),
-        F.concat(F.lit("h"), (F.col("id") % 50).cast("string"),
-                 F.lit(".example")).alias("host"),
-        (F.col("id") % 5).cast("int").alias("depth"),
-        F.col("id").alias("discovery_seq"),
-    )
-    p = plan_of(flag_schedule(
-        with_dim_delays(frontier.withColumns({
-            "status": F.lit("pending"), "next_eligible_round": F.lit(0)}), dim),
-        0, ["job-0", "job-1", "job-2"], {"job-0": 10, "job-1": 10, "job-2": 10},
-        dim_tokens_expr(CrawlParams()),
-    ).filter("_sched"))
-    keys = [x.split(",")[0].split("#")[0]
-            for x in re.findall(r"hashpartitioning\(([^)]*)\)", p)]
-    check("robots_dim_sched", sorted(keys) == ["host", "host", "job_id"],
-          "politeness window reuses the host join; only the budget window "
-          f"adds a job_id exchange (found {keys})")
-    check("robots_dim_sched", "ShuffledHashJoin" in p,
-          "delay join is a co-partitioned shuffle-hash join")
-    p2 = plan_of(apply_robots_dim(frontier, dim))
-    check("robots_dim_admission",
-          "ShuffledHashJoin" in p2 and "Cartesian" not in p2,
-          "admission decision is a co-partitioned SHJ on host, no cartesian")
-    sections.append(("robots_dim_sched", p))
-    with tempfile.TemporaryDirectory() as td:
-        eng = CrawlEngine(
-            spark, td, [dict(synth.seed_jobs(1)[0], limit=5)], robots,
-            CrawlParams(), robots_mode="auto", robots_dim_threshold_hosts=1,
-        )
-        non_seed = {r["host"] for r in robots} - {synth.host_name(0)}
-        held = set(eng.robots_by_host) | set(eng.robots_rfc_by_host)
-        check("robots_dim_driver_state",
-              eng.robots_dim is not None and eng.host_delays == {}
-              and not (held & non_seed),
-              "past the threshold: no driver-side rules/delay dict (seeds only)")
+    # 15. robots dim regime: the engine's dim-regime scheduling and
+    #     admission plans are checked in tier-1, under a round's static plan
+    #     (tests/test_round_plan.py::test_robots_dim_engine_plan_under_static_scope).
 
     spark.stop()
 

@@ -14,6 +14,12 @@ Package + submit:
       --conf spark.executorEnv.PYTHONPATH=<dir holding anycrawl_spark on the executors> \
       scripts/submit_crawl.py --workdir /data/crawl1 --jobs 8 --limit 400
 
+The ``spark.sql.adaptive.*`` confs govern queries and everything else the
+session plans outside a crawl round. ``CrawlEngine.run_round`` plans each
+round without AQE and at ``round_partitions(rows)`` shuffle partitions,
+never more than ``spark.sql.shuffle.partitions`` (docs/SCALE.md "Static
+round plans").
+
 The two last ``--conf`` lines fork Python workers warm (docs/SCALE.md
 "Python workers"). The daemon starts before any task, so it must find the
 package on the executors' PYTHONPATH: ``--py-files`` is added per task,
