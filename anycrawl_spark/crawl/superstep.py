@@ -22,6 +22,12 @@ Scale design (explicit, per north_rule):
   set, and in Iceberg this becomes a MERGE writing only changed files.
 - ``seen`` is append-only keys; dedup runs through sharded blooms
   (operators/seen.py) so the exact anti-join sees only bloom-positives.
+  While the shard blobs fit ``BROADCAST_SHARDS_MAX_BYTES`` they live on the
+  driver (``ShardBroadcast``): a round's fresh keys ride its summary collect
+  and merge there, and the shard log and snapshots are driver writes, so
+  the merge costs no Spark job. Past the cap the state hands off once to a
+  Spark-resident DataFrame merged by cogroup (``merge_bloom_shards``), and
+  the probe follows the regime: broadcast on the driver map, cogroup after.
 - Fetch input is repartitioned by ``xxhash64(url)`` — this IS the salting:
   after the politeness window has enforced per-host caps, fetch rows are
   independent, so spreading a mega-host across partitions is free. The
@@ -46,7 +52,10 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -64,7 +73,7 @@ from anycrawl_spark.operators.gates import (
     with_dim_delays,
 )
 from anycrawl_spark.operators.seen import (
-    BROADCAST_SHARDS_MAX_BYTES, ShardBroadcast, merge_bloom_shards,
+    BROADCAST_SHARDS_MAX_BYTES, SHARD_SCHEMA, ShardBroadcast, merge_bloom_shards,
     probe_seen, split_fresh, with_dedup_key,
 )
 from anycrawl_spark.operators.spans import fetch_extract
@@ -86,6 +95,15 @@ def round_partitions(rows: int, session_partitions: int) -> int:
     rows each: ROUND_ROWS_PER_PARTITION rows apiece, never more than the
     session's count and at least one."""
     return max(1, min(session_partitions, -(-rows // ROUND_ROWS_PER_PARTITION)))
+
+
+def _shard_rows(rows: list[tuple], rnd: int) -> pa.Table:
+    """(bucket, gen, n_keys, bloom) rows stamped with their round, as the
+    ``bloom_shards`` log and the ``bloom_shards_state`` snapshot hold them."""
+    schema = T.StructType(
+        SHARD_SCHEMA.fields + [T.StructField("round", T.IntegerType(), False)]
+    )
+    return driver_rows([(*r, rnd) for r in rows], schema)
 
 
 @contextmanager
@@ -141,9 +159,9 @@ class CrawlEngine:
         self.params = params or CrawlParams()
         self.web = web
         self.num_buckets = num_buckets
-        self.fetch_partitions = fetch_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
+        # caps the fetch repartition, which otherwise takes the round's own
+        # shuffle partitions (static_plan sizes them from the row bound)
+        self.fetch_partitions = fetch_partitions
         # small driver-side policy state (broadcast-sized; jobs dim, J3).
         # Rows marked wildcard=True (from functions/robots.py
         # robots_rows_from_texts — raw robots.txt with */$ patterns) route to
@@ -270,16 +288,19 @@ class CrawlEngine:
         self.pending: dict[str, int] = {}   # frontier pending-row count per job
         self.finalized: set[str] = set()
         self.round_stats: list[dict] = []
-        # incremental bloom-shard state: maintained across rounds (per-round
-        # cost is O(fresh keys + dirtied blobs), never O(|seen|) — see
-        # operators/seen.py merge_bloom_shards). Lineage is reset from a full
-        # parquet snapshot every shard_refresh_rounds to bound plan depth.
+        # Incremental bloom-shard state, in one of two regimes (per-round
+        # cost is O(fresh keys + dirtied blobs) in both, never O(|seen|)):
+        #   broadcast — while its blobs fit BROADCAST_SHARDS_MAX_BYTES the
+        #               driver map (_shard_bc) IS the state: fresh keys merge
+        #               on the driver and the probe reads its broadcast;
+        #   spark     — past the cap, for good: a localCheckpointed DataFrame
+        #               (_shards) merged by merge_bloom_shards, probed by
+        #               cogroup.
+        # Both log each round's updated generations to bloom_shards and
+        # snapshot the full state every shard_refresh_rounds (resume replays
+        # snapshot + later log).
         self._shards = None
         self.shard_refresh_rounds = shard_refresh_rounds
-        # Driver-cached shard broadcast, patched per round from dirty-gen
-        # deltas only (O(dirty blobs) driver traffic, predecessor broadcast
-        # unpersisted+destroyed). Dropped once the shard bytes outgrow the
-        # broadcast cap — the probe then runs co-partitioned (cogroup regime).
         self._shard_bc = ShardBroadcast(spark)
         # S3/F12 retry ladder: attempt-indexed proxy tier stepping
         self.tiered_proxies = tiered_proxies or []
@@ -323,14 +344,9 @@ class CrawlEngine:
             "job_id", F.xxhash64("url").alias("url_hash"), F.lit(-1).alias("first_round")
         )
         self.store.append("seen", seen.coalesce(files_for(len(seen_rows))), round_no=-1)
-        seed_keyed = with_dedup_key(seen, self.num_buckets)
-        seed_dirty = [
-            r.bucket for r in seed_keyed.select("bucket").distinct().collect()
-        ]
-        self._commit_shard_delta(
-            merge_bloom_shards(None, seed_keyed, dirty_buckets=seed_dirty), -1,
-            len(seed_dirty),
-        )
+        # the seed keys merge on the driver, as every round's fresh keys do
+        seed_keys = with_dedup_key(seen, self.num_buckets).select("dedup_hash")
+        self._merge_on_driver(seed_keys.toArrow()["dedup_hash"].to_numpy(), -1)
         jobs_df = self.spark.createDataFrame(
             [tuple(j[f.name] for f in JOBS.fields) for j in self.jobs], JOBS
         )
@@ -356,6 +372,7 @@ class CrawlEngine:
             round_no=-1,
         )
         self.store.commit_round(-1)
+        self._hand_off_past_cap()
 
     def _robots_ok_driver(self, url: str) -> bool:
         from anycrawl_spark.crawl.params import robots_decision, robots_target
@@ -373,50 +390,62 @@ class CrawlEngine:
 
     # ----------------------------------------------------- shard maintenance
 
+    def _merge_on_driver(self, dedup_hash: np.ndarray, rnd: int) -> None:
+        """Broadcast regime: merge the round's fresh keys into the driver map
+        (re-broadcast), append the updated generations to ``bloom_shards``
+        and, every ``shard_refresh_rounds``, snapshot the whole map — all
+        driver writes, no Spark job."""
+        updated = self._shard_bc.merge(dedup_hash, self.num_buckets)
+        self.store.append("bloom_shards", _shard_rows(updated, rnd), round_no=rnd)
+        if (rnd + 1) % self.shard_refresh_rounds == 0:
+            self.store.write(
+                "bloom_shards_state", _shard_rows(self._shard_bc.rows(), rnd)
+            )
+
+    def _hand_off_past_cap(self) -> None:
+        """Once the driver map's blobs pass the broadcast cap, the state
+        moves to Spark for good: the committed state loads as ``resume``
+        loads it, and later rounds probe by cogroup and merge with
+        ``merge_bloom_shards``. Run after a commit."""
+        if self._shard_bc is None or self._shard_bc.nbytes <= BROADCAST_SHARDS_MAX_BYTES:
+            return
+        self._shard_bc.close()
+        self._shard_bc = None
+        self._shards = self._load_shard_state().persist()
+
     def _commit_shard_delta(self, merged, rnd: int, n_dirty: int) -> None:
-        """Swap in the round's new shard state; persist ONLY dirty generations.
+        """Spark regime: swap in the round's new shard state; persist ONLY
+        dirty generations.
 
         ``merged`` is MERGED_SHARD_SCHEMA rows (full state + updated flag).
         The append log gets just the updated rows (the Iceberg-MERGE analog:
         per-round write cost is O(dirtied blobs), not O(all shards)); the
         in-memory state is the cached full DataFrame. Every
-        ``shard_refresh_rounds`` the full state is rewritten as a snapshot and
-        reloaded so cross-round lineage depth stays bounded.
+        ``shard_refresh_rounds`` the full state is rewritten as a snapshot,
+        which bounds resume's replay.
         """
         # localCheckpoint truncates lineage to a leaf plan: the merge
         # references the previous state TWICE (dirty cogroup + clean
         # pass-through), so without truncation the logical plan DOUBLES per
         # round and Catalyst analysis goes exponential (measured: 2 s -> 220 s
         # per round by round 6). Eager checkpoint = one materializing job;
-        # every later use (probe broadcast, next merge, the delta append)
-        # reads executor-local blocks. Production (Iceberg) reads the shard
-        # table fresh per round, which is the same leaf-plan property.
+        # every later use (probe, next merge, the delta append) reads
+        # executor-local blocks. Production (Iceberg) reads the shard table
+        # fresh per round, which is the same leaf-plan property.
         new_state = merged.localCheckpoint(eager=True)
         if self._shards is not None and self._shards.is_cached:
-            # the state resume() loaded and persisted: nothing reads it once
-            # the first merge after resume is checkpointed
+            # the state resume() or the hand-off loaded and persisted: nothing
+            # reads it once the first merge after the load is checkpointed
             self._shards.unpersist()
-        delta = new_state.filter(F.col("updated"))
         # the merge updates one generation per dirty bucket
         self.store.append(
             "bloom_shards",
-            delta.select(
+            new_state.filter(F.col("updated")).select(
                 "bucket", "gen", "n_keys", "bloom", F.lit(rnd).alias("round")
             ).coalesce(files_for(n_dirty)),
             round_no=rnd,
         )
-        # Patch the cached probe broadcast from the SAME dirty generations —
-        # collect cost O(dirty blobs), never the full shard state. Past the
-        # broadcast cap the map is dropped for good (filter_fresh's auto
-        # strategy switches to the cogroup probe at the same threshold).
-        if self._shard_bc is not None:
-            self._shard_bc.apply_delta(delta.select("bucket", "gen", "bloom").collect())
-            if self._shard_bc.nbytes > BROADCAST_SHARDS_MAX_BYTES:
-                self._shard_bc.close()
-                self._shard_bc = None
         if (rnd + 1) % self.shard_refresh_rounds == 0:
-            # periodic full snapshot: bounds resume replay (resume = snapshot
-            # + committed deltas after it), not needed for lineage anymore
             # a few generations per bucket: far below one file's rows
             self.store.write(
                 "bloom_shards_state",
@@ -426,34 +455,24 @@ class CrawlEngine:
             )
         self._shards = new_state.select("bucket", "gen", "n_keys", "bloom")
 
-    def _load_shard_state(self):
-        """Reconstruct shard state on resume: last full snapshot + replay of
-        committed per-round deltas after it (last-writer-wins per bucket/gen).
-        Returns None for stores that predate the shard log (callers fall back
-        to a one-time rebuild from the seen table)."""
+    def _load_shard_state(self) -> DataFrame:
+        """The committed shard state: last full snapshot + replay of the
+        per-round deltas logged after it (last-writer-wins per bucket/gen).
+        Unpersisted; every store has a log from ``init_state`` on."""
         cols = ["bucket", "gen", "n_keys", "bloom", "round"]
-        state_round = -2
-        parts = []
+        log = self.store.read_appends("bloom_shards").select(*cols)
         try:
             snap = self.store.read("bloom_shards_state").select(*cols)
-            state_round = snap.select(F.max("round")).first()[0]
-            parts.append(snap)
         except KeyError:
-            pass
-        log = self.store.read_appends("bloom_shards")
-        if log is not None:
-            parts.append(log.select(*cols).filter(F.col("round") > state_round))
-        if not parts:
-            return None
-        allrows = parts[0]
-        for d in parts[1:]:
-            allrows = allrows.unionByName(d)
+            allrows = log
+        else:
+            state_round = snap.select(F.max("round")).first()[0]
+            allrows = snap.unionByName(log.filter(F.col("round") > state_round))
         w = Window.partitionBy("bucket", "gen").orderBy(F.col("round").desc())
         return (
             allrows.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select("bucket", "gen", "n_keys", "bloom")
-            .persist()
         )
 
     # ---------------------------------------------------------------- resume
@@ -492,20 +511,21 @@ class CrawlEngine:
             self.store.read("frontier").groupBy("job_id").count().collect()
         ):
             self.pending[r.job_id] = r["count"]
-        self._shards = self._load_shard_state()
-        # One-time seed of the cached probe broadcast from the recovered
-        # state (bounded by the broadcast cap via the tracked seen count —
-        # past it, stay in the cogroup regime and never build the map).
-        est_bytes = sum(self.enqueued.values()) * 10 // 8
-        if self._shards is None or est_bytes > BROADCAST_SHARDS_MAX_BYTES:
-            if self._shard_bc is not None:
-                self._shard_bc.close()
-                self._shard_bc = None
-        else:
+        # the regime follows the bytes of the committed state, the quantity
+        # the uninterrupted engine's cap check reads after every commit
+        if self._shard_bc is not None:
+            self._shard_bc.close()
+        state = self._load_shard_state()
+        nbytes = state.agg(F.sum(F.length("bloom"))).first()[0] or 0
+        if nbytes <= BROADCAST_SHARDS_MAX_BYTES:
+            self._shards = None
             self._shard_bc = ShardBroadcast(self.spark)
             self._shard_bc.apply_delta(
-                self._shards.select("bucket", "gen", "bloom").collect()
+                (r.bucket, r.gen, r.n_keys, bytes(r.bloom)) for r in state.collect()
             )
+        else:
+            self._shard_bc = None
+            self._shards = state.persist()
         return last + 1
 
     # ------------------------------------------------------------------ run
@@ -559,10 +579,12 @@ class CrawlEngine:
 
         # --- fetch+extract: one fused python stage (no raw HTML through
         # Arrow, one worker per task chain); salt/spread by url hash
-        # (politeness already enforced by the windows above) ----------------
-        sched = sched.repartition(
-            self.fetch_partitions, F.pmod(F.col("url_hash"), F.lit(self.fetch_partitions))
-        )
+        # (politeness already enforced by the windows above) over the round's
+        # own shuffle partitions, at most fetch_partitions ------------------
+        n_fetch = int(self.spark.conf.get(SHUFFLE_PARTITIONS))
+        if self.fetch_partitions:
+            n_fetch = min(n_fetch, self.fetch_partitions)
+        sched = sched.repartition(n_fetch, F.pmod(F.col("url_hash"), F.lit(n_fetch)))
         if self.tiered_proxies:
             # retry ladder: attempt-indexed tier stepping + rule short-circuit
             # (columns only; the synthetic fetch ignores them, the proxy log
@@ -661,16 +683,15 @@ class CrawlEngine:
 
         # the probed candidates are cached: split_fresh reads them once per
         # bloom verdict, and without the cache each branch would re-run the
-        # link expansion, the candidate gate and the probe
+        # link expansion, the candidate gate and the probe. The shard regime
+        # alone picks the probe: the driver map's live broadcast while there
+        # is one, else the cogroup over the Spark-resident state.
+        driver_shards = self._shard_bc is not None
         probed = probe_seen(
             cand, seen, self.num_buckets,
+            strategy="broadcast" if driver_shards else "cogroup",
             shards=self._shards,
-            # |seen| == total enqueued across jobs; tracked driver-side so the
-            # auto strategy never fires an O(|seen|) count() action per round
-            seen_count=sum(self.enqueued.values()),
-            # cross-round cached broadcast (patched from dirty-gen deltas at
-            # commit time); None past the broadcast cap => cogroup probe
-            shards_bc=self._shard_bc.bc if self._shard_bc is not None else None,
+            shards_bc=self._shard_bc.bc if driver_shards else None,
         ).persist()
         fresh = split_fresh(probed, seen)
 
@@ -755,15 +776,19 @@ class CrawlEngine:
         fresh_summary = fresh.groupBy("job_id").agg(F.count("*").alias("c")).select(
             "job_id", F.lit("fresh").alias("k"), "c"
         )
-        # the shard merge's dirty buckets ride the same collect (<= num_buckets
-        # rows) instead of a second scan of the cached fresh set
+        # the shard merge's input rides the same collect instead of a second
+        # scan of the cached fresh set: every fresh key for the driver merge,
+        # the dirty buckets (<= num_buckets rows) for the Spark merge
         fresh_keyed = with_dedup_key(
             fresh.select("job_id", "url_hash"), self.num_buckets
         )
-        dirty_summary = fresh_keyed.select(
-            F.lit(None).cast("string").alias("job_id"), F.lit("dirty").alias("k"),
-            F.col("bucket").cast("long").alias("c"),
-        ).distinct()
+        shard_summary = fresh_keyed.select(
+            F.lit(None).cast("string").alias("job_id"),
+            F.lit("key" if driver_shards else "dirty").alias("k"),
+            F.col("dedup_hash" if driver_shards else "bucket").cast("long").alias("c"),
+        )
+        if not driver_shards:
+            shard_summary = shard_summary.distinct()
         # Overlap the independent per-round actions: metrics + terminal-log
         # appends run while the summary collect materializes the fresh chain
         # (fetched is already cached by the documents append above; each
@@ -778,23 +803,25 @@ class CrawlEngine:
                 self.store.append, "frontier_log",
                 terminal.select(*frontier_cols).coalesce(fetched_files), rnd,
             )
-            summary_rows = (
-                fetch_summary.unionByName(fresh_summary).unionByName(dirty_summary)
-                .collect()
+            summary = (
+                fetch_summary.unionByName(fresh_summary).unionByName(shard_summary)
+                .toArrow()
             )
             f_metrics.result()
             f_log.result()
 
+        is_key = pc.equal(summary["k"], "key")
+        fresh_keys = summary.filter(is_key)["c"].to_numpy()
         agg: dict = {}
         fresh_counts: dict = {}
         dirty: list[int] = []
-        for r_ in summary_rows:
-            if r_.k == "fresh":
-                fresh_counts[r_.job_id] = r_.c
-            elif r_.k == "dirty":
-                dirty.append(r_.c)
+        for r_ in summary.filter(pc.invert(is_key)).to_pylist():
+            if r_["k"] == "fresh":
+                fresh_counts[r_["job_id"]] = r_["c"]
+            elif r_["k"] == "dirty":
+                dirty.append(r_["c"])
             else:
-                agg[(r_.job_id, r_.k)] = r_.c
+                agg[(r_["job_id"], r_["k"])] = r_["c"]
 
         progress_rows = []
         event_rows = []   # S11 webhook side table (reference: WebhookEvents.ts:6-36)
@@ -841,17 +868,20 @@ class CrawlEngine:
 
         # final writes: independent tables in parallel (fresh/next_frontier
         # read only cached data: fresh from the summary collect, the frontier
-        # from the flagged/fetched/fresh caches). The shard merge
-        # (checkpoint + dirty-gen append) rides the same pool — it reads only
-        # the cached fresh set and the previous shard state, and
-        # SnapshotStore.append reserves slots under its lock.
+        # from the flagged/fetched/fresh caches). The shard merge rides the
+        # same pool — the driver merge reads only the collected keys, the
+        # Spark merge only the cached fresh set and the previous shard state —
+        # and SnapshotStore.append reserves slots under its lock.
         with ThreadPoolExecutor(max_workers=4) as pool:
-            f_shards = pool.submit(
-                self._commit_shard_delta,
-                merge_bloom_shards(self._shards, fresh_keyed, dirty_buckets=dirty),
-                rnd,
-                len(dirty),
-            )
+            if driver_shards:
+                f_shards = pool.submit(self._merge_on_driver, fresh_keys, rnd)
+            else:
+                f_shards = pool.submit(
+                    self._commit_shard_delta,
+                    merge_bloom_shards(self._shards, fresh_keyed, dirty_buckets=dirty),
+                    rnd,
+                    len(dirty),
+                )
             futures = [
                 pool.submit(
                     self.store.append,
@@ -895,6 +925,7 @@ class CrawlEngine:
             f_shards.result()
         t_final = time.perf_counter()
         self.store.commit_round(rnd)
+        self._hand_off_past_cap()
         stats = {
             "round": rnd,
             "scheduled": sched_total,

@@ -20,12 +20,18 @@ filter"):
 
 Net effect at scale: the expensive anti-join sees only (dup_rate + 1%) of
 candidates instead of all of them. Shard state is maintained INCREMENTALLY
-across rounds (``merge_bloom_shards``): each bucket holds a list of bloom
-generations (scalable bloom filters, Almeida et al. 2007); per round, fresh
-keys OR-merge into the newest generation of dirtied buckets only — clean
-buckets never cross the Arrow boundary, and nothing rescans the lifetime seen
-set. At production scale the shard table is an Iceberg table of binary rows
-kept current by a per-round MERGE of exactly the dirty generations.
+across rounds: each bucket holds a list of bloom generations (scalable bloom
+filters, Almeida et al. 2007); per round, fresh keys OR-merge into the newest
+generation of dirtied buckets only, and nothing rescans the lifetime seen
+set. One kernel (``_merge_shard_kernel``) does the merge in two places:
+
+- ``ShardBroadcast.merge`` on the driver, while the shard blobs fit
+  ``BROADCAST_SHARDS_MAX_BYTES`` — the driver map is then the state the
+  broadcast probe reads, and merging there costs no Spark job;
+- ``merge_bloom_shards`` as a cogroup over a Spark DataFrame past the cap —
+  clean buckets never cross the Arrow boundary. At production scale the
+  shard table is an Iceberg table of binary rows kept current by a
+  per-round MERGE of exactly the dirty generations.
 """
 
 from __future__ import annotations
@@ -277,47 +283,84 @@ def broadcast_shards(shards: DataFrame):
 
 
 class ShardBroadcast:
-    """Driver-cached shard map + its live sc.broadcast, refreshed from
-    per-round DIRTY-generation deltas only.
+    """Driver-resident shard state + its live sc.broadcast: while the shard
+    bytes stay under ``BROADCAST_SHARDS_MAX_BYTES`` this map IS the crawl's
+    shard state, merged on the driver (``merge``) instead of by a Spark job.
 
     ``broadcast_shards`` re-collects the FULL shard state (all generations of
     all buckets) on every call — O(shard bytes) of driver traffic per round
     even when one bucket changed, and the superseded broadcast variables are
     never unpersisted, so executor memory grows with crawl length. This class
-    is the cross-round fix: the driver keeps ``{bucket: {gen: blob}}``,
-    ``apply_delta`` patches only the generations a round's merge flagged
-    ``updated`` (collect cost O(dirty blobs)), re-broadcasts the patched map
-    (Spark broadcasts are immutable, so a new variable per round is the floor),
-    and retires the predecessor: unpersist immediately, destroy one round
-    later (never while a straggler task from the previous round might still
-    deserialize it). ``nbytes`` tracks blob bytes incrementally so the caller
-    can drop to the cogroup regime past the broadcast cap without a scan.
+    is the cross-round fix: the driver keeps ``{bucket: {gen: (n_keys,
+    blob)}}``, ``apply_delta`` patches only changed generations,
+    re-broadcasts the patched map (Spark broadcasts are immutable, so a new
+    variable per round is the floor), and retires the predecessor: unpersist
+    immediately, destroy one round later (never while a straggler task from
+    the previous round might still deserialize it). ``nbytes`` tracks blob
+    bytes incrementally so the caller can hand off to the Spark-resident
+    state past the broadcast cap without a scan.
     """
 
     def __init__(self, spark):
         self._spark = spark
-        self._map: dict[int, dict[int, bytes]] = {}
+        self._map: dict[int, dict[int, tuple[int, bytes]]] = {}
         self._bc = None
         self._retiring = None  # unpersisted last round; destroyed next round
         self.nbytes = 0
 
     def apply_delta(self, delta_rows) -> None:
-        """Patch (bucket, gen, bloom) rows into the map and re-broadcast."""
-        for r in delta_rows:
-            gens = self._map.setdefault(r.bucket, {})
-            old = gens.get(r.gen)
+        """Patch (bucket, gen, n_keys, bloom) rows into the map and
+        re-broadcast."""
+        for bucket, gen, n_keys, bloom in delta_rows:
+            gens = self._map.setdefault(bucket, {})
+            old = gens.get(gen)
             if old is not None:
-                self.nbytes -= len(old)
-            gens[r.gen] = r.bloom
-            self.nbytes += len(r.bloom)
+                self.nbytes -= len(old[1])
+            gens[gen] = (n_keys, bloom)
+            self.nbytes += len(bloom)
         if self._retiring is not None:
             self._retiring.destroy(blocking=False)
         self._retiring = self._bc
         if self._retiring is not None:
             self._retiring.unpersist(blocking=False)
         self._bc = self._spark.sparkContext.broadcast(
-            {b: list(gens.values()) for b, gens in self._map.items()}
+            {b: [blob for _, blob in gens.values()] for b, gens in self._map.items()}
         )
+
+    def merge(self, dedup_hash: np.ndarray, num_buckets: int) -> list[tuple]:
+        """OR-merge one round's fresh keys into the map and re-broadcast;
+        returns the updated (bucket, gen, n_keys, bloom) generations.
+
+        The driver twin of ``merge_bloom_shards``: keys group by
+        ``pmod(dedup_hash, num_buckets)`` and each dirty bucket runs the same
+        ``_merge_shard_kernel``, so both give identical rows (bits are an OR
+        over keys, ``n_keys`` a sum; key order cannot matter)."""
+        buckets = np.mod(dedup_hash, num_buckets)
+        order = np.argsort(buckets, kind="stable")
+        dirty, starts = np.unique(buckets[order], return_index=True)
+        updated = []
+        for b, hs in zip(dirty.tolist(), np.split(dedup_hash[order], starts[1:])):
+            gens = self._map.get(b, {})
+            shard = pd.DataFrame(
+                [(b, g, n, blob) for g, (n, blob) in sorted(gens.items())],
+                columns=SHARD_SCHEMA.fieldNames(),
+            )
+            fresh = pd.DataFrame({"bucket": np.full(len(hs), b), "dedup_hash": hs})
+            out = _merge_shard_kernel(fresh, shard)
+            updated.extend(
+                (int(r.bucket), int(r.gen), int(r.n_keys), r.bloom)
+                for r in out[out["updated"]].itertuples(index=False)
+            )
+        self.apply_delta(updated)
+        return updated
+
+    def rows(self) -> list[tuple]:
+        """The full state as (bucket, gen, n_keys, bloom) rows in key order."""
+        return [
+            (b, g, n, blob)
+            for b in sorted(self._map)
+            for g, (n, blob) in sorted(self._map[b].items())
+        ]
 
     @property
     def bc(self):
@@ -333,7 +376,7 @@ class ShardBroadcast:
         self.nbytes = 0
 
 
-def _broadcast_probe(cand: DataFrame, shards: DataFrame, bc=None) -> DataFrame:
+def _broadcast_probe(cand: DataFrame, shards: DataFrame | None, bc=None) -> DataFrame:
     """Probe via broadcast shards + scalar pandas UDF.
 
     Bandwidth: a scalar pandas UDF ships ONLY its input columns through Arrow
@@ -388,7 +431,6 @@ def probe_seen(
     num_buckets: int = DEFAULT_BUCKETS,
     strategy: str = "auto",
     shards: DataFrame | None = None,
-    seen_count: int | None = None,
     shards_bc=None,
 ) -> DataFrame:
     """Attach the dedup key (``dedup_hash``, ``bucket``) and the bloom
@@ -397,18 +439,19 @@ def probe_seen(
     verdict), so a caller that persists it evaluates the candidate chain and
     the probe once instead of once per branch."""
     cand = with_dedup_key(candidates, num_buckets)
+    if strategy == "auto":
+        # a count() over the full seen table: callers that know their shard
+        # state (the crawl driver does) pass the strategy instead
+        est_bytes = seen.count() * BITS_PER_KEY // 8
+        strategy = "broadcast" if est_bytes <= BROADCAST_SHARDS_MAX_BYTES else "cogroup"
+    if strategy == "broadcast" and shards_bc is not None:
+        # a live broadcast is the whole shard state: nothing to build
+        return _broadcast_probe(cand, None, bc=shards_bc)
     if shards is None:
         seen_keyed = with_dedup_key(seen.select("job_id", "url_hash"), num_buckets)
         shards = build_bloom_shards(seen_keyed)
-    if strategy == "auto":
-        # callers that track the seen count (the crawl driver does) pass it in
-        # — firing a count() action over the full seen table per round is an
-        # O(|seen|) scan the incremental design exists to avoid
-        n_seen = seen_count if seen_count is not None else seen.count()
-        est_bytes = n_seen * BITS_PER_KEY // 8
-        strategy = "broadcast" if est_bytes <= BROADCAST_SHARDS_MAX_BYTES else "cogroup"
     if strategy == "broadcast":
-        return _broadcast_probe(cand, shards, bc=shards_bc)
+        return _broadcast_probe(cand, shards)
     return _cogroup_probe(cand, shards)
 
 
@@ -431,7 +474,6 @@ def filter_fresh(
     use_bloom: bool = True,
     strategy: str = "auto",
     shards: DataFrame | None = None,
-    seen_count: int | None = None,
     shards_bc=None,
 ) -> DataFrame:
     """Return candidate rows whose (job_id, url_hash) is NOT in ``seen``.
@@ -454,6 +496,6 @@ def filter_fresh(
             seen.select("job_id", "url_hash"), ["job_id", "url_hash"], "left_anti"
         )
     probed = probe_seen(
-        candidates, seen, num_buckets, strategy, shards, seen_count, shards_bc
+        candidates, seen, num_buckets, strategy, shards, shards_bc
     )
     return split_fresh(probed, seen)

@@ -19,9 +19,10 @@ the previous manifest intact, which is exactly the resume point
 A table's schema costs no Spark job: the manifest records each data dir's
 Spark schema when it is written, and reads pass it to the parquet reader
 instead of letting Spark infer it with a one-task footer job (the Iceberg
-analog: the schema lives in table metadata). Rows that already sit on the driver (per-job
-progress, webhook events) go through the same ``append`` as an Arrow table
-and are written with pyarrow — no ``createDataFrame`` and no write job.
+analog: the schema lives in table metadata). Rows that already sit on the
+driver (per-job progress, webhook events, the driver-resident bloom shards)
+go through the same ``append`` / ``write`` as an Arrow table and are written
+with pyarrow — no ``createDataFrame`` and no write job.
 """
 
 from __future__ import annotations
@@ -55,7 +56,8 @@ def files_for(rows: int) -> int:
 def driver_rows(rows: list[tuple], schema: T.StructType) -> pa.Table:
     """Driver-side rows as an Arrow table that carries its Spark schema.
 
-    ``SnapshotStore.append`` writes such a table with pyarrow on the driver:
+    ``SnapshotStore.append`` / ``write`` write such a table with pyarrow on
+    the driver:
     no ``createDataFrame``, no Spark job. Spark reads the file back with the
     same rows and types as if it had written it."""
     arrow_schema = to_arrow_schema(schema).with_metadata(
@@ -66,6 +68,14 @@ def driver_rows(rows: list[tuple], schema: T.StructType) -> pa.Table:
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema,
     )
+
+
+def _write_driver_table(data_dir: str, table: pa.Table) -> str:
+    """Write a ``driver_rows`` table as one pyarrow file in a new
+    ``data_dir``; returns the Spark schema JSON it carries."""
+    os.makedirs(data_dir)
+    pq.write_table(table, os.path.join(data_dir, "part-00000-driver.snappy.parquet"))
+    return table.schema.metadata[SPARK_SCHEMA_KEY.encode()].decode()
 
 
 class SnapshotStore:
@@ -194,24 +204,36 @@ class SnapshotStore:
             reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
         return reader.parquet(*dirs)
 
-    def write(self, table: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
-        """Write a new immutable snapshot of `table` and advance its pointer."""
+    def write(
+        self, table: str, df: DataFrame | pa.Table,
+        partition_by: list[str] | None = None,
+    ) -> None:
+        """Write a new immutable snapshot of `table` and advance its pointer.
+        ``df`` is a DataFrame (one Spark write) or an unpartitioned
+        ``driver_rows`` table (one pyarrow file, no Spark job)."""
         snap_id = self.manifest["tables"].get(table, -1) + 1
         final = self._snap_dir(table, snap_id)
         tmp = os.path.join(self.base, table, f"_tmp-{snap_id:06d}")
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
+        if isinstance(df, pa.Table):
+            if partition_by:
+                raise ValueError("driver rows are written unpartitioned")
+            schema = _write_driver_table(tmp, df)
+        else:
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(tmp)
+            # partition columns read back reordered; leave those to inference
+            schema = None if partition_by else df.schema.json()
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(tmp, final)
         self.manifest["tables"][table] = snap_id
         self._collect_lineage(final, None)
-        if not partition_by:  # partition columns read back reordered; infer
-            self.manifest["schemas"][final] = df.schema.json()
+        if schema is not None:
+            self.manifest["schemas"][final] = schema
         # stale snapshot GC: keep the last 4 (snap_id and the 3 before it;
         # Iceberg expire_snapshots analog)
         for old in range(max(0, snap_id - 3)):
@@ -263,9 +285,7 @@ class SnapshotStore:
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
         if isinstance(df, pa.Table):
-            os.makedirs(tmp)
-            pq.write_table(df, os.path.join(tmp, "part-00000-driver.snappy.parquet"))
-            schema = df.schema.metadata[SPARK_SCHEMA_KEY.encode()].decode()
+            schema = _write_driver_table(tmp, df)
         else:
             df.write.mode("overwrite").parquet(tmp)
             schema = df.schema.json()

@@ -10,6 +10,7 @@ import pytest
 
 from anycrawl_spark import synth
 from anycrawl_spark.crawl.params import CrawlParams
+from anycrawl_spark.crawl import superstep
 from anycrawl_spark.crawl.superstep import CrawlEngine
 
 
@@ -47,10 +48,11 @@ def test_resume_identical_final_state(spark, tmp_path):
     shutil.rmtree(wd_part, ignore_errors=True)
 
 
-def test_resume_releases_loaded_shard_state(spark, tmp_path):
-    """resume() persists the shard state it rebuilds from the snapshot and
-    the replayed deltas; once the next round's merge is checkpointed that
-    copy is unread and must leave the CacheManager."""
+def test_resume_releases_loaded_shard_state(spark, tmp_path, monkeypatch):
+    """resume() decides the shard regime on the bytes it loaded. Under the
+    broadcast cap the driver map is the state and resume caches nothing;
+    past it resume persists the loaded state, and once the next round's
+    merge is checkpointed that copy is unread and leaves the CacheManager."""
     from pyspark.storagelevel import StorageLevel
 
     jobs = [dict(synth.seed_jobs(1)[0], limit=10)]
@@ -61,13 +63,80 @@ def test_resume_releases_loaded_shard_state(spark, tmp_path):
     eng.run(max_rounds=2)
     del eng
 
+    loads = []
+    real_load = CrawlEngine._load_shard_state
+
+    def load(self):
+        loads.append(real_load(self))
+        return loads[-1]
+
+    monkeypatch.setattr(CrawlEngine, "_load_shard_state", load)
+    resumed = CrawlEngine(spark, wd, jobs, robots, CrawlParams(), num_buckets=4)
+    resumed.resume()
+    assert resumed._shard_bc is not None and resumed._shards is None
+    assert loads[-1].storageLevel == StorageLevel.NONE
+
+    # the same store past a cap below its shard bytes: the Spark regime
+    monkeypatch.setattr(superstep, "BROADCAST_SHARDS_MAX_BYTES", 0)
     resumed = CrawlEngine(spark, wd, jobs, robots, CrawlParams(), num_buckets=4)
     nxt = resumed.resume()
     loaded = resumed._shards
+    assert resumed._shard_bc is None and loaded is loads[-1]
     assert loaded.storageLevel != StorageLevel.NONE
     resumed.run_round(nxt)
     assert loaded.storageLevel == StorageLevel.NONE
     shutil.rmtree(wd, ignore_errors=True)
+
+
+def test_shard_handoff_past_cap(spark, tmp_path, monkeypatch):
+    """A broadcast cap above the probe's old seen-count estimate but below
+    the shard map's real bytes: the engine hands its shard state to Spark
+    once (after round 0 here) and probes by cogroup from then on, never
+    re-collecting the state with broadcast_shards. The crawl matches the
+    reference simulator, and a crawl stopped after the hand-off resumes to
+    byte-identical tables, the bloom shard log included."""
+    from anycrawl_spark.crawl.simulator import ReferenceSimulator
+    from anycrawl_spark.operators import seen as seen_mod
+
+    cap = 512  # seed state <= 2 x 128 B; round 0 dirties most of 8 buckets
+
+    def no_collect(shards):
+        raise AssertionError("shard state re-collected for a broadcast")
+
+    monkeypatch.setattr(superstep, "BROADCAST_SHARDS_MAX_BYTES", cap)
+    monkeypatch.setattr(seen_mod, "BROADCAST_SHARDS_MAX_BYTES", cap)
+    monkeypatch.setattr(seen_mod, "broadcast_shards", no_collect)
+    jobs = [dict(j, limit=12) for j in synth.seed_jobs(2)]
+    robots = synth.robots_rules()
+    params = CrawlParams(max_rounds=40)
+    tables = ("documents", "frontier_log", "progress", "seen", "bloom_shards")
+
+    full = CrawlEngine(spark, str(tmp_path / "full"), jobs, robots, params, num_buckets=8)
+    full.init_state()
+    assert full._shard_bc is not None
+    full.run_round(0)
+    assert full._shard_bc is None and full._shards is not None
+    # the seen-count estimate the probe once used stays inside the cap
+    assert sum(full.enqueued.values()) * seen_mod.BITS_PER_KEY // 8 <= cap
+    full.run()
+    sim = ReferenceSimulator(jobs, robots, params)
+    sim.run()
+    assert full.seen_sets() == sim.seen_sets()
+    assert full.discovery() == sim.discovery()
+    assert full.terminal_status() == sim.terminal_status()
+
+    wd = str(tmp_path / "part")
+    part = CrawlEngine(spark, wd, jobs, robots, params, num_buckets=8)
+    part.init_state()
+    part.run(max_rounds=2)
+    del part
+    resumed = CrawlEngine(spark, wd, jobs, robots, params, num_buckets=8)
+    assert resumed.resume() == 2
+    assert resumed._shard_bc is None
+    resumed.run()
+    assert resumed.done == full.done and resumed.enqueued == full.enqueued
+    for table in tables:
+        assert _table_rows(resumed, table) == _table_rows(full, table), table
 
 
 class _InjectedCrash(RuntimeError):
@@ -189,7 +258,7 @@ def crash_baseline(spark, tmp_path_factory):
     full.run()
     tables = {
         t: _table_rows(full, t)
-        for t in ("documents", "frontier_log", "progress", "seen")
+        for t in ("documents", "frontier_log", "progress", "seen", "bloom_shards")
     }
     return {
         "jobs": jobs, "robots": robots, "params": params,
@@ -200,24 +269,44 @@ def crash_baseline(spark, tmp_path_factory):
 
 
 # (name, kind, target): kind 'append' bombs store.append on that table,
-# 'write' bombs store.write (the frontier snapshot), 'flush' bombs the
+# 'write' bombs store.write (a snapshot table), 'flush' bombs the
 # manifest rename — i.e. a death DURING the snapshot commit itself, after
-# every table write of the round has landed.
+# every table write of the round has landed. The crashed round 2 also
+# writes the full bloom shard snapshot (shard_refresh_rounds=3).
 _CRASH_POINTS = [
     ("documents_append", "append", "documents"),   # round start, nothing landed
     ("seen_shard_delta", "append", "bloom_shards"),  # after the shard merge ran
+    ("shard_state_write", "write", "bloom_shards_state"),  # shard snapshot dies
     ("frontier_write", "write", "frontier"),       # frontier snapshot dies
     ("before_progress", "append", "progress"),     # progress write dies
     ("during_commit", "flush", None),              # manifest rename dies
 ]
+_MATRIX_REFRESH_ROUNDS = 3
 
 
 @pytest.mark.parametrize("name,kind,target", _CRASH_POINTS, ids=[p[0] for p in _CRASH_POINTS])
 def test_crash_replay_matrix(spark, tmp_path, crash_baseline, name, kind, target):
-    b = crash_baseline
-    wd = str(tmp_path / name)
-    eng = CrawlEngine(spark, wd, b["jobs"], b["robots"], b["params"], num_buckets=8)
+    _crash_replay(spark, str(tmp_path / name), crash_baseline, name, kind, target, True)
+
+
+@pytest.mark.parametrize("name,kind,target", _CRASH_POINTS, ids=[p[0] for p in _CRASH_POINTS])
+def test_crash_replay_matrix_spark_regime(
+    spark, tmp_path, crash_baseline, monkeypatch, name, kind, target
+):
+    """The same crash points with the shard state handed to Spark after
+    init_state (a zero broadcast cap): the Spark merge, its checkpoint, log
+    append and snapshot replay to the same tables, bloom_shards included."""
+    monkeypatch.setattr(superstep, "BROADCAST_SHARDS_MAX_BYTES", 0)
+    _crash_replay(spark, str(tmp_path / name), crash_baseline, name, kind, target, False)
+
+
+def _crash_replay(spark, wd, b, name, kind, target, driver_shards):
+    eng = CrawlEngine(
+        spark, wd, b["jobs"], b["robots"], b["params"], num_buckets=8,
+        shard_refresh_rounds=_MATRIX_REFRESH_ROUNDS,
+    )
     eng.init_state()
+    assert (eng._shard_bc is not None) == driver_shards
     eng.run(max_rounds=2)
     assert eng.store.last_round == 1
 
@@ -250,8 +339,12 @@ def test_crash_replay_matrix(spark, tmp_path, crash_baseline, name, kind, target
     # whatever landed, the on-disk manifest still points at round 1
     del eng
 
-    resumed = CrawlEngine(spark, wd, b["jobs"], b["robots"], b["params"], num_buckets=8)
+    resumed = CrawlEngine(
+        spark, wd, b["jobs"], b["robots"], b["params"], num_buckets=8,
+        shard_refresh_rounds=_MATRIX_REFRESH_ROUNDS,
+    )
     assert resumed.resume() == 2  # the crashed round replays
+    assert (resumed._shard_bc is not None) == driver_shards
     resumed.run()
 
     assert resumed.seen_sets() == b["seen_sets"], name

@@ -127,15 +127,17 @@ class JobCounter:
 
 
 def _crawl_counts(spark, workdir) -> list[tuple[int, int, int]]:
-    """(jobs, stages, tasks) of rounds 0 and 1 of a small two-job crawl."""
+    """(jobs, stages, tasks) of init_state and rounds 0 and 1 of a small
+    two-job crawl."""
     jobs = [dict(j, limit=6) for j in synth.seed_jobs(2)]
     eng = superstep.CrawlEngine(
         spark, workdir, jobs, synth.robots_rules(), CrawlParams(max_rounds=2),
-        num_buckets=8, fetch_partitions=8,
+        num_buckets=8,
     )
-    eng.init_state()
     counter = JobCounter(spark.sparkContext)
-    out = []
+    counter.start()
+    eng.init_state()
+    out = [counter.stop()]
     for rnd in range(2):
         counter.start()
         eng.run_round(rnd)
@@ -143,17 +145,21 @@ def _crawl_counts(spark, workdir) -> list[tuple[int, int, int]]:
     return out
 
 
-# (jobs, stages, tasks) per round of _crawl_counts: one job per action, not
-# one per shuffle stage, and single-partition shuffles below the row bound
-ROUND_COUNTS = [(10, 18, 68), (10, 18, 72)]
+# (jobs, stages, tasks) of _crawl_counts: init_state writes three tables and
+# collects the seed keys; a round runs one job per action, not one per
+# shuffle stage, with single-partition shuffles (the fetch repartition
+# included) below the row bound, and merges its fresh keys into the
+# driver-resident bloom shards without a job
+INIT_COUNTS = (4, 4, 11)
+ROUND_COUNTS = [(7, 11, 14), (7, 11, 15)]
 
 
 def test_static_round_counts_ignore_session_partitions(spark, tmp_path):
-    assert _crawl_counts(spark, str(tmp_path / "a")) == ROUND_COUNTS
+    assert _crawl_counts(spark, str(tmp_path / "a")) == [INIT_COUNTS, *ROUND_COUNTS]
     before = spark.conf.get(superstep.SHUFFLE_PARTITIONS)
     spark.conf.set(superstep.SHUFFLE_PARTITIONS, "64")
     try:
-        assert _crawl_counts(spark, str(tmp_path / "b")) == ROUND_COUNTS
+        assert _crawl_counts(spark, str(tmp_path / "b")) == [INIT_COUNTS, *ROUND_COUNTS]
     finally:
         spark.conf.set(superstep.SHUFFLE_PARTITIONS, before)
 

@@ -150,3 +150,39 @@ def test_generation_fpp_tightening():
             assert m_bits / int(r.n_keys) >= _gen_bits_per_key(int(r.gen)) * 0.99
     for prev, nxt in zip(caps, caps[1:]):
         assert nxt >= prev * GEN_GROWTH * 0.99
+
+
+def test_driver_merge_matches_spark_merge(spark):
+    """ShardBroadcast.merge (the crawl's driver-resident state) and
+    merge_bloom_shards give identical (bucket, gen, n_keys, bloom) rows from
+    the same state and keys — new buckets, in-place merges and generation
+    rollovers alike — whatever order the keys arrive in."""
+    import numpy as np
+
+    from anycrawl_spark.operators.seen import ShardBroadcast, merge_bloom_shards
+
+    num_buckets = 4
+    driver = ShardBroadcast(spark)
+    state = None
+    try:
+        # ~10 keys per bucket open generation 0 (1024 bits, capacity 102);
+        # 20 more merge in place; 400 more overflow it into generation 1
+        for rnd, n in enumerate((40, 20, 400, 30)):
+            keyed = with_dedup_key(
+                _mk(spark, [("j", f"http://h/{rnd}/{i}") for i in range(n)]), num_buckets
+            )
+            merged = merge_bloom_shards(state, keyed).localCheckpoint()
+            keys = np.array([r.dedup_hash for r in keyed.collect()], dtype=np.int64)
+            updated = driver.merge(keys[::-1].copy(), num_buckets)
+            assert sorted(updated) == sorted(
+                (r.bucket, r.gen, r.n_keys, bytes(r.bloom))
+                for r in merged.filter("updated").collect()
+            ), rnd
+            state = merged.select("bucket", "gen", "n_keys", "bloom")
+            assert driver.rows() == sorted(
+                (r.bucket, r.gen, r.n_keys, bytes(r.bloom)) for r in state.collect()
+            ), rnd
+        assert {g for _, g, _, _ in driver.rows()} == {0, 1}
+        assert driver.nbytes == sum(len(blob) for *_, blob in driver.rows())
+    finally:
+        driver.close()

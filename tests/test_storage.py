@@ -117,14 +117,24 @@ def test_reads_and_driver_appends_launch_no_jobs(spark, tmp_path):
         spark, lambda: store.append("progress", driver_rows(_progress_rows(), PROGRESS), 0)
     )
     assert n == 0
+    n, _ = _jobs_launched(
+        spark, lambda: store.write("progress_snap", driver_rows(_progress_rows(), PROGRESS))
+    )
+    assert n == 0
+    with pytest.raises(ValueError):
+        store.write("progress_snap", driver_rows(_progress_rows(), PROGRESS), ["job_id"])
     assert snap.count() == 5 and t.count() == 7
 
     # the recorded schema is the one Spark would infer from the footers
     store.commit_round(0)
     reread = SnapshotStore(str(tmp_path / "s"), spark)  # from the manifest
     for df, d in ((reread.read("snap"), reread._snap_dir("snap", 0)),
-                  (reread.read_appends("t"), reread.manifest["appends"]["t"][0])):
+                  (reread.read_appends("t"), reread.manifest["appends"]["t"][0]),
+                  (reread.read("progress_snap"), reread._snap_dir("progress_snap", 0))):
         assert df.schema == spark.read.parquet(d).schema
+    assert sorted(reread.read("progress_snap").toJSON().collect()) == sorted(
+        reread.read_appends("progress").toJSON().collect()
+    )
 
 
 def _progress_rows():
