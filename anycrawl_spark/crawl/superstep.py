@@ -25,9 +25,11 @@ Scale design (explicit, per north_rule):
   While the shard blobs fit ``BROADCAST_SHARDS_MAX_BYTES`` they live on the
   driver (``ShardBroadcast``): a round's fresh keys ride its summary collect
   and merge there, and the shard log and snapshots are driver writes, so
-  the merge costs no Spark job. Past the cap the state hands off once to a
-  Spark-resident DataFrame merged by cogroup (``merge_bloom_shards``), and
-  the probe follows the regime: broadcast on the driver map, cogroup after.
+  the merge costs no Spark job. Past the cap, or before a round that may
+  bring more than ``DRIVER_MERGE_MAX_KEYS`` fresh keys, the state hands off
+  once to a Spark-resident DataFrame merged by cogroup
+  (``merge_bloom_shards``), and the probe follows the regime: broadcast on
+  the driver map, cogroup after.
 - Fetch input is repartitioned by ``xxhash64(url)`` — this IS the salting:
   after the politeness window has enforced per-host caps, fetch rows are
   independent, so spreading a mega-host across partitions is free. The
@@ -83,6 +85,12 @@ from anycrawl_spark.storage import SnapshotStore, driver_rows, files_for
 
 AQE = "spark.sql.adaptive.enabled"
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+# fresh keys one round may merge on the driver map: a round whose fresh-key
+# bound passes it hands the shard state to the Spark merge first, which
+# spreads the merge over the executors and keeps the keys off the driver
+# (docs/SCALE.md "Driver-resident bloom shards" has the measurements)
+DRIVER_MERGE_MAX_KEYS = 1 << 20
 
 # rows per shuffle partition in a statically planned round (the round's rows
 # are narrow: keys, a URL, a few ints): a round of a few thousand rows runs
@@ -145,7 +153,6 @@ class CrawlEngine:
         params: CrawlParams | None = None,
         web: synth.WebConfig = synth.DEFAULT_WEB,
         num_buckets: int = 32,
-        fetch_partitions: int | None = None,
         shard_refresh_rounds: int = 8,
         tiered_proxies: list[list[str]] | None = None,
         proxy_rules: list | None = None,
@@ -159,9 +166,6 @@ class CrawlEngine:
         self.params = params or CrawlParams()
         self.web = web
         self.num_buckets = num_buckets
-        # caps the fetch repartition, which otherwise takes the round's own
-        # shuffle partitions (static_plan sizes them from the row bound)
-        self.fetch_partitions = fetch_partitions
         # small driver-side policy state (broadcast-sized; jobs dim, J3).
         # Rows marked wildcard=True (from functions/robots.py
         # robots_rows_from_texts — raw robots.txt with */$ patterns) route to
@@ -293,7 +297,8 @@ class CrawlEngine:
         #   broadcast — while its blobs fit BROADCAST_SHARDS_MAX_BYTES the
         #               driver map (_shard_bc) IS the state: fresh keys merge
         #               on the driver and the probe reads its broadcast;
-        #   spark     — past the cap, for good: a localCheckpointed DataFrame
+        #   spark     — past the cap or the driver merge's key bound, for
+        #               good: a localCheckpointed DataFrame
         #               (_shards) merged by merge_bloom_shards, probed by
         #               cogroup.
         # Both log each round's updated generations to bloom_shards and
@@ -372,7 +377,6 @@ class CrawlEngine:
             round_no=-1,
         )
         self.store.commit_round(-1)
-        self._hand_off_past_cap()
 
     def _robots_ok_driver(self, url: str) -> bool:
         from anycrawl_spark.crawl.params import robots_decision, robots_target
@@ -402,12 +406,17 @@ class CrawlEngine:
                 "bloom_shards_state", _shard_rows(self._shard_bc.rows(), rnd)
             )
 
-    def _hand_off_past_cap(self) -> None:
-        """Once the driver map's blobs pass the broadcast cap, the state
-        moves to Spark for good: the committed state loads as ``resume``
-        loads it, and later rounds probe by cogroup and merge with
-        ``merge_bloom_shards``. Run after a commit."""
-        if self._shard_bc is None or self._shard_bc.nbytes <= BROADCAST_SHARDS_MAX_BYTES:
+    def _hand_off_past_bounds(self) -> None:
+        """Before a round: once the driver map's blobs pass the broadcast
+        cap, or the round may bring more fresh keys than one driver merge
+        takes (``DRIVER_MERGE_MAX_KEYS``), the state moves to Spark for good.
+        The committed state loads as ``resume`` loads it, and the rounds
+        from this one on probe by cogroup and merge with
+        ``merge_bloom_shards``."""
+        if self._shard_bc is None or (
+            self._shard_bc.nbytes <= BROADCAST_SHARDS_MAX_BYTES
+            and self.round_fresh_bound() <= DRIVER_MERGE_MAX_KEYS
+        ):
             return
         self._shard_bc.close()
         self._shard_bc = None
@@ -515,7 +524,9 @@ class CrawlEngine:
         # the uninterrupted engine's cap check reads after every commit
         if self._shard_bc is not None:
             self._shard_bc.close()
-        state = self._load_shard_state()
+        # persisted first, so the byte count and the collect (or the first
+        # merge) read the snapshot + log window once
+        state = self._load_shard_state().persist()
         nbytes = state.agg(F.sum(F.length("bloom"))).first()[0] or 0
         if nbytes <= BROADCAST_SHARDS_MAX_BYTES:
             self._shards = None
@@ -523,9 +534,10 @@ class CrawlEngine:
             self._shard_bc.apply_delta(
                 (r.bucket, r.gen, r.n_keys, bytes(r.bloom)) for r in state.collect()
             )
+            state.unpersist()
         else:
             self._shard_bc = None
-            self._shards = state.persist()
+            self._shards = state
         return last + 1
 
     # ------------------------------------------------------------------ run
@@ -549,7 +561,17 @@ class CrawlEngine:
             + self._dim_rows
         )
 
+    def round_fresh_bound(self) -> int:
+        """Bound on the fresh keys the next round can bring: every href of
+        every page it can fetch, which for a live job is at most its pending
+        rows and at most its remaining budget."""
+        return synth.MAX_PAGE_HREFS * sum(
+            min(n, self.limit_by_job[j] - self.done.get(j, 0))
+            for j, n in self.pending.items() if j not in self.finalized
+        )
+
     def run_round(self, rnd: int) -> dict:
+        self._hand_off_past_bounds()
         with static_plan(self.spark, self.round_rows()):
             return self._run_round(rnd)
 
@@ -580,10 +602,8 @@ class CrawlEngine:
         # --- fetch+extract: one fused python stage (no raw HTML through
         # Arrow, one worker per task chain); salt/spread by url hash
         # (politeness already enforced by the windows above) over the round's
-        # own shuffle partitions, at most fetch_partitions ------------------
+        # own shuffle partitions (static_plan sizes them) --------------------
         n_fetch = int(self.spark.conf.get(SHUFFLE_PARTITIONS))
-        if self.fetch_partitions:
-            n_fetch = min(n_fetch, self.fetch_partitions)
         sched = sched.repartition(n_fetch, F.pmod(F.col("url_hash"), F.lit(n_fetch)))
         if self.tiered_proxies:
             # retry ladder: attempt-indexed tier stepping + rule short-circuit
@@ -925,7 +945,6 @@ class CrawlEngine:
             f_shards.result()
         t_final = time.perf_counter()
         self.store.commit_round(rnd)
-        self._hand_off_past_cap()
         stats = {
             "round": rnd,
             "scheduled": sched_total,

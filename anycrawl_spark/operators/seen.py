@@ -26,8 +26,9 @@ generation of dirtied buckets only, and nothing rescans the lifetime seen
 set. One kernel (``_merge_shard_kernel``) does the merge in two places:
 
 - ``ShardBroadcast.merge`` on the driver, while the shard blobs fit
-  ``BROADCAST_SHARDS_MAX_BYTES`` — the driver map is then the state the
-  broadcast probe reads, and merging there costs no Spark job;
+  ``BROADCAST_SHARDS_MAX_BYTES`` and the crawl's rounds stay under its
+  driver-merge key bound — the driver map is then the state the broadcast
+  probe reads, and merging there costs no Spark job;
 - ``merge_bloom_shards`` as a cogroup over a Spark DataFrame past the cap —
   clean buckets never cross the Arrow boundary. At production scale the
   shard table is an Iceberg table of binary rows kept current by a
@@ -351,7 +352,9 @@ class ShardBroadcast:
                 (int(r.bucket), int(r.gen), int(r.n_keys), r.bloom)
                 for r in out[out["updated"]].itertuples(index=False)
             )
-        self.apply_delta(updated)
+        if updated or self._bc is None:
+            # no key, no change: a live broadcast stays as it is
+            self.apply_delta(updated)
         return updated
 
     def rows(self) -> list[tuple]:

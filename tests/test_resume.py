@@ -91,7 +91,7 @@ def test_resume_releases_loaded_shard_state(spark, tmp_path, monkeypatch):
 def test_shard_handoff_past_cap(spark, tmp_path, monkeypatch):
     """A broadcast cap above the probe's old seen-count estimate but below
     the shard map's real bytes: the engine hands its shard state to Spark
-    once (after round 0 here) and probes by cogroup from then on, never
+    once (before round 1 here) and probes by cogroup from then on, never
     re-collecting the state with broadcast_shards. The crawl matches the
     reference simulator, and a crawl stopped after the hand-off resumes to
     byte-identical tables, the bloom shard log included."""
@@ -113,8 +113,10 @@ def test_shard_handoff_past_cap(spark, tmp_path, monkeypatch):
 
     full = CrawlEngine(spark, str(tmp_path / "full"), jobs, robots, params, num_buckets=8)
     full.init_state()
-    assert full._shard_bc is not None
     full.run_round(0)
+    # round 0 takes the state past the cap; round 1 runs in the Spark regime
+    assert full._shard_bc is not None and full._shard_bc.nbytes > cap
+    full.run_round(1)
     assert full._shard_bc is None and full._shards is not None
     # the seen-count estimate the probe once used stays inside the cap
     assert sum(full.enqueued.values()) * seen_mod.BITS_PER_KEY // 8 <= cap
@@ -135,6 +137,69 @@ def test_shard_handoff_past_cap(spark, tmp_path, monkeypatch):
     assert resumed._shard_bc is None
     resumed.run()
     assert resumed.done == full.done and resumed.enqueued == full.enqueued
+    for table in tables:
+        assert _table_rows(resumed, table) == _table_rows(full, table), table
+
+
+def test_shard_handoff_past_round_keys(spark, tmp_path, monkeypatch):
+    """A round whose fresh-key bound passes DRIVER_MERGE_MAX_KEYS hands the
+    shard state to Spark before it runs, however small the state, so its
+    keys never reach the driver. The crawl matches the reference simulator
+    and writes the bloom shard log of a crawl that merges every round on the
+    driver; a crawl resumed under the bound merges on the driver again until
+    a round passes it, and ends byte-identical."""
+    from anycrawl_spark.crawl.simulator import ReferenceSimulator
+
+    jobs = [dict(j, limit=12) for j in synth.seed_jobs(2)]
+    robots = synth.robots_rules()
+    params = CrawlParams(max_rounds=40)
+    tables = ("documents", "frontier_log", "progress", "seen", "bloom_shards")
+
+    driver_only = CrawlEngine(
+        spark, str(tmp_path / "driver"), jobs, robots, params, num_buckets=8
+    )
+    driver_only.init_state()
+    driver_only.run()
+    assert driver_only._shard_bc is not None
+
+    # round 0 fetches one seed page per job; round 1 more
+    monkeypatch.setattr(
+        superstep, "DRIVER_MERGE_MAX_KEYS", len(jobs) * synth.MAX_PAGE_HREFS
+    )
+    merged_on_driver = []
+    real_merge = CrawlEngine._merge_on_driver
+
+    def merge(self, dedup_hash, rnd):
+        merged_on_driver.append(rnd)
+        return real_merge(self, dedup_hash, rnd)
+
+    monkeypatch.setattr(CrawlEngine, "_merge_on_driver", merge)
+    full = CrawlEngine(spark, str(tmp_path / "full"), jobs, robots, params, num_buckets=8)
+    full.init_state()
+    full.run_round(0)
+    assert full._shard_bc is not None
+    assert full.round_fresh_bound() > superstep.DRIVER_MERGE_MAX_KEYS
+    full.run()
+    assert full._shard_bc is None
+    assert merged_on_driver == [-1, 0]
+    sim = ReferenceSimulator(jobs, robots, params)
+    sim.run()
+    assert full.seen_sets() == sim.seen_sets()
+    assert full.discovery() == sim.discovery()
+    assert full.terminal_status() == sim.terminal_status()
+    for table in tables:
+        assert _table_rows(full, table) == _table_rows(driver_only, table), table
+
+    wd = str(tmp_path / "part")
+    part = CrawlEngine(spark, wd, jobs, robots, params, num_buckets=8)
+    part.init_state()
+    part.run(max_rounds=2)
+    del part
+    resumed = CrawlEngine(spark, wd, jobs, robots, params, num_buckets=8)
+    assert resumed.resume() == 2
+    assert resumed._shard_bc is not None
+    resumed.run()
+    assert resumed._shard_bc is None
     for table in tables:
         assert _table_rows(resumed, table) == _table_rows(full, table), table
 
@@ -293,8 +358,8 @@ def test_crash_replay_matrix(spark, tmp_path, crash_baseline, name, kind, target
 def test_crash_replay_matrix_spark_regime(
     spark, tmp_path, crash_baseline, monkeypatch, name, kind, target
 ):
-    """The same crash points with the shard state handed to Spark after
-    init_state (a zero broadcast cap): the Spark merge, its checkpoint, log
+    """The same crash points with the shard state handed to Spark before
+    round 0 (a zero broadcast cap): the Spark merge, its checkpoint, log
     append and snapshot replay to the same tables, bloom_shards included."""
     monkeypatch.setattr(superstep, "BROADCAST_SHARDS_MAX_BYTES", 0)
     _crash_replay(spark, str(tmp_path / name), crash_baseline, name, kind, target, False)
@@ -306,9 +371,9 @@ def _crash_replay(spark, wd, b, name, kind, target, driver_shards):
         shard_refresh_rounds=_MATRIX_REFRESH_ROUNDS,
     )
     eng.init_state()
-    assert (eng._shard_bc is not None) == driver_shards
     eng.run(max_rounds=2)
     assert eng.store.last_round == 1
+    assert (eng._shard_bc is not None) == driver_shards
 
     if kind == "append":
         real = eng.store.append

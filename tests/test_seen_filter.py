@@ -186,3 +186,24 @@ def test_driver_merge_matches_spark_merge(spark):
         assert driver.nbytes == sum(len(blob) for *_, blob in driver.rows())
     finally:
         driver.close()
+
+
+def test_driver_merge_without_keys_keeps_broadcast(spark):
+    """A merge with no fresh key changes no generation, so the live
+    broadcast stays; an empty map's first merge still broadcasts one for the
+    probe to read."""
+    import numpy as np
+
+    from anycrawl_spark.operators.seen import ShardBroadcast
+
+    none = np.array([], dtype=np.int64)
+    driver = ShardBroadcast(spark)
+    try:
+        assert driver.merge(none, 4) == [] and driver.bc is not None
+        first = driver.bc
+        assert driver.merge(np.arange(10, dtype=np.int64), 4)
+        live = driver.bc
+        assert live is not first
+        assert driver.merge(none, 4) == [] and driver.bc is live
+    finally:
+        driver.close()
