@@ -521,7 +521,8 @@ class CrawlEngine:
         ):
             self.pending[r.job_id] = r["count"]
         # the regime follows the bytes of the committed state, the quantity
-        # the uninterrupted engine's cap check reads after every commit
+        # the uninterrupted engine's next round checks first (the round's
+        # key bound is checked when it runs)
         if self._shard_bc is not None:
             self._shard_bc.close()
         # persisted first, so the byte count and the collect (or the first
