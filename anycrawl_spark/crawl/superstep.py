@@ -624,17 +624,11 @@ class CrawlEngine:
         fetched = fetch_extract(sched, self.web).persist()
 
         ok = fetched.filter(F.col("status_code") == 200)
-        retryable = fetched.filter(
-            is_retryable_col(F.col("status_code"))
-            & (F.col("attempt") + 1 < self.params.max_attempts)
+        retry = is_retryable_col(F.col("status_code")) & (
+            F.col("attempt") + 1 < self.params.max_attempts
         )
-        dead = fetched.filter(
-            (F.col("status_code") != 200)
-            & ~(
-                is_retryable_col(F.col("status_code"))
-                & (F.col("attempt") + 1 < self.params.max_attempts)
-            )
-        )
+        retryable = fetched.filter(retry)
+        dead = fetched.filter((F.col("status_code") != 200) & ~retry)
 
         docs = ok  # extraction already ran in the fused stage
 
@@ -784,11 +778,7 @@ class CrawlEngine:
             fetched.withColumn(
                 "k",
                 F.when(F.col("status_code") == 200, "ok")
-                .when(
-                    is_retryable_col(F.col("status_code"))
-                    & (F.col("attempt") + 1 < self.params.max_attempts),
-                    "retry",
-                )
+                .when(retry, "retry")
                 .otherwise("dead"),
             )
             .groupBy("job_id", "k")

@@ -411,24 +411,6 @@ def host_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: url_host(u) if u is not None else None)
 
 
-@F.pandas_udf(T.StringType())
-def registrable_domain_udf(hosts: pd.Series) -> pd.Series:
-    return hosts.map(registrable_domain)
-
-
-@F.pandas_udf(T.StringType())
-def origin_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: url_origin(u) if u is not None else None)
-
-
-@F.pandas_udf(T.StringType())
-def resolve_url_udf(bases: pd.Series, rels: pd.Series) -> pd.Series:
-    return pd.Series(
-        [resolve_url(b, r) if (b is not None and r is not None) else None
-         for b, r in zip(bases, rels)]
-    )
-
-
 def with_url_key(df, url_col: str = "url"):
     """Attach (canonical url, url_hash, host) — the standard key triple.
 

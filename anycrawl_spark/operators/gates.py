@@ -18,7 +18,8 @@ vectorized predicate (SURVEY §2.2, §4.2):
 - include/exclude path filter F1 (glob + /re/ compiled per job on the driver,
   matched vectorized; reference: Base.ts:339-379).
 
-All job-level metadata (limits, strategies, compiled patterns) rides inside
+Robots, scope and path filters run as one fused pandas UDF per candidate
+batch (``make_candidate_gate``). All job-level metadata (limits, strategies, compiled patterns) rides inside
 UDF closures / literal maps — the jobs dim is tiny vs the frontier (a
 broadcast join in spirit; reference analog J3).
 """
@@ -36,10 +37,6 @@ from anycrawl_spark.functions.patterns import (
     compile_include_patterns,
     excludes_configured,
     url_passes,
-)
-from anycrawl_spark.functions.urls import (
-    registrable_domain_udf,
-    origin_udf,
 )
 
 _SCHED_ORDER = ["depth", "discovery_seq"]  # asc; unique per job
@@ -143,24 +140,6 @@ def apply_budget(pending: DataFrame, remaining_by_job: dict[str, int]) -> DataFr
         .filter(F.col("_rank") <= F.coalesce(F.col("_remaining"), F.lit(0)))
         .drop("_rank", "_remaining")
     )
-
-
-def make_robots_filter(robots_rules_by_host: dict[str, list[tuple[str, str]]]):
-    """Vectorized robots allow/deny on (host, url). Allowed when host unknown."""
-    rules = {h: list(rs) for h, rs in robots_rules_by_host.items()}
-
-    @F.pandas_udf(T.BooleanType())
-    def robots_allowed(host: pd.Series, url: pd.Series) -> pd.Series:
-        out = []
-        for h, u in zip(host, url):
-            rs = rules.get(h)
-            if not rs:
-                out.append(True)
-                continue
-            out.append(robots_decision(rs, robots_target(u)))
-        return pd.Series(out)
-
-    return robots_allowed
 
 
 def make_robots_text_gate(texts_by_host: dict[str, str], agent: str):
@@ -331,65 +310,6 @@ def with_dim_delays(pending: DataFrame, robots_dim: DataFrame) -> DataFrame:
     return pending.join(delays.hint("shuffle_hash"), "host", "left")
 
 
-def make_job_gate(jobs: list[dict]):
-    """Vectorized per-job candidate gate: scope keys + path patterns.
-
-    Returns (udf, needed_cols): call as udf(job_id, url, host, domain, origin).
-    """
-    meta = {}
-    for j in jobs:
-        meta[j["job_id"]] = {
-            "strategy": j["strategy"],
-            "include": compile_include_patterns(j.get("include_paths")),
-            "exclude": compile_exclude_patterns(j.get("exclude_paths")),
-            "exclude_active": excludes_configured(j.get("exclude_paths")),
-            "seed_host": None,
-            "seed_domain": None,
-            "seed_origin": None,
-        }
-    # seed scope keys, computed once on the driver
-    from anycrawl_spark.functions.urls import (
-        canonicalize_url, url_host, url_origin, registrable_domain,
-    )
-
-    for j in jobs:
-        seed = canonicalize_url(j["seed_url"])
-        m = meta[j["job_id"]]
-        if seed:
-            m["seed_host"] = url_host(seed)
-            m["seed_domain"] = registrable_domain(m["seed_host"])
-            m["seed_origin"] = url_origin(seed)
-
-    @F.pandas_udf(T.BooleanType())
-    def job_gate(
-        job_id: pd.Series, url: pd.Series, host: pd.Series,
-        domain: pd.Series, origin: pd.Series,
-    ) -> pd.Series:
-        out = []
-        for jid, u, h, d, o in zip(job_id, url, host, domain, origin):
-            m = meta.get(jid)
-            if m is None:
-                out.append(False)
-                continue
-            s = m["strategy"]
-            if s == "same-hostname":
-                ok = h == m["seed_host"]
-            elif s == "same-origin":
-                ok = o == m["seed_origin"]
-            elif s == "all":
-                ok = True
-            else:  # same-domain (reference default)
-                ok = d == m["seed_domain"]
-            if ok:
-                # standalone gate has no parent-page context; the fused
-                # candidate gate carries the current-URL exclude quirk
-                ok = url_passes(u, m["include"], m["exclude"])
-            out.append(bool(ok))
-        return pd.Series(out)
-
-    return job_gate
-
-
 def make_candidate_gate(
     jobs: list[dict],
     robots_rules_by_host: dict[str, list[tuple[str, str]]],
@@ -489,8 +409,3 @@ def make_candidate_gate(
 
     return gate.asNondeterministic()
 
-
-def with_scope_keys(df: DataFrame) -> DataFrame:
-    return df.withColumn("_domain", registrable_domain_udf(F.col("host"))).withColumn(
-        "_origin", origin_udf(F.col("url"))
-    )

@@ -1,38 +1,34 @@
-"""URL-seen filter: partitioned bloom shards + exact anti-join (SURVEY §2.3 J1).
+"""URL-seen filter: partitioned bloom/cuckoo shards + exact anti-join (SURVEY §2.3 J1).
 
 The reference dedups inside Crawlee's RequestQueueV2 on
 ``${jobId}-${computeUniqueKey(url)}`` (reference: packages/scrape/src/engines/
 Base.ts:413-441). At 10^10 seen keys a bare ``left_anti`` join shuffles the
-full candidate set against the full seen table every round; this module adds
+full candidate set against the full seen table every round; this module holds
 the scale path mandated by north_rule ("partitioned bloom/cuckoo URL-seen
-filter"):
+filter") as ONE dataflow, each step parameterized by the filter's numpy
+kernels (bloom here, delete-capable cuckoo in ``seen_cuckoo.py``):
 
-1. ``seen`` is hash-bucketed on ``pmod(dedup_hash, num_buckets)``; each bucket
-   builds one bloom bitmap (numpy, vectorized) via ``applyInPandas`` — one
-   binary row per bucket, ~1.2 bytes/key at 10 bits/key (fpp ~1%).
-2. Candidates (bucketed the same way) join the shard table ON THE BUCKET KEY —
-   co-partitioned, so each shard travels once to where its candidates are;
-   nothing resembling a 12 GB broadcast at 10^10 scale. Locally Catalyst
-   broadcasts the (tiny) shard table, which is also right.
-3. ``might_contain`` (pandas UDF, numpy bit probe) splits candidates:
-   bloom-negative => definitively fresh (no false negatives, no join needed);
-   bloom-positive (true dups + ~1% FP) => exact ``left_anti`` against seen.
+1. ``seen`` is hash-bucketed on ``pmod(dedup_hash, num_buckets)``; a bucket
+   holds binary blobs — bloom generations (~1.2 bytes/key at 10 bits/key,
+   fpp ~1%) or one cuckoo table.
+2. The probe attaches ``maybe_seen`` (hits OR over a bucket's blobs): a
+   scalar pandas UDF over the ``{bucket: [blob, ...]}`` broadcast map while
+   it fits ``BROADCAST_SHARDS_MAX_BYTES``, else a cogroup on the bucket key
+   that sends only keys through Arrow — never a 12 GB broadcast.
+3. ``split_fresh``: negatives are fresh outright (no false negatives);
+   positives take the exact ``left_anti`` against seen, which so sees only
+   (dup_rate + fpp) of the candidates.
+4. ``merge_shards``: a round's keys cogroup with only the dirty buckets'
+   rows; clean buckets never cross the Arrow boundary.
 
-Net effect at scale: the expensive anti-join sees only (dup_rate + 1%) of
-candidates instead of all of them. Shard state is maintained INCREMENTALLY
-across rounds: each bucket holds a list of bloom generations (scalable bloom
-filters, Almeida et al. 2007); per round, fresh keys OR-merge into the newest
-generation of dirtied buckets only, and nothing rescans the lifetime seen
-set. One kernel (``_merge_shard_kernel``) does the merge in two places:
-
-- ``ShardBroadcast.merge`` on the driver, while the shard blobs fit
-  ``BROADCAST_SHARDS_MAX_BYTES`` and the crawl's rounds stay under its
-  driver-merge key bound — the driver map is then the state the broadcast
-  probe reads, and merging there costs no Spark job;
-- ``merge_bloom_shards`` as a cogroup over a Spark DataFrame past the cap —
-  clean buckets never cross the Arrow boundary. At production scale the
-  shard table is an Iceberg table of binary rows kept current by a
-  per-round MERGE of exactly the dirty generations.
+Bloom state is maintained INCREMENTALLY across rounds: each bucket holds a
+list of generations (scalable bloom filters, Almeida et al. 2007), and
+fresh keys OR-merge into the newest generation of dirtied buckets only
+(``merge_bucket``); nothing rescans the lifetime seen set. The kernel runs
+on the driver (``ShardBroadcast.merge``) while the blobs fit the broadcast
+cap and the crawl's rounds its driver-merge key bound, and as a cogroup
+(``merge_bloom_shards``) past them — at production scale an Iceberg table
+of binary rows kept current by a per-round MERGE of the dirty generations.
 """
 
 from __future__ import annotations
@@ -103,29 +99,11 @@ def _bit_positions(hashes: np.ndarray, m_bits: int) -> Iterator[np.ndarray]:
         yield ((h1 + np.uint64(i) * h2) % np.uint64(m_bits)).astype(np.int64)
 
 
-def _build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-    hashes = pdf["dedup_hash"].to_numpy()
-    m_bits = _bloom_params(len(hashes))
-    bits = np.zeros(m_bits // 8, dtype=np.uint8)
-    for pos in _bit_positions(hashes, m_bits):
+def _set_bits(bits: np.ndarray, hashes: np.ndarray) -> bytes:
+    """OR every key's BLOOM_K bits into ``bits`` (in place); return its bytes."""
+    for pos in _bit_positions(hashes, len(bits) * 8):
         np.bitwise_or.at(bits, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
-    return pd.DataFrame(
-        {
-            "bucket": [int(pdf["bucket"].iloc[0])],
-            "gen": [0],
-            "n_keys": [len(hashes)],
-            "bloom": [bits.tobytes()],
-        }
-    )
-
-
-def build_bloom_shards(seen_keyed: DataFrame) -> DataFrame:
-    """seen rows (with dedup_hash+bucket) -> one bloom row per bucket."""
-    return (
-        seen_keyed.select("bucket", "dedup_hash")
-        .groupBy("bucket")
-        .applyInPandas(_build_shard, schema=SHARD_SCHEMA)
-    )
+    return bits.tobytes()
 
 
 def _probe_blob(hs: np.ndarray, blob: bytes) -> np.ndarray:
@@ -135,32 +113,6 @@ def _probe_blob(hs: np.ndarray, blob: bytes) -> np.ndarray:
     for pos in _bit_positions(hs, m_bits):
         hit &= (bits[pos >> 3] & (np.uint8(1) << (pos & 7).astype(np.uint8))) != 0
     return hit
-
-
-def _probe_cogroup(keys: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
-    """Cogrouped probe: one bucket's candidate KEYS + its bloom generation(s).
-
-    Two bandwidth decisions, both load-bearing at 10^10 keys:
-    - the shard blobs cross the wire ONCE per bucket (cogroup), never once
-      per candidate row;
-    - only the 8-byte dedup_hash keys round-trip through Arrow — candidate
-      payload columns never leave the JVM (the verdict is joined back on the
-      hash). Measured locally this is the difference between a ~1.2 GB and a
-      ~64 MB Python transfer per 8M candidates.
-
-    A bucket's shard is a LIST of bloom generations (scalable-bloom growth,
-    Almeida et al. 2007): a key may be in any generation, so hits OR across
-    generations.
-    """
-    if len(keys) == 0:
-        return pd.DataFrame({"dedup_hash": [], "maybe_seen": []}).astype(
-            {"dedup_hash": "int64", "maybe_seen": "bool"}
-        )
-    hs = keys["dedup_hash"].to_numpy()
-    hit = np.zeros(len(hs), dtype=bool)
-    for blob in shard["bloom"]:
-        hit |= _probe_blob(hs, blob)
-    return pd.DataFrame({"dedup_hash": hs, "maybe_seen": hit})
 
 
 # -- incremental shard maintenance (scalable-bloom generations) -------------
@@ -177,49 +129,207 @@ def _probe_cogroup(keys: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
 GEN_GROWTH = 2  # each new generation doubles the previous capacity
 
 
-def _merge_shard_kernel(fresh: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
-    """One bucket: existing generations + this round's fresh keys ->
-    new generation list, with ``updated`` flagging rows that changed."""
-    gens = shard.sort_values("gen") if not shard.empty else shard
-    if len(fresh) == 0:
-        out = gens.copy()
-        out["updated"] = False
-        return out[["bucket", "gen", "n_keys", "bloom", "updated"]]
-    bucket = int(fresh["bucket"].iloc[0])
-    hs = fresh["dedup_hash"].to_numpy()
-    rows = []
-    if not gens.empty:
-        for r in gens.iloc[:-1].itertuples(index=False):
-            rows.append((bucket, int(r.gen), int(r.n_keys), r.bloom, False))
-        last = gens.iloc[-1]
-        m_bits = len(last["bloom"]) * 8
-        cap = m_bits // _gen_bits_per_key(int(last["gen"]))
-        if int(last["n_keys"]) + len(hs) <= cap:
-            bits = np.frombuffer(last["bloom"], dtype=np.uint8).copy()
-            for pos in _bit_positions(hs, m_bits):
-                np.bitwise_or.at(bits, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
-            rows.append(
-                (bucket, int(last["gen"]), int(last["n_keys"]) + len(hs),
-                 bits.tobytes(), True)
-            )
-            return pd.DataFrame(
-                rows, columns=["bucket", "gen", "n_keys", "bloom", "updated"]
-            )
-        # newest generation is full: keep it read-only, open a bigger one —
-        # capacity grows GEN_GROWTH x AND the per-key density tightens by
-        # GEN_TIGHTEN_BITS so the union fpp stays geometrically bounded
-        rows.append((bucket, int(last["gen"]), int(last["n_keys"]), last["bloom"], False))
-        next_gen = int(last["gen"]) + 1
-        grow_bits = (cap * GEN_GROWTH * _gen_bits_per_key(next_gen) + 63) // 64 * 64
+def merge_bucket(
+    gens: list[tuple[int, int, bytes]], keys: np.ndarray
+) -> tuple[int, int, bytes]:
+    """One bucket's ``(gen, n_keys, bloom)`` generations, in gen order, + this
+    round's fresh keys -> the one generation that changes. The keys OR into
+    the newest generation while it has capacity; an empty bucket or a full
+    newest generation (kept read-only) opens the next one — capacity grows
+    GEN_GROWTH x AND the per-key density tightens by GEN_TIGHTEN_BITS, so the
+    union fpp stays geometrically bounded."""
+    if not gens:
+        gen, grow_bits = 0, 0
     else:
-        next_gen = 0
-        grow_bits = 0
-    m_bits = max(_bloom_params(len(hs), _gen_bits_per_key(next_gen)), grow_bits)
-    bits = np.zeros(m_bits // 8, dtype=np.uint8)
-    for pos in _bit_positions(hs, m_bits):
-        np.bitwise_or.at(bits, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
-    rows.append((bucket, next_gen, len(hs), bits.tobytes(), True))
-    return pd.DataFrame(rows, columns=["bucket", "gen", "n_keys", "bloom", "updated"])
+        gen, n_keys, bloom = gens[-1]
+        cap = len(bloom) * 8 // _gen_bits_per_key(gen)
+        if n_keys + len(keys) <= cap:
+            bits = np.frombuffer(bloom, dtype=np.uint8).copy()
+            return gen, n_keys + len(keys), _set_bits(bits, keys)
+        gen += 1
+        grow_bits = (cap * GEN_GROWTH * _gen_bits_per_key(gen) + 63) // 64 * 64
+    m_bits = max(_bloom_params(len(keys), _gen_bits_per_key(gen)), grow_bits)
+    return gen, len(keys), _set_bits(np.zeros(m_bits // 8, dtype=np.uint8), keys)
+
+
+# -- the shard dataflow both filters share ------------------------------------
+#
+# A filter brings its shard rows (``bucket`` + a binary blob column), a probe
+# kernel ``(keys, blob) -> hits`` for one blob, and a cogroup merge kernel.
+
+# shard sets up to this many bytes ride an sc.broadcast; above it, the
+# cogrouped co-partitioned probe takes over (the 10^10-key regime, where the
+# shard table itself is ~12 GB and must never be broadcast)
+BROADCAST_SHARDS_MAX_BYTES = 256 * 1024 * 1024
+
+
+def broadcast_shards(shards: DataFrame, blob: str = "bloom"):
+    """Collect + broadcast the ``{bucket: [blob, ...]}`` map once (reusable
+    across rounds): a bloom bucket's generations, a cuckoo bucket's table."""
+    shard_map: dict[int, list[bytes]] = {}
+    for b, data in shards.select("bucket", blob).collect():
+        shard_map.setdefault(b, []).append(data)
+    return shards.sparkSession.sparkContext.broadcast(shard_map)
+
+
+def _probe_blobs(probe_blob, blobs, hs: np.ndarray) -> np.ndarray:
+    """One bucket's verdicts: a key may sit in any of its blobs, so hits OR."""
+    hit = np.zeros(len(hs), dtype=bool)
+    for blob in blobs:
+        hit |= probe_blob(hs, blob)
+    return hit
+
+
+def _broadcast_probe(cand: DataFrame, bc, probe_blob) -> DataFrame:
+    """Probe via the broadcast shard map + scalar pandas UDF.
+
+    Bandwidth: a scalar pandas UDF ships ONLY its input columns through Arrow
+    — 16 bytes/row out, 1 byte/row back; the shard bytes reach each worker
+    once via sc.broadcast. No shuffle, no join-back. This is the fast path
+    whenever the shard set fits in memory (i.e., any seen-set below ~10^8-10^9
+    keys); beyond that ``_cogroup_probe`` keeps the same dataflow co-partitioned.
+    """
+
+    @F.pandas_udf(T.BooleanType())
+    def probe(bucket: pd.Series, dedup_hash: pd.Series) -> pd.Series:
+        shard_map = bc.value
+        bk = bucket.to_numpy()
+        keys = dedup_hash.to_numpy()
+        out = np.zeros(len(bk), dtype=bool)
+        for b in np.unique(bk):
+            blobs = shard_map.get(int(b))
+            if blobs:  # a bucket that never saw anything stays False
+                idxs = np.nonzero(bk == b)[0]
+                out[idxs] = _probe_blobs(probe_blob, blobs, keys[idxs])
+        return pd.Series(out)
+
+    return cand.withColumn("maybe_seen", probe(F.col("bucket"), F.col("dedup_hash")))
+
+
+def _cogroup_probe(cand: DataFrame, shards: DataFrame, probe_blob, blob: str) -> DataFrame:
+    """Probe via cogroup on the bucket key + hash-join of verdicts — the
+    co-partitioned scale path (shards travel once per bucket, never
+    broadcast).
+
+    Two bandwidth decisions, both load-bearing at 10^10 keys:
+    - the shard blobs cross the wire ONCE per bucket (cogroup), never once
+      per candidate row;
+    - only the 8-byte dedup_hash keys round-trip through Arrow — candidate
+      payload columns never leave the JVM (the verdict is joined back on the
+      hash). Measured locally this is the difference between a ~1.2 GB and a
+      ~64 MB Python transfer per 8M candidates.
+    """
+
+    def verdicts(keys: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
+        hs = keys["dedup_hash"].to_numpy(dtype=np.int64)
+        return pd.DataFrame(
+            {"dedup_hash": hs, "maybe_seen": _probe_blobs(probe_blob, shard[blob], hs)}
+        )
+
+    probed = (
+        cand.select("bucket", "dedup_hash")
+        .distinct()
+        .groupBy("bucket")
+        .cogroup(shards.groupBy("bucket"))
+        .applyInPandas(verdicts, schema="dedup_hash long, maybe_seen boolean")
+    )
+    return cand.join(probed, "dedup_hash")
+
+
+def probe_shards(
+    cand: DataFrame, strategy: str, shards: DataFrame | None, bc, probe_blob, blob: str
+) -> DataFrame:
+    """Attach ``maybe_seen`` to keyed candidates. ``strategy='broadcast'``
+    reads the live ``bc`` (or collects + broadcasts ``shards`` when there is
+    none); ``'cogroup'`` cogroups with ``shards``."""
+    if strategy == "broadcast":
+        if bc is None:
+            bc = broadcast_shards(shards, blob)
+        return _broadcast_probe(cand, bc, probe_blob)
+    return _cogroup_probe(cand, shards, probe_blob, blob)
+
+
+def split_fresh(probed: DataFrame, seen: DataFrame) -> DataFrame:
+    """Probed candidates -> the candidate rows NOT in ``seen``: negatives are
+    fresh outright, positives go through the exact anti-join. Drops the
+    helper key columns."""
+    definitely_fresh = probed.filter(~F.col("maybe_seen"))
+    needs_exact = probed.filter(F.col("maybe_seen")).join(
+        seen.select("job_id", "url_hash"), ["job_id", "url_hash"], "left_anti"
+    )
+    result = definitely_fresh.unionByName(needs_exact)
+    return result.drop("maybe_seen", "dedup_hash", "bucket")
+
+
+def merge_shards(
+    shards: DataFrame,
+    ops: DataFrame,
+    merge_group,
+    schema: T.StructType,
+    dirty_buckets: list[int] | None = None,
+) -> DataFrame:
+    """Merge one round's keyed ``ops`` into the shard state: each dirty
+    bucket's ops cogroup with its rows through ``merge_group``, which returns
+    that bucket's ``schema`` rows; clean buckets pass through with the
+    schema's extra flag columns False.
+
+    Dirty/clean split: buckets with no ops this round pass through without
+    their blobs ever crossing the Arrow boundary — late-crawl rounds touch
+    few buckets, and at 4096 buckets this is most of the state. Callers that
+    already know the dirty-bucket list (the crawl driver collects it from
+    the cached fresh set — <= num_buckets ints) pass it in, turning the
+    split into two scan filters; otherwise a broadcast semi/anti join
+    derives it without any driver action.
+    """
+    # the cogroup pairs the two sides by the hash of the bucket value, and a
+    # long bucket (state built without the filter's schema) hashes to other
+    # partitions than the ops' int one: the dirty buckets would meet no rows
+    shards = shards.withColumn("bucket", F.col("bucket").cast("int"))
+    if dirty_buckets is not None:
+        dirty = shards.filter(F.col("bucket").isin(dirty_buckets))
+        clean = shards.filter(~F.col("bucket").isin(dirty_buckets))
+    else:
+        op_buckets = F.broadcast(ops.select("bucket").distinct())
+        dirty = shards.join(op_buckets, "bucket", "semi")
+        clean = shards.join(op_buckets, "bucket", "anti")
+    clean = clean.select(
+        *[c if c in shards.columns else F.lit(False).alias(c) for c in schema.fieldNames()]
+    )
+    merged_dirty = (
+        ops.groupBy("bucket")
+        .cogroup(dirty.groupBy("bucket"))
+        .applyInPandas(merge_group, schema=schema)
+    )
+    return merged_dirty.unionByName(clean)
+
+
+# -- bloom: the shard dataflow over merge_bucket and _probe_blob --------------
+
+
+def _build_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    row = (int(pdf["bucket"].iloc[0]), *merge_bucket([], pdf["dedup_hash"].to_numpy()))
+    return pd.DataFrame([row], columns=SHARD_SCHEMA.fieldNames())
+
+
+def build_bloom_shards(seen_keyed: DataFrame) -> DataFrame:
+    """seen rows (with dedup_hash+bucket) -> one bloom row per bucket."""
+    return (
+        seen_keyed.select("bucket", "dedup_hash")
+        .groupBy("bucket")
+        .applyInPandas(_build_group, schema=SHARD_SCHEMA)
+    )
+
+
+def _merge_group(fresh: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
+    """One bucket's fresh keys + generation rows -> its MERGED_SHARD_SCHEMA
+    rows, ``updated`` on the generation ``merge_bucket`` changed."""
+    bucket = int((fresh if len(fresh) else shard)["bucket"].iloc[0])
+    gens = sorted(zip(shard["gen"].tolist(), shard["n_keys"].tolist(), shard["bloom"]))
+    new = merge_bucket(gens, fresh["dedup_hash"].to_numpy()) if len(fresh) else None
+    rows = [(bucket, *g, False) for g in gens if new is None or g[0] != new[0]]
+    if new is not None:
+        rows.append((bucket, *new, True))
+    return pd.DataFrame(rows, columns=MERGED_SHARD_SCHEMA.fieldNames())
 
 
 def merge_bloom_shards(
@@ -233,54 +343,16 @@ def merge_bloom_shards(
     ``fresh_keyed``: this round's fresh keys with dedup_hash+bucket attached.
     Returns MERGED_SHARD_SCHEMA rows — the FULL new state; rows with
     ``updated`` are the only ones that need persisting (Iceberg MERGE writes
-    exactly these). Cogrouped on the bucket key, so each dirty bucket's blob
-    crosses the wire once and clean buckets' blobs aren't copied at all.
+    exactly these). Cogrouped on the bucket key (``merge_shards``), so each
+    dirty bucket's blob crosses the wire once and clean buckets' blobs aren't
+    copied at all.
     """
-    fresh_keys = fresh_keyed.select("bucket", "dedup_hash")
     if shards is None:
-        shards = fresh_keys.sparkSession.createDataFrame([], SHARD_SCHEMA)
-    # Dirty/clean split: buckets with no fresh keys this round pass through
-    # without their blobs ever crossing the Arrow boundary — late-crawl rounds
-    # touch few buckets, and at 4096 buckets this is most of the state.
-    # Callers that already know the dirty-bucket list (the crawl driver
-    # collects it from the cached fresh set — <= num_buckets ints) pass it in,
-    # turning the split into two scan filters; otherwise a broadcast
-    # semi/anti join derives it without any driver action.
-    if dirty_buckets is not None:
-        dirty = shards.filter(F.col("bucket").isin(dirty_buckets))
-        clean = shards.filter(~F.col("bucket").isin(dirty_buckets))
-    else:
-        fresh_buckets = fresh_keys.select("bucket").distinct()
-        dirty = shards.join(F.broadcast(fresh_buckets), "bucket", "semi")
-        clean = shards.join(F.broadcast(fresh_buckets), "bucket", "anti")
-    clean = clean.withColumn("updated", F.lit(False)).select(
-        [f.name for f in MERGED_SHARD_SCHEMA.fields]
+        shards = fresh_keyed.sparkSession.createDataFrame([], SHARD_SCHEMA)
+    return merge_shards(
+        shards, fresh_keyed.select("bucket", "dedup_hash"), _merge_group,
+        MERGED_SHARD_SCHEMA, dirty_buckets,
     )
-    merged_dirty = (
-        fresh_keys.groupBy("bucket")
-        .cogroup(dirty.groupBy("bucket"))
-        .applyInPandas(
-            lambda f, sh: _merge_shard_kernel(f, sh), schema=MERGED_SHARD_SCHEMA
-        )
-    )
-    return merged_dirty.unionByName(clean)
-
-
-# shard sets up to this many bytes ride an sc.broadcast; above it, the
-# cogrouped co-partitioned probe takes over (the 10^10-key regime, where the
-# shard table itself is ~12 GB and must never be broadcast)
-BROADCAST_SHARDS_MAX_BYTES = 256 * 1024 * 1024
-
-
-def broadcast_shards(shards: DataFrame):
-    """Collect + broadcast the shard map once (reusable across rounds).
-
-    Map value is the list of bloom generations for the bucket."""
-    spark = shards.sparkSession
-    shard_map: dict[int, list[bytes]] = {}
-    for r in shards.collect():
-        shard_map.setdefault(r.bucket, []).append(r.bloom)
-    return spark.sparkContext.broadcast(shard_map)
 
 
 class ShardBroadcast:
@@ -334,24 +406,16 @@ class ShardBroadcast:
 
         The driver twin of ``merge_bloom_shards``: keys group by
         ``pmod(dedup_hash, num_buckets)`` and each dirty bucket runs the same
-        ``_merge_shard_kernel``, so both give identical rows (bits are an OR
-        over keys, ``n_keys`` a sum; key order cannot matter)."""
+        ``merge_bucket``, so both give identical rows (bits are an OR over
+        keys, ``n_keys`` a sum; key order cannot matter)."""
         buckets = np.mod(dedup_hash, num_buckets)
         order = np.argsort(buckets, kind="stable")
         dirty, starts = np.unique(buckets[order], return_index=True)
         updated = []
         for b, hs in zip(dirty.tolist(), np.split(dedup_hash[order], starts[1:])):
             gens = self._map.get(b, {})
-            shard = pd.DataFrame(
-                [(b, g, n, blob) for g, (n, blob) in sorted(gens.items())],
-                columns=SHARD_SCHEMA.fieldNames(),
-            )
-            fresh = pd.DataFrame({"bucket": np.full(len(hs), b), "dedup_hash": hs})
-            out = _merge_shard_kernel(fresh, shard)
-            updated.extend(
-                (int(r.bucket), int(r.gen), int(r.n_keys), r.bloom)
-                for r in out[out["updated"]].itertuples(index=False)
-            )
+            gen_rows = [(g, *gens[g]) for g in sorted(gens)]
+            updated.append((b, *merge_bucket(gen_rows, hs)))
         if updated or self._bc is None:
             # no key, no change: a live broadcast stays as it is
             self.apply_delta(updated)
@@ -379,60 +443,12 @@ class ShardBroadcast:
         self.nbytes = 0
 
 
-def _broadcast_probe(cand: DataFrame, shards: DataFrame | None, bc=None) -> DataFrame:
-    """Probe via broadcast shards + scalar pandas UDF.
-
-    Bandwidth: a scalar pandas UDF ships ONLY its input columns through Arrow
-    — 16 bytes/row out, 1 byte/row back; the shard bytes reach each worker
-    once via sc.broadcast. No shuffle, no join-back. This is the fast path
-    whenever the shard set fits in memory (i.e., any seen-set below ~10^8-10^9
-    keys); beyond that ``_cogroup_probe`` keeps the same dataflow co-partitioned.
-    """
-    if bc is None:
-        bc = broadcast_shards(shards)
-
-    @F.pandas_udf(T.BooleanType())
-    def probe(bucket: pd.Series, dedup_hash: pd.Series) -> pd.Series:
-        shards_local = bc.value
-        n = len(bucket)
-        out = np.zeros(n, dtype=bool)
-        bk = bucket.to_numpy()
-        keys = dedup_hash.to_numpy()
-        for b in np.unique(bk):
-            blobs = shards_local.get(int(b))
-            if not blobs:
-                continue  # bucket never seen anything => stays False
-            idxs = np.nonzero(bk == b)[0]
-            hit = np.zeros(len(idxs), dtype=bool)
-            for blob in blobs:
-                hit |= _probe_blob(keys[idxs], blob)
-            out[idxs] = hit
-        return pd.Series(out)
-
-    return cand.withColumn("maybe_seen", probe(F.col("bucket"), F.col("dedup_hash")))
-
-
-def _cogroup_probe(cand: DataFrame, shards: DataFrame) -> DataFrame:
-    """Probe via cogroup on the bucket key + hash-join of verdicts — the
-    co-partitioned scale path (shards travel once per bucket, never broadcast)."""
-    verdicts = (
-        cand.select("bucket", "dedup_hash")
-        .distinct()
-        .groupBy("bucket")
-        .cogroup(shards.groupBy("bucket"))
-        .applyInPandas(
-            lambda k, s: _probe_cogroup(k, s),
-            schema="dedup_hash long, maybe_seen boolean",
-        )
-    )
-    return cand.join(verdicts, "dedup_hash")
-
-
 def probe_seen(
     candidates: DataFrame,
     seen: DataFrame,
     num_buckets: int = DEFAULT_BUCKETS,
-    strategy: str = "auto",
+    *,
+    strategy: str,
     shards: DataFrame | None = None,
     shards_bc=None,
 ) -> DataFrame:
@@ -442,48 +458,26 @@ def probe_seen(
     verdict), so a caller that persists it evaluates the candidate chain and
     the probe once instead of once per branch."""
     cand = with_dedup_key(candidates, num_buckets)
-    if strategy == "auto":
-        # a count() over the full seen table: callers that know their shard
-        # state (the crawl driver does) pass the strategy instead
-        est_bytes = seen.count() * BITS_PER_KEY // 8
-        strategy = "broadcast" if est_bytes <= BROADCAST_SHARDS_MAX_BYTES else "cogroup"
-    if strategy == "broadcast" and shards_bc is not None:
-        # a live broadcast is the whole shard state: nothing to build
-        return _broadcast_probe(cand, None, bc=shards_bc)
-    if shards is None:
+    if shards is None and (shards_bc is None or strategy != "broadcast"):
         seen_keyed = with_dedup_key(seen.select("job_id", "url_hash"), num_buckets)
         shards = build_bloom_shards(seen_keyed)
-    if strategy == "broadcast":
-        return _broadcast_probe(cand, shards)
-    return _cogroup_probe(cand, shards)
-
-
-def split_fresh(probed: DataFrame, seen: DataFrame) -> DataFrame:
-    """``probe_seen`` output -> the candidate rows NOT in ``seen``:
-    bloom-negatives are fresh outright, bloom-positives go through the exact
-    anti-join. Drops the helper key columns."""
-    definitely_fresh = probed.filter(~F.col("maybe_seen"))
-    needs_exact = probed.filter(F.col("maybe_seen")).join(
-        seen.select("job_id", "url_hash"), ["job_id", "url_hash"], "left_anti"
-    )
-    result = definitely_fresh.unionByName(needs_exact)
-    return result.drop("maybe_seen", "dedup_hash", "bucket")
+    return probe_shards(cand, strategy, shards, shards_bc, _probe_blob, "bloom")
 
 
 def filter_fresh(
     candidates: DataFrame,
     seen: DataFrame,
     num_buckets: int = DEFAULT_BUCKETS,
-    use_bloom: bool = True,
-    strategy: str = "auto",
+    *,
+    strategy: str,
     shards: DataFrame | None = None,
     shards_bc=None,
 ) -> DataFrame:
     """Return candidate rows whose (job_id, url_hash) is NOT in ``seen``.
 
     ``candidates``/``seen`` must carry job_id + url_hash. Output preserves
-    candidate columns (minus helper keys). ``strategy``: 'broadcast' |
-    'cogroup' | 'auto' (broadcast while the shard set fits, else cogroup).
+    candidate columns (minus helper keys). ``strategy``: 'broadcast' while
+    the shard set fits ``BROADCAST_SHARDS_MAX_BYTES``, else 'cogroup'.
     Pass ``shards`` (from ``build_bloom_shards``) to reuse cross-round shard
     state — in production the shard table is maintained incrementally, not
     rebuilt from the full seen set every round. ``shards_bc``: a live
@@ -494,11 +488,8 @@ def filter_fresh(
     it); callers that can hold the probed candidates in memory call
     ``probe_seen`` + persist + ``split_fresh`` instead (the crawl driver does).
     """
-    if not use_bloom:
-        return candidates.join(
-            seen.select("job_id", "url_hash"), ["job_id", "url_hash"], "left_anti"
-        )
     probed = probe_seen(
-        candidates, seen, num_buckets, strategy, shards, shards_bc
+        candidates, seen, num_buckets, strategy=strategy, shards=shards,
+        shards_bc=shards_bc,
     )
     return split_fresh(probed, seen)

@@ -10,12 +10,16 @@ prefilter keeps answering "maybe seen" for them until a full generation
 rebuild; a cuckoo shard deletes the fingerprint in place, so re-crawl
 candidates pass the prefilter immediately.
 
-Same sharding scheme as the bloom path: ``dedup_hash = xxhash64(job_id,
-url_hash)`` bucketed by ``pmod(dedup_hash, num_buckets)``; one binary row per
-bucket; probes ship 16 bytes/row through Arrow and return 1; positives are
-re-checked with an exact anti-join, so the *output* of ``filter_fresh_cuckoo``
+The shard dataflow is ``seen.py``'s, shared with the bloom filter:
+``dedup_hash = xxhash64(job_id, url_hash)`` bucketed by ``pmod(dedup_hash,
+num_buckets)``; one binary row per bucket; the broadcast or cogroup probe
+(16 bytes/row through Arrow, 1 back); positives re-checked by
+``split_fresh``'s exact anti-join, so the *output* of ``filter_fresh_cuckoo``
 is exact regardless of the filter's false-positive rate (no false negatives:
-a cuckoo filter stores every inserted fingerprint until deleted).
+a cuckoo filter stores every inserted fingerprint until deleted); the
+dirty/clean cogroup merge. This module holds only what is cuckoo's: the
+fingerprints, insert / delete / eviction, the table probe, the merge kernel
+and the overflow rebuild.
 
 Per-shard layout (standard CF): ``nb`` buckets (power of two) x 4 slots of
 16-bit fingerprints (uint16 numpy array; 0 = empty, fingerprints forced
@@ -38,6 +42,8 @@ uniqueKey), managers/Progress.ts expiry re-queue.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -45,8 +51,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from anycrawl_spark.operators.seen import (
-    BROADCAST_SHARDS_MAX_BYTES,
     DEFAULT_BUCKETS,
+    merge_shards,
+    probe_shards,
+    split_fresh,
     with_dedup_key,
 )
 
@@ -169,6 +177,10 @@ def _probe_table(tbl: np.ndarray, hashes: np.ndarray) -> np.ndarray:
     return hit
 
 
+def _probe_blob(hashes: np.ndarray, blob: bytes) -> np.ndarray:
+    return _probe_table(np.frombuffer(blob, dtype=np.uint16), hashes)
+
+
 def _build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
     hashes = np.unique(pdf["dedup_hash"].to_numpy())
     tbl, _ = _build_table(hashes)
@@ -238,40 +250,22 @@ def merge_cuckoo_shards(
     delete_keyed: DataFrame | None = None,
 ) -> DataFrame:
     """Apply one round's inserts (fresh keys) and deletes (expired keys) to
-    the persisted shard state — the Iceberg-MERGE analog, same dirty/clean
-    split as the bloom path: buckets this round never touched pass through
-    without their blobs crossing the Arrow boundary.
+    the persisted shard state — the Iceberg-MERGE analog, through the bloom
+    path's dirty/clean cogroup (``seen.merge_shards``): buckets this round
+    never touched pass through without their blobs crossing the Arrow
+    boundary.
     """
-    parts = []
-    if fresh_keyed is not None:
-        parts.append(
-            fresh_keyed.select("bucket", "dedup_hash").withColumn("op", F.lit(1))
-        )
-    if delete_keyed is not None:
-        parts.append(
-            delete_keyed.select("bucket", "dedup_hash").withColumn("op", F.lit(-1))
-        )
-    if not parts:
+    ops = [
+        keyed.select("bucket", "dedup_hash", F.lit(op).alias("op"))
+        for keyed, op in ((fresh_keyed, 1), (delete_keyed, -1))
+        if keyed is not None
+    ]
+    if not ops:
         raise ValueError("merge_cuckoo_shards: nothing to merge")
-    ops = parts[0]
-    for p in parts[1:]:
-        ops = ops.unionByName(p)
+    ops = reduce(DataFrame.unionByName, ops)
     if shards is None:
         shards = ops.sparkSession.createDataFrame([], CUCKOO_SHARD_SCHEMA)
-    dirty_buckets = ops.select("bucket").distinct()
-    dirty = shards.join(F.broadcast(dirty_buckets), "bucket", "semi")
-    clean = (
-        shards.join(F.broadcast(dirty_buckets), "bucket", "anti")
-        .withColumn("updated", F.lit(False))
-        .withColumn("overflow", F.lit(False))
-        .select([f.name for f in MERGED_CUCKOO_SCHEMA.fields])
-    )
-    merged_dirty = (
-        ops.groupBy("bucket")
-        .cogroup(dirty.groupBy("bucket"))
-        .applyInPandas(lambda o, s: _merge_kernel(o, s), schema=MERGED_CUCKOO_SCHEMA)
-    )
-    return merged_dirty.unionByName(clean)
+    return merge_shards(shards, ops, _merge_kernel, MERGED_CUCKOO_SCHEMA)
 
 
 def _rebuild_shard(keys: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
@@ -304,136 +298,36 @@ def rebuild_overflow_shards(merged: DataFrame, seen_keyed: DataFrame) -> DataFra
     return ok.unionByName(rebuilt)
 
 
-def broadcast_cuckoo_shards(shards: DataFrame):
-    """Collect + broadcast {bucket: table bytes} (single table per bucket —
-    no generation lists here; deletes keep one table current forever)."""
-    spark = shards.sparkSession
-    return spark.sparkContext.broadcast(
-        {r.bucket: r.table for r in shards.select("bucket", "table").collect()}
-    )
-
-
-# Table bytes per key at build time: 2 B/slot / TARGET_LOAD occupancy x
-# HEADROOM growth room x <=2 power-of-two rounding. Used only to DECIDE
-# broadcast-vs-cogroup, so it deliberately takes the rounding worst case —
-# overestimating flips to cogroup early (safe); underestimating broadcasts
-# a table that may not fit.
-CUCKOO_EST_BYTES_PER_KEY = 2.0 / TARGET_LOAD * HEADROOM * 2.0
-
-
-def _broadcast_probe_cuckoo(cand: DataFrame, shards: DataFrame | None, bc=None) -> DataFrame:
-    """Attach ``maybe_seen`` via broadcast shards + scalar pandas UDF — the
-    same 16-bytes-out / 1-byte-back Arrow shape as the bloom probe."""
-    if bc is None:
-        bc = broadcast_cuckoo_shards(shards)
-
-    @F.pandas_udf(T.BooleanType())
-    def probe(bucket: pd.Series, dedup_hash: pd.Series) -> pd.Series:
-        local = bc.value
-        bk = bucket.to_numpy()
-        keys = dedup_hash.to_numpy()
-        out = np.zeros(len(bk), dtype=bool)
-        for b in np.unique(bk):
-            blob = local.get(int(b))
-            if blob is None:
-                continue
-            idxs = np.nonzero(bk == b)[0]
-            out[idxs] = _probe_table(np.frombuffer(blob, dtype=np.uint16), keys[idxs])
-        return pd.Series(out)
-
-    return cand.withColumn("maybe_seen", probe(F.col("bucket"), F.col("dedup_hash")))
-
-
-def _probe_cogroup_kernel(keys: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
-    """One bucket's candidate KEYS + its (single) cuckoo table. Same two
-    bandwidth rules as the bloom cogroup kernel (seen.py:_probe_cogroup):
-    the table blob crosses the wire once per bucket, and only the 8-byte
-    dedup_hash keys round-trip through Arrow."""
-    if len(keys) == 0:
-        return pd.DataFrame({"dedup_hash": [], "maybe_seen": []}).astype(
-            {"dedup_hash": "int64", "maybe_seen": "bool"}
-        )
-    hs = keys["dedup_hash"].to_numpy()
-    if shard.empty:
-        hit = np.zeros(len(hs), dtype=bool)  # bucket never saw anything
-    else:
-        hit = _probe_table(np.frombuffer(shard["table"].iloc[0], dtype=np.uint16), hs)
-    return pd.DataFrame({"dedup_hash": hs, "maybe_seen": hit})
-
-
-def _cogroup_probe_cuckoo(cand: DataFrame, shards: DataFrame) -> DataFrame:
-    """Co-partitioned scale path: shard blobs travel once per bucket through
-    the shuffle, never collected to the driver or broadcast. This is the
-    path past BROADCAST_SHARDS_MAX_BYTES — at 10^10 keys the table set is
-    ~36 GB (CUCKOO_EST_BYTES_PER_KEY), structurally un-broadcastable
-    (VERDICT r3 #3)."""
-    verdicts = (
-        cand.select("bucket", "dedup_hash")
-        .distinct()
-        .groupBy("bucket")
-        .cogroup(shards.groupBy("bucket"))
-        .applyInPandas(
-            lambda k, s: _probe_cogroup_kernel(k, s),
-            schema="dedup_hash long, maybe_seen boolean",
-        )
-    )
-    return cand.join(verdicts, "dedup_hash")
-
-
 def probe_cuckoo(
-    cand: DataFrame,
-    shards: DataFrame | None,
-    bc=None,
-    strategy: str = "auto",
-    seen_count: int | None = None,
+    cand: DataFrame, shards: DataFrame | None, bc=None, *, strategy: str
 ) -> DataFrame:
-    """Attach ``maybe_seen``; ``strategy``: 'broadcast' | 'cogroup' | 'auto'
-    (mirrors seen.filter_fresh — broadcast while the estimated table bytes
-    fit under BROADCAST_SHARDS_MAX_BYTES, else cogroup). ``seen_count`` feeds
-    the auto estimate without an O(|seen|) count; a live ``bc`` forces the
-    broadcast path (the caller already paid the collect)."""
-    if bc is not None:
-        return _broadcast_probe_cuckoo(cand, shards, bc=bc)
-    if strategy == "auto":
-        if seen_count is not None:
-            est_bytes = int(seen_count * CUCKOO_EST_BYTES_PER_KEY)
-        else:
-            # O(num_buckets) rows — the shard relation is one row per bucket
-            row = shards.agg(F.sum(F.length("table")).alias("b")).collect()[0]
-            est_bytes = int(row["b"] or 0)
-        strategy = "broadcast" if est_bytes <= BROADCAST_SHARDS_MAX_BYTES else "cogroup"
-    if strategy == "broadcast":
-        return _broadcast_probe_cuckoo(cand, shards, bc=bc)
-    return _cogroup_probe_cuckoo(cand, shards)
+    """Attach ``maybe_seen`` to keyed candidates through ``seen``'s broadcast
+    or cogroup probe; ``bc`` is a live ``seen.broadcast_shards(shards,
+    "table")`` map."""
+    return probe_shards(cand, strategy, shards, bc, _probe_blob, "table")
 
 
 def filter_fresh_cuckoo(
     candidates: DataFrame,
     seen: DataFrame,
     num_buckets: int = DEFAULT_BUCKETS,
+    *,
+    strategy: str,
     shards: DataFrame | None = None,
     shards_bc=None,
-    strategy: str = "auto",
-    seen_count: int | None = None,
 ) -> DataFrame:
     """Exact fresh-candidate set via cuckoo prefilter + exact anti-join
     recheck of positives — drop-in alternative to ``seen.filter_fresh``,
-    including its broadcast/cogroup/auto ``strategy`` switch (pass
-    ``seen_count`` so auto never fires an O(|seen|) count action).
-    ``seen`` must be the CURRENT exact key set (post-expiry), matching the
-    shard state the caller maintained with ``merge_cuckoo_shards``.
+    with the same ``strategy`` ('broadcast' | 'cogroup'). ``seen`` must be
+    the CURRENT exact key set (post-expiry), matching the shard state the
+    caller maintained with ``merge_cuckoo_shards``.
 
-    Broadcast lifecycle: when neither ``shards_bc`` nor a caller-held
-    broadcast is supplied, ``probe_cuckoo`` allocates a NEW sc.broadcast
-    whose blobs live until session end — fine for one-shot queries; a
-    long-running crawl loop must hold/patch its own broadcast across rounds
-    and destroy predecessors (the ``ShardBroadcast`` pattern in seen.py)."""
+    Broadcast lifecycle: without ``shards_bc`` the broadcast strategy
+    allocates a NEW sc.broadcast whose blobs live until session end — fine
+    for one-shot queries; a long-running crawl loop must hold/patch its own
+    broadcast across rounds and destroy predecessors (the ``ShardBroadcast``
+    pattern in seen.py)."""
     cand = with_dedup_key(candidates, num_buckets)
     if shards_bc is None and shards is None:
         shards = build_cuckoo_shards(with_dedup_key(seen, num_buckets))
-    probed = probe_cuckoo(cand, shards, bc=shards_bc, strategy=strategy, seen_count=seen_count)
-    fresh = probed.filter(~F.col("maybe_seen"))
-    maybe = probed.filter(F.col("maybe_seen")).join(
-        seen.select("job_id", "url_hash"), ["job_id", "url_hash"], "left_anti"
-    )
-    return fresh.unionByName(maybe).drop("maybe_seen", "dedup_hash", "bucket")
+    return split_fresh(probe_cuckoo(cand, shards, shards_bc, strategy=strategy), seen)

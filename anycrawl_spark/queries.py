@@ -190,9 +190,7 @@ def q_cuckoo_dedup(spark, sf_dir):
     # rebuilt from the post-round exact keys before probing, or that round's
     # inserts would silently probe fresh — never skip this step
     merged = rebuild_overflow_shards(merged, with_dedup_key(seen_now, nb))
-    # strategy pinned: at contract/bench SF the shard set is KBs, and 'auto'
-    # without a tracked seen_count would fire a sizing agg that recomputes
-    # the merge lineage once more (a caller tracking |seen| passes seen_count)
+    # at contract/bench SF the shard set is KBs: the broadcast probe
     return filter_fresh_cuckoo(
         o, seen_now, nb, shards=merged.select("bucket", "n_keys", "table"),
         strategy="broadcast",

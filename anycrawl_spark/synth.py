@@ -226,10 +226,6 @@ def page_html(url: str, cfg: WebConfig = DEFAULT_WEB) -> str:
     return html
 
 
-def page_size_bytes(url: str, cfg: WebConfig = DEFAULT_WEB) -> int:
-    return len(page_html(url, cfg).encode())
-
-
 # --- robots (new functionality; absent in the reference) -------------------
 
 def robots_rules(cfg: WebConfig = DEFAULT_WEB) -> list[dict]:

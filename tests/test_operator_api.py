@@ -1,9 +1,8 @@
 """Standalone operator APIs not used by the fused engine path but exported
-as building blocks (COVERAGE.md references): chained gates, robots filter,
-with_url_key, standalone fetcher."""
+as building blocks (COVERAGE.md references): with_url_key, standalone
+fetcher."""
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 
 def test_with_url_key(spark):
@@ -15,40 +14,6 @@ def test_with_url_key(spark):
     rows = with_url_key(df).collect()
     assert {r.url for r in rows} == {"http://a.com/x", "http://b.com/y?a=1"}
     assert all(r.url_hash is not None and r.host for r in rows)
-
-
-def test_robots_filter_udf(spark):
-    from anycrawl_spark.operators.gates import make_robots_filter
-
-    robots = {"h.com": [("disallow", "/private"), ("allow", "/")]}
-    udf = make_robots_filter(robots)
-    df = spark.createDataFrame(
-        pd.DataFrame({"host": ["h.com", "h.com", "other.com"],
-                      "url": ["http://h.com/private/x", "http://h.com/ok", "http://other.com/p"]})
-    )
-    out = [r.ok for r in df.select(udf(F.col("host"), F.col("url")).alias("ok")).collect()]
-    assert out == [False, True, True]
-
-
-def test_job_gate_udf(spark):
-    from anycrawl_spark.operators.gates import make_job_gate, with_scope_keys
-
-    jobs = [{"job_id": "j", "seed_url": "http://a.example.com/p/0",
-             "strategy": "same-domain", "include_paths": [], "exclude_paths": ["**/skip"]}]
-    gate = make_job_gate(jobs)
-    df = spark.createDataFrame(
-        pd.DataFrame({
-            "job_id": ["j"] * 3,
-            "url": ["http://b.example.com/p/1", "http://other.net/p/1", "http://a.example.com/skip"],
-            "host": ["b.example.com", "other.net", "a.example.com"],
-        })
-    )
-    df = with_scope_keys(df)
-    out = [r.ok for r in df.select(
-        gate(F.col("job_id"), F.col("url"), F.col("host"),
-             F.col("_domain"), F.col("_origin")).alias("ok")
-    ).collect()]
-    assert out == [True, False, False]
 
 
 def test_standalone_fetcher(spark):

@@ -6,13 +6,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from anycrawl_spark.operators.seen import with_dedup_key
+from anycrawl_spark.operators.seen import broadcast_shards, with_dedup_key
 from anycrawl_spark.operators.seen_cuckoo import (
     _build_table,
     _fp_i1_i2,
     _probe_table,
     build_cuckoo_shards,
-    broadcast_cuckoo_shards,
     filter_fresh_cuckoo,
     merge_cuckoo_shards,
     probe_cuckoo,
@@ -72,7 +71,7 @@ def test_fresh_equals_naive_anti_join(spark):
         ("j2", f"http://h/{i}") for i in range(100)
     ]
     seen, cand = _mk(spark, seen_rows), _mk(spark, cand_rows)
-    got = {(r.job_id, r.url) for r in filter_fresh_cuckoo(cand, seen, 8).collect()}
+    got = {(r.job_id, r.url) for r in filter_fresh_cuckoo(cand, seen, 8, strategy="broadcast").collect()}
     want = {
         (r.job_id, r.url)
         for r in cand.join(seen.select("job_id", "url_hash"), ["job_id", "url_hash"], "left_anti").collect()
@@ -83,13 +82,13 @@ def test_fresh_equals_naive_anti_join(spark):
 
 def test_no_false_negatives_via_spark(spark):
     seen = _mk(spark, [("j", f"http://h/{i}") for i in range(3000)])
-    assert filter_fresh_cuckoo(seen, seen, 4).count() == 0
+    assert filter_fresh_cuckoo(seen, seen, 4, strategy="broadcast").count() == 0
 
 
 def test_job_scoping(spark):
     seen = _mk(spark, [("j1", "http://h/x")])
     cand = _mk(spark, [("j2", "http://h/x"), ("j1", "http://h/x")])
-    got = {(r.job_id, r.url) for r in filter_fresh_cuckoo(cand, seen, 4).collect()}
+    got = {(r.job_id, r.url) for r in filter_fresh_cuckoo(cand, seen, 4, strategy="broadcast").collect()}
     assert got == {("j2", "http://h/x")}
 
 
@@ -104,7 +103,7 @@ def test_delete_reopens_urls(spark):
     merged = merge_cuckoo_shards(
         shards0, delete_keyed=with_dedup_key(_mk(spark, expire), nb)
     ).select("bucket", "n_keys", "table")
-    probed = probe_cuckoo(with_dedup_key(seen0, nb), merged)
+    probed = probe_cuckoo(with_dedup_key(seen0, nb), merged, strategy="broadcast")
     hits = {(r.url, r.maybe_seen) for r in probed.select("url", "maybe_seen").collect()}
     # every kept key still positive (no false negatives survive deletion)
     assert all(h for (u, h) in hits if "/keep/" in u)
@@ -114,7 +113,9 @@ def test_delete_reopens_urls(spark):
     assert exp_hits <= 2
     # end-to-end: filter_fresh_cuckoo against the post-expiry exact seen set
     seen_now = _mk(spark, keep)
-    fresh = filter_fresh_cuckoo(_mk(spark, expire + keep[:5]), seen_now, nb, shards=merged)
+    fresh = filter_fresh_cuckoo(
+        _mk(spark, expire + keep[:5]), seen_now, nb, strategy="broadcast", shards=merged
+    )
     assert fresh.count() == len(expire)
 
 
@@ -135,7 +136,7 @@ def test_merge_inserts_and_clean_bucket_passthrough(spark):
         assert r.table == before[r.bucket]
     # all keys (old + new) probe positive
     allk = with_dedup_key(_mk(spark, r0 + r1), nb)
-    probed = probe_cuckoo(allk, merged.select("bucket", "n_keys", "table"))
+    probed = probe_cuckoo(allk, merged.select("bucket", "n_keys", "table"), strategy="broadcast")
     assert probed.filter(~F.col("maybe_seen")).count() == 0
     shards0.unpersist(); merged.unpersist()
 
@@ -157,7 +158,7 @@ def test_overflow_flag_and_rebuild(spark):
     all_keyed = with_dedup_key(_mk(spark, r0 + r1), nb).persist()
     rebuilt = rebuild_overflow_shards(merged, all_keyed).persist()
     assert rebuilt.filter("overflow").count() == 0
-    probed = probe_cuckoo(all_keyed, rebuilt.select("bucket", "n_keys", "table"))
+    probed = probe_cuckoo(all_keyed, rebuilt.select("bucket", "n_keys", "table"), strategy="broadcast")
     assert probed.filter(~F.col("maybe_seen")).count() == 0
     merged.unpersist(); all_keyed.unpersist(); rebuilt.unpersist()
 
@@ -166,9 +167,9 @@ def test_broadcast_probe_path(spark):
     nb = 4
     seen = _mk(spark, [("j", f"http://h/{i}") for i in range(1000)])
     shards = build_cuckoo_shards(with_dedup_key(seen, nb))
-    bc = broadcast_cuckoo_shards(shards)
+    bc = broadcast_shards(shards, "table")
     cand = _mk(spark, [("j", f"http://h/{i}") for i in range(900, 1100)])
-    fresh = filter_fresh_cuckoo(cand, seen, nb, shards_bc=bc)
+    fresh = filter_fresh_cuckoo(cand, seen, nb, strategy="broadcast", shards_bc=bc)
     assert fresh.count() == 100
     bc.destroy()
 
@@ -192,12 +193,6 @@ def test_cogroup_probe_equals_broadcast_probe(spark):
         for r in probe_cuckoo(cand, shards, strategy="cogroup").collect()
     }
     assert via_bc == via_cg
-    # auto with a huge seen_count estimate must pick cogroup and still agree
-    via_auto = {
-        (r.job_id, r.url, r.maybe_seen)
-        for r in probe_cuckoo(cand, shards, seen_count=10**11).collect()
-    }
-    assert via_auto == via_bc
     shards.unpersist(); cand.unpersist()
 
 
@@ -233,7 +228,7 @@ def test_duplicate_keys_build_and_merge(spark):
     keyed = with_dedup_key(_mk(spark, rows), 4)
     merged = merge_cuckoo_shards(None, fresh_keyed=keyed)
     assert merged.filter("overflow").count() == 0
-    probed = probe_cuckoo(keyed, merged.select("bucket", "n_keys", "table"))
+    probed = probe_cuckoo(keyed, merged.select("bucket", "n_keys", "table"), strategy="broadcast")
     assert probed.filter(~F.col("maybe_seen")).count() == 0
     # second round: a NEW batch with intra-batch duplicates merges cleanly
     rows2 = [("j", "http://h/dup2")] * 12 + [("j", f"http://h/x{i}") for i in range(20)]
@@ -242,7 +237,7 @@ def test_duplicate_keys_build_and_merge(spark):
         merged.select("bucket", "n_keys", "table"), fresh_keyed=keyed2
     ).persist()
     assert merged2.filter("overflow").count() == 0
-    probed2 = probe_cuckoo(keyed2, merged2.select("bucket", "n_keys", "table"))
+    probed2 = probe_cuckoo(keyed2, merged2.select("bucket", "n_keys", "table"), strategy="broadcast")
     assert probed2.filter(~F.col("maybe_seen")).count() == 0
     # re-merging ALREADY-SEEN keys as 'fresh' (a caller contract violation)
     # adds fingerprint copies; it must degrade via the overflow flag — never
@@ -252,6 +247,6 @@ def test_duplicate_keys_build_and_merge(spark):
     ).persist()
     all_keyed = with_dedup_key(_mk(spark, rows + rows2), 4)
     fixed = rebuild_overflow_shards(merged3, all_keyed)
-    probed3 = probe_cuckoo(all_keyed, fixed.select("bucket", "n_keys", "table"))
+    probed3 = probe_cuckoo(all_keyed, fixed.select("bucket", "n_keys", "table"), strategy="broadcast")
     assert probed3.filter(~F.col("maybe_seen")).count() == 0
     merged2.unpersist(); merged3.unpersist()

@@ -12,6 +12,11 @@ def _mk(spark, rows):
     return df.withColumn("url_hash", F.xxhash64("url"))
 
 
+def _anti_join(cand, seen):
+    """The exact oracle: candidate rows whose (job_id, url_hash) is not seen."""
+    return cand.join(seen.select("job_id", "url_hash"), ["job_id", "url_hash"], "left_anti")
+
+
 def test_fresh_equals_naive_anti_join(spark):
     seen_rows = [("j1", f"http://h/{i}") for i in range(500)] + [
         ("j2", f"http://h/{i}") for i in range(0, 500, 2)
@@ -22,8 +27,8 @@ def test_fresh_equals_naive_anti_join(spark):
     seen = _mk(spark, seen_rows)
     cand = _mk(spark, cand_rows)
 
-    bloom_fresh = filter_fresh(cand, seen, num_buckets=8, use_bloom=True)
-    naive_fresh = filter_fresh(cand, seen, num_buckets=8, use_bloom=False)
+    bloom_fresh = filter_fresh(cand, seen, num_buckets=8, strategy="broadcast")
+    naive_fresh = _anti_join(cand, seen)
 
     a = {(r.job_id, r.url) for r in bloom_fresh.collect()}
     b = {(r.job_id, r.url) for r in naive_fresh.collect()}
@@ -39,7 +44,7 @@ def test_bloom_no_false_negatives(spark):
     keyed = with_dedup_key(seen, num_buckets=4)
     shards = build_bloom_shards(keyed)
     # probing the seen set against itself must yield zero fresh rows
-    fresh = filter_fresh(seen, seen, num_buckets=4, use_bloom=True)
+    fresh = filter_fresh(seen, seen, num_buckets=4, strategy="broadcast")
     assert fresh.count() == 0
     # shard sizing: each bucket produced one row
     assert shards.count() == 4
@@ -49,7 +54,7 @@ def test_job_scoping(spark):
     """Same url in another job is NOT seen (per-job uniqueKey, Base.ts:420)."""
     seen = _mk(spark, [("j1", "http://h/x")])
     cand = _mk(spark, [("j2", "http://h/x"), ("j1", "http://h/x")])
-    fresh = {(r.job_id, r.url) for r in filter_fresh(cand, seen, 4).collect()}
+    fresh = {(r.job_id, r.url) for r in filter_fresh(cand, seen, 4, strategy="broadcast").collect()}
     assert fresh == {("j2", "http://h/x")}
 
 
@@ -88,12 +93,19 @@ def test_incremental_merge_semantic_equality(spark):
         [("j", f"http://h/1/{i}") for i in range(150, 400)]
         + [("j", f"http://new/{i}") for i in range(300)],
     )
-    a = {r.url for r in filter_fresh(cand, seen, num_buckets, shards=shards).collect()}
-    b = {r.url for r in filter_fresh(cand, seen, num_buckets, use_bloom=False).collect()}
+    a = {
+        r.url
+        for r in filter_fresh(
+            cand, seen, num_buckets, strategy="broadcast", shards=shards
+        ).collect()
+    }
+    b = {r.url for r in _anti_join(cand, seen).collect()}
     assert a == b
     # bounded false-positive rate on never-seen keys (scalable-bloom gens)
     probe = _mk(spark, [("j", f"http://unseen/{i}") for i in range(4000)])
-    n_fresh = filter_fresh(probe, seen, num_buckets, shards=shards).count()
+    n_fresh = filter_fresh(
+        probe, seen, num_buckets, strategy="broadcast", shards=shards
+    ).count()
     fp_rate = 1.0 - n_fresh / 4000
     assert fp_rate <= 0.05, fp_rate
 
@@ -123,54 +135,45 @@ def test_generation_fpp_tightening():
     """Scalable-bloom growth must tighten per-generation density: generation
     g is sized at 10 + 2g bits/key (Almeida 2007 geometric fpp bound) and
     each new generation's CAPACITY doubles the previous one's."""
-    import pandas as pd
+    import numpy as np
 
     from anycrawl_spark.operators.seen import (
-        GEN_GROWTH, _gen_bits_per_key, _merge_shard_kernel,
+        GEN_GROWTH, _gen_bits_per_key, merge_bucket,
     )
 
-    shard = pd.DataFrame(columns=["bucket", "gen", "n_keys", "bloom"])
+    gens = {}  # gen -> (n_keys, bloom) of one bucket
     h = 0
     for _ in range(30):  # enough rounds to force several generations
-        fresh = pd.DataFrame(
-            {"bucket": [1] * 400, "dedup_hash": list(range(h, h + 400))}
-        )
+        keys = np.arange(h, h + 400, dtype=np.int64)
         h += 400
-        out = _merge_shard_kernel(fresh, shard)
-        shard = out[["bucket", "gen", "n_keys", "bloom"]]
-    gens = shard.sort_values("gen")
+        g, n, bloom = merge_bucket([(g, *gens[g]) for g in sorted(gens)], keys)
+        gens[g] = (n, bloom)
     assert len(gens) >= 3, "expected multiple generations"
     caps = []
-    for r in gens.itertuples(index=False):
-        m_bits = len(r.bloom) * 8
-        caps.append(m_bits // _gen_bits_per_key(int(r.gen)))
+    for g in sorted(gens):
+        n_keys, bloom = gens[g]
+        m_bits = len(bloom) * 8
+        caps.append(m_bits // _gen_bits_per_key(g))
         # frozen (non-newest) generations were filled to their design load,
         # so observed bits/key >= the generation's tightened target
-        if int(r.gen) < int(gens["gen"].max()):
-            assert m_bits / int(r.n_keys) >= _gen_bits_per_key(int(r.gen)) * 0.99
+        if g < max(gens):
+            assert m_bits / n_keys >= _gen_bits_per_key(g) * 0.99
     for prev, nxt in zip(caps, caps[1:]):
         assert nxt >= prev * GEN_GROWTH * 0.99
 
 
-def test_driver_merge_matches_spark_merge(spark):
-    """ShardBroadcast.merge (the crawl's driver-resident state) and
-    merge_bloom_shards give identical (bucket, gen, n_keys, bloom) rows from
-    the same state and keys — new buckets, in-place merges and generation
-    rollovers alike — whatever order the keys arrive in."""
+def _merge_both_ways(spark, num_buckets, batches):
+    """Merge keyed batches round by round with ShardBroadcast.merge and with
+    merge_bloom_shards; assert identical updated and full-state rows each
+    round (the driver gets its keys reversed); return the final rows."""
     import numpy as np
 
     from anycrawl_spark.operators.seen import ShardBroadcast, merge_bloom_shards
 
-    num_buckets = 4
     driver = ShardBroadcast(spark)
     state = None
     try:
-        # ~10 keys per bucket open generation 0 (1024 bits, capacity 102);
-        # 20 more merge in place; 400 more overflow it into generation 1
-        for rnd, n in enumerate((40, 20, 400, 30)):
-            keyed = with_dedup_key(
-                _mk(spark, [("j", f"http://h/{rnd}/{i}") for i in range(n)]), num_buckets
-            )
+        for rnd, keyed in enumerate(batches):
             merged = merge_bloom_shards(state, keyed).localCheckpoint()
             keys = np.array([r.dedup_hash for r in keyed.collect()], dtype=np.int64)
             updated = driver.merge(keys[::-1].copy(), num_buckets)
@@ -182,10 +185,92 @@ def test_driver_merge_matches_spark_merge(spark):
             assert driver.rows() == sorted(
                 (r.bucket, r.gen, r.n_keys, bytes(r.bloom)) for r in state.collect()
             ), rnd
-        assert {g for _, g, _, _ in driver.rows()} == {0, 1}
         assert driver.nbytes == sum(len(blob) for *_, blob in driver.rows())
+        return driver.rows()
     finally:
         driver.close()
+
+
+def test_driver_merge_matches_spark_merge(spark):
+    """ShardBroadcast.merge (the crawl's driver-resident state) and
+    merge_bloom_shards give identical (bucket, gen, n_keys, bloom) rows from
+    the same state and keys — new buckets, in-place merges and generation
+    rollovers alike, at 4 and at 4096 buckets — whatever order the keys
+    arrive in."""
+    import numpy as np
+
+    # ~10 keys per bucket open generation 0 (1024 bits, capacity 102);
+    # 20 more merge in place; 400 more overflow it into generation 1
+    rows = _merge_both_ways(spark, 4, [
+        with_dedup_key(
+            _mk(spark, [("j", f"http://h/{rnd}/{i}") for i in range(n)]), 4
+        )
+        for rnd, n in enumerate((40, 20, 400, 30))
+    ])
+    assert {g for _, g, _, _ in rows} == {0, 1}
+
+    # 4096 buckets: every bucket opens generation 0, then merges in place;
+    # 300 keys of bucket 7 roll it over into generation 1
+    rng = np.random.default_rng(5)
+
+    def keyed(hashes):
+        return spark.createDataFrame(pd.DataFrame({"dedup_hash": hashes})).withColumn(
+            "bucket", F.pmod("dedup_hash", F.lit(4096)).cast("int")
+        )
+
+    rows = _merge_both_ways(spark, 4096, [
+        keyed(rng.integers(-(2**62), 2**62, 40_000, dtype=np.int64)),
+        keyed(rng.integers(-(2**62), 2**62, 8_000, dtype=np.int64)),
+        keyed(7 + 4096 * rng.integers(-(2**40), 2**40, 300, dtype=np.int64)),
+        keyed(rng.integers(-(2**62), 2**62, 50, dtype=np.int64)),
+    ])
+    assert len({b for b, *_ in rows}) == 4096
+    assert {(b, g) for b, g, _, _ in rows if g > 0} == {(7, 1)}
+
+
+def test_long_bucket_state_merges_like_int_state(spark):
+    """A shard state whose ``bucket`` is LongType (rows built from pandas
+    without SHARD_SCHEMA) merges to the same rows as the IntegerType state
+    when the merge's cogroup spans several shuffle partitions: the long
+    bucket must not hash to other partitions than the fresh keys' int one
+    and open a duplicate generation 0."""
+    from anycrawl_spark.operators.seen import SHARD_SCHEMA, merge_bloom_shards
+
+    num_buckets = 8
+    base = with_dedup_key(
+        _mk(spark, [("j", f"http://h/{i}") for i in range(400)]), num_buckets
+    )
+    state_rows = [
+        (r.bucket, r.gen, r.n_keys, bytes(r.bloom))
+        for r in merge_bloom_shards(None, base).collect()
+    ]
+    int_state = spark.createDataFrame(state_rows, SHARD_SCHEMA)
+    long_state = spark.createDataFrame(
+        pd.DataFrame(state_rows, columns=SHARD_SCHEMA.fieldNames())
+    )
+    assert dict(long_state.dtypes)["bucket"] == "bigint"
+    fresh = with_dedup_key(
+        _mk(spark, [("j", f"http://x/{i}") for i in range(300)]), num_buckets
+    )
+    dirty = sorted({r.bucket for r in fresh.select("bucket").collect()})
+    confs = {"spark.sql.shuffle.partitions": "4", "spark.sql.adaptive.enabled": "false"}
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        for dirty_buckets in (None, dirty):
+            want, got = (
+                sorted(
+                    (r.bucket, r.gen, r.n_keys, bytes(r.bloom), r.updated)
+                    for r in merge_bloom_shards(state, fresh, dirty_buckets).collect()
+                )
+                for state in (int_state, long_state)
+            )
+            assert got == want, dirty_buckets
+            assert len(want) == len(state_rows)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_driver_merge_without_keys_keeps_broadcast(spark):
