@@ -19,9 +19,10 @@ vectorized predicate (SURVEY §2.2, §4.2):
   matched vectorized; reference: Base.ts:339-379).
 
 Robots, scope and path filters run as one fused pandas UDF per candidate
-batch (``make_candidate_gate``). All job-level metadata (limits, strategies, compiled patterns) rides inside
-UDF closures / literal maps — the jobs dim is tiny vs the frontier (a
-broadcast join in spirit; reference analog J3).
+batch (``make_candidate_gate``). All job-level metadata (limits,
+strategies, compiled patterns) rides inside UDF closures / literal maps —
+the jobs dim is tiny vs the frontier (a broadcast join in spirit;
+reference analog J3).
 """
 
 from __future__ import annotations
@@ -408,4 +409,3 @@ def make_candidate_gate(
         return pd.DataFrame({"url": urls, "host": hosts, "keep": keeps})
 
     return gate.asNondeterministic()
-

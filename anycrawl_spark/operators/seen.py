@@ -271,7 +271,7 @@ def merge_shards(
     """Merge one round's keyed ``ops`` into the shard state: each dirty
     bucket's ops cogroup with its rows through ``merge_group``, which returns
     that bucket's ``schema`` rows; clean buckets pass through with the
-    schema's extra flag columns False.
+    schema's boolean flag columns False.
 
     Dirty/clean split: buckets with no ops this round pass through without
     their blobs ever crossing the Arrow boundary — late-crawl rounds touch
@@ -293,7 +293,8 @@ def merge_shards(
         dirty = shards.join(op_buckets, "bucket", "semi")
         clean = shards.join(op_buckets, "bucket", "anti")
     clean = clean.select(
-        *[c if c in shards.columns else F.lit(False).alias(c) for c in schema.fieldNames()]
+        *[F.lit(False).alias(f.name) if isinstance(f.dataType, T.BooleanType) else f.name
+          for f in schema]
     )
     merged_dirty = (
         ops.groupBy("bucket")

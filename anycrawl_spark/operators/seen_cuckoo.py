@@ -181,16 +181,16 @@ def _probe_blob(hashes: np.ndarray, blob: bytes) -> np.ndarray:
     return _probe_table(np.frombuffer(blob, dtype=np.uint16), hashes)
 
 
+def _table_row(bucket: int, hashes: np.ndarray, nb: int | None = None) -> dict:
+    """One bucket's CUCKOO_SHARD_SCHEMA columns, its table built from the set
+    of ``hashes``."""
+    hashes = np.unique(hashes)
+    tbl, _ = _build_table(hashes, nb)
+    return {"bucket": [bucket], "n_keys": [len(hashes)], "table": [tbl.tobytes()]}
+
+
 def _build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-    hashes = np.unique(pdf["dedup_hash"].to_numpy())
-    tbl, _ = _build_table(hashes)
-    return pd.DataFrame(
-        {
-            "bucket": [int(pdf["bucket"].iloc[0])],
-            "n_keys": [len(hashes)],
-            "table": [tbl.tobytes()],
-        }
-    )
+    return pd.DataFrame(_table_row(int(pdf["bucket"].iloc[0]), pdf["dedup_hash"].to_numpy()))
 
 
 def build_cuckoo_shards(seen_keyed: DataFrame) -> DataFrame:
@@ -212,21 +212,15 @@ def _merge_kernel(ops: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
     # the cogroup's shard side is semi-joined to op buckets, so every group
     # carries at least one op row — ops is never empty here
     bucket = int(ops["bucket"].iloc[0])
-    if shard.empty:
-        ins = np.unique(ops.loc[ops["op"] > 0, "dedup_hash"].to_numpy())
-        tbl, _ = _build_table(ins)
-        return pd.DataFrame(
-            {"bucket": [bucket], "n_keys": [len(ins)], "table": [tbl.tobytes()],
-             "updated": [True], "overflow": [False]}
-        )
-    orig = shard["table"].iloc[0]
-    n_keys = int(shard["n_keys"].iloc[0])
-    tbl = np.frombuffer(orig, dtype=np.uint16).copy()
-    nb = len(tbl) // SLOTS
     # set semantics: one stored copy per key, one delete per key (duplicated
     # rows in a round's batch must not insert multiple fingerprint copies)
-    dels = np.unique(ops.loc[ops["op"] < 0, "dedup_hash"].to_numpy())
     ins = np.unique(ops.loc[ops["op"] > 0, "dedup_hash"].to_numpy())
+    if shard.empty:
+        return pd.DataFrame({**_table_row(bucket, ins), "updated": [True], "overflow": [False]})
+    n_keys = int(shard["n_keys"].iloc[0])
+    tbl = np.frombuffer(shard["table"].iloc[0], dtype=np.uint16).copy()
+    nb = len(tbl) // SLOTS
+    dels = np.unique(ops.loc[ops["op"] < 0, "dedup_hash"].to_numpy())
     fps, i1s, i2s = _fp_i1_i2(dels, nb)
     for j in range(len(dels)):  # deletes first: they free slots for inserts
         if _delete_one(tbl, int(fps[j]), int(i1s[j]), int(i2s[j])):
@@ -234,10 +228,7 @@ def _merge_kernel(ops: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
     fps, i1s, i2s = _fp_i1_i2(ins, nb)
     for j in range(len(ins)):
         if not _insert_one(tbl, nb, int(fps[j]), int(i1s[j]), int(i2s[j])):
-            return pd.DataFrame(
-                {"bucket": [bucket], "n_keys": [int(shard["n_keys"].iloc[0])],
-                 "table": [orig], "updated": [False], "overflow": [True]}
-            )
+            return shard[CUCKOO_SHARD_SCHEMA.fieldNames()].assign(updated=False, overflow=True)
     return pd.DataFrame(
         {"bucket": [bucket], "n_keys": [n_keys + len(ins)], "table": [tbl.tobytes()],
          "updated": [True], "overflow": [False]}
@@ -269,14 +260,10 @@ def merge_cuckoo_shards(
 
 
 def _rebuild_shard(keys: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
-    hashes = np.unique(keys["dedup_hash"].to_numpy())
     nb_old = (len(shard["table"].iloc[0]) // 2 // SLOTS) if not shard.empty else None
-    tbl, _ = _build_table(hashes, nb=nb_old * 2 if nb_old else None)
     bucket = int(keys["bucket"].iloc[0]) if len(keys) else int(shard["bucket"].iloc[0])
-    return pd.DataFrame(
-        {"bucket": [bucket], "n_keys": [len(hashes)], "table": [tbl.tobytes()],
-         "updated": [True], "overflow": [False]}
-    )
+    row = _table_row(bucket, keys["dedup_hash"].to_numpy(), nb_old * 2 if nb_old else None)
+    return pd.DataFrame({**row, "updated": [True], "overflow": [False]})
 
 
 def rebuild_overflow_shards(merged: DataFrame, seen_keyed: DataFrame) -> DataFrame:
@@ -293,7 +280,7 @@ def rebuild_overflow_shards(merged: DataFrame, seen_keyed: DataFrame) -> DataFra
         .join(F.broadcast(over), "bucket", "semi")
         .groupBy("bucket")
         .cogroup(merged.filter(F.col("overflow")).groupBy("bucket"))
-        .applyInPandas(lambda k, s: _rebuild_shard(k, s), schema=MERGED_CUCKOO_SCHEMA)
+        .applyInPandas(_rebuild_shard, schema=MERGED_CUCKOO_SCHEMA)
     )
     return ok.unionByName(rebuilt)
 
